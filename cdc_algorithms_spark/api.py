@@ -786,10 +786,11 @@ def media_dup_groups(media: DataFrame) -> DataFrame:
 
 
 def release_probe_frames() -> int:
-    """Unpersist every batch-scoped frame the near-dup probe family has
+    """Unpersist every batch-scoped frame the near-dup probe family and
+    the chunk scans of :func:`chunk_files` / :func:`chunk_blob` have
     persisted and clear the registry; returns the count released. Call
-    after the consuming action of each :func:`probe_near_dup_index`
-    batch (earlier just forces recomputation)."""
+    after the consuming action of each batch (earlier just forces
+    recomputation)."""
     from cdc_algorithms_spark.operators.dedup_docs import release_cached_frames
 
     return release_cached_frames()

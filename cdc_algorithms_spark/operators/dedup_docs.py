@@ -27,7 +27,8 @@ Everything is Catalyst expressions — no Python UDFs anywhere.
 
 Caching note: several operators ``persist()`` a frame that feeds two or
 more branches of the RETURNED plan (shingle sets, banded minhashes,
-fingerprints). They cannot unpersist it themselves — the caller hasn't
+fingerprints; ``distributed.chunk_segments`` registers its scan output
+here too). They cannot unpersist it themselves — the caller hasn't
 executed the plan yet — so each persist is registered in a module cache
 registry and :func:`release_cached_frames` is the scoped reclaim handle:
 call it between pipelines (after the consuming action) in a long-lived

@@ -233,20 +233,21 @@ def chunk_segments(
     :func:`cdc_algorithms_spark.sources.segmented_files.segment_file_ranges`
     (executor-side range reads of files, the no-whole-blob 100 TB path).
 
-    ``ordinals`` controls the per-blob ``chunk_idx`` column:
+    ``ordinals`` controls how the per-blob ``chunk_idx`` column is
+    computed; in both modes it is pruned from the plan when the consumer
+    never reads it (dedup stats, concat checks):
 
     * ``"bucketed"`` (default) — two-phase prefix count; every window
-      partition is bounded, correct at any blob size, at the price of
-      one metadata-row shuffle that Catalyst cannot prune away.
-    * ``"none"`` — omit ``chunk_idx`` entirely; the right choice for
-      aggregate-only consumers (dedup stats, concat checks) where the
-      ordinal machinery would be dead weight in the plan.
-    * ``"window"`` — single ``row_number`` window per blob; prunable
-      when unused, but puts all of a blob's chunk rows in one task —
-      only for small-blob corpora.
+      partition is bounded, correct at any blob size. The bucket bases
+      join back with a LEFT join on unique keys, so Catalyst's
+      outer-join elimination drops the whole sub-DAG when
+      ``chunk_idx`` is unused.
+    * ``"window"`` — single ``row_number`` window per blob; puts all of
+      a blob's chunk rows in one task — only for small-blob corpora and
+      as the reference for the bucketed ordinals.
     """
-    if ordinals not in ("bucketed", "none", "window"):
-        raise ValueError(f"ordinals must be bucketed|none|window, got {ordinals!r}")
+    if ordinals not in ("bucketed", "window"):
+        raise ValueError(f"ordinals must be bucketed|window, got {ordinals!r}")
     if algo not in _BOUND_FNS:
         raise ValueError(f"unknown CDC algo {algo!r}; one of {sorted(_BOUND_FNS)}")
     params = make_params(algo, expected_size, seed, window_size=window_size)
@@ -396,11 +397,14 @@ def chunk_segments(
 
     from pyspark.storagelevel import StorageLevel
 
+    from cdc_algorithms_spark.operators.dedup_docs import _CACHED_FRAMES
+
     scanned = segments.mapInPandas(
         scan,
         "src_id long, kind int, a long, b long, blob_len long, "
         "hash long, piece binary",
     ).persist(StorageLevel.MEMORY_AND_DISK)
+    _CACHED_FRAMES.append(scanned)  # the returned plan reads it: release later
     # Materialize EAGERLY: three subtrees (done rows, seam cuts, pieces)
     # read this, and concurrent query stages that find a partition
     # uncached recompute the whole scan redundantly.
@@ -507,8 +511,6 @@ def chunk_segments(
         "length",
         "hash",
     ]
-    if ordinals == "none":
-        return merged.select(*base_cols)
     if ordinals == "window":
         idx_w = Window.partitionBy("src_id").orderBy("offset")
         return merged.withColumn(
@@ -527,6 +529,9 @@ def chunk_segments(
     #      (O(blob_len / W) rows per blob);
     #   3. row_number within each bounded (blob, bucket) partition plus
     #      the bucket's base.
+    # LEFT join: ``bases`` has one row per (src_id, __bkt) of ``merged``,
+    # so rows equal the inner join's, but Catalyst can drop it (and the
+    # whole ordinal sub-DAG) when chunk_idx is unused.
     bucket_w = expected_size * 1024  # ~1024 chunks per window partition
     merged = merged.withColumn("__bkt", F.floor(F.col("offset") / bucket_w))
     prior_buckets = (
@@ -547,7 +552,7 @@ def chunk_segments(
     )
     in_bucket = Window.partitionBy("src_id", "__bkt").orderBy("offset")
     return (
-        merged.join(bases, ["src_id", "__bkt"])
+        merged.join(bases, ["src_id", "__bkt"], "left")
         .withColumn("chunk_idx", F.col("__base") + F.row_number().over(in_bucket) - 1)
         .select(*base_cols[:2], F.col("chunk_idx").cast("long"), *base_cols[2:])
     )

@@ -338,7 +338,7 @@ def documents_blob(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_parallel_ae_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = parallel_chunk_blob(
         documents_blob(spark, sf_dir), "ae", 320,
-        segment_len=PARALLEL_SEGMENT_LEN, ordinals="none",
+        segment_len=PARALLEL_SEGMENT_LEN,
     )
     return dedup_stats(chunks, key_col="hash")
 
@@ -350,7 +350,7 @@ def q_parallel_ae_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_parallel_ae_concat_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = parallel_chunk_blob(
         documents_blob(spark, sf_dir), "ae", 320,
-        segment_len=PARALLEL_SEGMENT_LEN, ordinals="none",
+        segment_len=PARALLEL_SEGMENT_LEN,
     )
     return chunks.agg(F.sum("length").cast("long").alias("total_len"))
 
@@ -369,7 +369,7 @@ def q_parallel_ae_tiling_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes cancel in the concat check."""
     chunks = parallel_chunk_blob(
         documents_blob(spark, sf_dir), "ae", 320,
-        segment_len=PARALLEL_SEGMENT_LEN, ordinals="none",
+        segment_len=PARALLEL_SEGMENT_LEN,
     )
     return _tiling_check(chunks, per_src=False)
 
@@ -387,7 +387,7 @@ def q_parallel_rabin_tiling_check(spark: SparkSession, sf_dir: str) -> DataFrame
     reassemble an exact partition of the whole blob."""
     chunks = parallel_chunk_blob(
         documents_blob(spark, sf_dir), "rabin", 256, seed=7,
-        segment_len=PARALLEL_SEGMENT_LEN, ordinals="none",
+        segment_len=PARALLEL_SEGMENT_LEN,
     )
     return _tiling_check(chunks, per_src=False)
 
@@ -396,7 +396,7 @@ def q_parallel_rabin_tiling_check(spark: SparkSession, sf_dir: str) -> DataFrame
 def q_parallel_rabin_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = parallel_chunk_blob(
         documents_blob(spark, sf_dir), "rabin", 256, seed=7,
-        segment_len=PARALLEL_SEGMENT_LEN, ordinals="none",
+        segment_len=PARALLEL_SEGMENT_LEN,
     )
     return dedup_stats(chunks, key_col="hash")
 
@@ -413,7 +413,7 @@ def q_parallel_rabin_concat_check(spark: SparkSession, sf_dir: str) -> DataFrame
     corpus size — mirrors ``parallel_ae_concat_check``."""
     chunks = parallel_chunk_blob(
         documents_blob(spark, sf_dir), "rabin", 256, seed=7,
-        segment_len=PARALLEL_SEGMENT_LEN, ordinals="none",
+        segment_len=PARALLEL_SEGMENT_LEN,
     )
     return chunks.agg(F.sum("length").cast("long").alias("total_len"))
 
@@ -434,7 +434,7 @@ def q_binaryfile_ae_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = load_binary_files(spark, sf_dir, "*.parquet").select(
         F.xxhash64("path").alias("src_id"), F.col("content")
     )
-    chunks = parallel_chunk_blob(files, "ae", 4096, segment_len=262144, ordinals="none")
+    chunks = parallel_chunk_blob(files, "ae", 4096, segment_len=262144)
     return dedup_stats(chunks, key_col="hash")
 
 
@@ -450,17 +450,15 @@ def q_file_ranges_ae_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     segs = segment_file_ranges(
         spark, f"{sf_dir}/*.parquet", segment_len=262144, overlap=4096 - 256
     )
-    return dedup_stats(
-        chunk_segments(segs, "ae", 4096, ordinals="none"), key_col="hash"
-    )
+    return dedup_stats(chunk_segments(segs, "ae", 4096), key_col="hash")
 
 
 @register("datasource_ae_dedup_stats")
 def q_datasource_ae_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same pipeline and params as file_ranges_ae_dedup_stats but sourced
     through the custom Python DataSource (sources/datasource.py,
-    ``format("file_segments")``): the source plans partitions natively,
-    so no repartition shuffle precedes the chunk scan, and the default
+    ``format("file_segments")``): the source plans its partitions
+    natively instead of slicing a driver-side listing, and the default
     lazy contract means segment bytes are still born in the chunking
     worker (no payload Arrow hops). Segments here are small (256 KiB)
     relative to task overhead, so they are grouped into
@@ -477,9 +475,7 @@ def q_datasource_ae_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         overlap=4096 - 256,
         num_partitions=spark.sparkContext.defaultParallelism,
     )
-    return dedup_stats(
-        chunk_segments(segs, "ae", 4096, ordinals="none"), key_col="hash"
-    )
+    return dedup_stats(chunk_segments(segs, "ae", 4096), key_col="hash")
 
 
 # ---------------------------------------------------------------------------
@@ -654,9 +650,7 @@ def q_synthetic_blob_ae_node_stats(spark: SparkSession, sf_dir: str) -> DataFram
         overlap=SYNTH_EXPECTED - 256,
         seed=11,
     )
-    return dedup_stats(
-        chunk_segments(segs, "ae", SYNTH_EXPECTED, ordinals="none"), key_col="hash"
-    )
+    return dedup_stats(chunk_segments(segs, "ae", SYNTH_EXPECTED), key_col="hash")
 
 
 # ---------------------------------------------------------------------------

@@ -97,11 +97,11 @@ def get_spark(
         # reader rejects; read as long (ns since epoch) and convert on load
         # (sources/registry.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # local mode: driver JVM hosts all 32 executor threads; binary
+        # local mode: the driver JVM hosts every executor thread; binary
         # payload pipelines (segment tables, shuffle buffers) GC-thrash
-        # at 8g (measured +30% on payload-heavy bench queries). The box
-        # has 128 GiB; on a real cluster this maps to executor memory.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        # at 8g on 32 cores (measured +30% on payload-heavy bench
+        # queries). On a real cluster this maps to executor memory.
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
     )
     if daemon_ok:
@@ -115,6 +115,18 @@ def get_spark(
             os.environ["PYTHONPATH"],
         )
     return builder.getOrCreate()
+
+
+def _driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY``, else ``min(24g, physical RAM / 2)`` — a
+    larger heap on a small host gets the JVM OOM-killed by the kernel."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):  # no sysconf: keep 24g
+        return "24g"
+    return f"{min(24 << 10, ram // 2 >> 20)}m"
 
 
 def _daemon_module_available(pkg_root: str) -> bool:

@@ -10,8 +10,8 @@ engine-level source contract instead of a ``mapInPandas`` adapter:
 * ``partitions()`` — one ``InputPartition`` per (file, segment), so
   Spark's scheduler sees the true split granularity and fans segments of
   one big file across the cluster with no ``repartition`` shuffle at all
-  (the mapInPandas route needs one to break up the driver-built meta
-  rows).
+  (the mapInPandas route gets its spread from slicing the driver-built
+  meta rows into ``defaultParallelism`` partitions).
 * ``read(partition)`` — runs in the executor; ``open``/``seek``/``read``
   locally, an object store's range-GET in production.
 

@@ -57,17 +57,25 @@ def expand_data_files(path_glob: str) -> list[str]:
     return out
 
 
-def list_file_ranges(
+def segment_file_ranges(
     spark: SparkSession,
     path_glob: str,
     segment_len: int,
     overlap: int,
 ) -> DataFrame:
-    """Driver-side metadata listing → one row per (file, segment range).
+    """Driver-side metadata listing → a LAZY segment table, one row per
+    (file, segment range): the rows carry ``path`` instead of
+    ``payload``, and the consumer's scan task (``chunk_segments``) opens
+    the file and reads its own ``[scan_start, right)`` slice in the same
+    task that chunks it. Only paths/offsets leave the driver — bytes
+    never do, and they never cross the JVM↔Python Arrow boundary an
+    extra time. Deterministic ``src_id`` = xxhash64 of the path
+    (computed in Spark for engine consistency with other sources).
 
-    Only paths/offsets leave the driver — bytes never do. Deterministic
-    ``src_id`` = xxhash64 of the path (computed in Spark for engine
-    consistency with other sources).
+    No shuffle: ``createDataFrame`` over the listing already cuts it
+    into ``defaultParallelism`` contiguous slices with equal segment
+    counts, so one file's ranges fan out across tasks — the same spread
+    the ``file_segments`` DataSource plans natively.
     """
     if segment_len <= 0 or overlap < 0:
         raise ValueError(f"bad segment_len={segment_len} overlap={overlap}")
@@ -81,33 +89,10 @@ def list_file_ranges(
     )
     return meta.select(
         F.xxhash64("path").alias("src_id"),
-        "path",
         "seg_idx",
         "left",
         "right",
         "blob_len",
         F.greatest(F.col("left") - overlap, F.lit(0)).alias("scan_start"),
-    )
-
-
-def segment_file_ranges(
-    spark: SparkSession,
-    path_glob: str,
-    segment_len: int,
-    overlap: int,
-) -> DataFrame:
-    """Executor-side range reads → a LAZY segment table: the rows carry
-    ``path`` instead of ``payload``, and the consumer's scan task
-    (``chunk_segments``) opens the file and reads its own
-    ``[scan_start, right)`` slice in the same task that chunks it.
-
-    Two scale effects vs materializing payloads here: the
-    ``repartition`` that fans one file's ranges across the cluster
-    shuffles only metadata (paths + offsets, not corpus bytes), and the
-    bytes never cross the JVM↔Python Arrow boundary an extra time —
-    they are born in the Python worker that consumes them.
-    """
-    meta = list_file_ranges(spark, path_glob, segment_len, overlap)
-    return meta.repartition("src_id", "seg_idx").select(
-        "src_id", "seg_idx", "left", "right", "blob_len", "scan_start", "path"
+        "path",
     )

@@ -127,7 +127,7 @@ def test_segment_sources_expand_directory_datasets(spark, tmp_path):
 
     def stats(glob):
         segs = segment_file_ranges(spark, glob, segment_len=65536, overlap=4096)
-        return chunk_segments(segs, "ae", 4096, ordinals="none")
+        return chunk_segments(segs, "ae", 4096)
 
     via_dir = dedup_stats(stats(str(tmp_path / "*.parquet")), key_col="hash")
     via_file = dedup_stats(stats(str(inner)), key_col="hash")
@@ -153,10 +153,10 @@ def test_python_datasource_lazy_equals_materialized(spark):
     assert "payload" in mat.columns
 
     a = dedup_stats(
-        chunk_segments(lazy, "ae", 4096, ordinals="none"), key_col="hash"
+        chunk_segments(lazy, "ae", 4096), key_col="hash"
     ).collect()
     b = dedup_stats(
-        chunk_segments(mat, "ae", 4096, ordinals="none"), key_col="hash"
+        chunk_segments(mat, "ae", 4096), key_col="hash"
     ).collect()
     assert len(a) == len(b) == 1
     assert a[0].asDict() == b[0].asDict()
@@ -170,6 +170,55 @@ def test_python_datasource_lazy_equals_materialized(spark):
     )
     assert grouped.rdd.getNumPartitions() == min(4, n_segs)
     c = dedup_stats(
-        chunk_segments(grouped, "ae", 4096, ordinals="none"), key_col="hash"
+        chunk_segments(grouped, "ae", 4096), key_col="hash"
     ).collect()
     assert c[0].asDict() == a[0].asDict()
+
+
+def test_file_ranges_segment_table_needs_no_shuffle(spark):
+    """The driver-built segment table is spread over tasks by slicing,
+    not by a shuffle: no Exchange, min(n_segments, defaultParallelism)
+    non-empty partitions holding equal segment counts (±1), and every
+    (src_id, seg_idx) exactly once."""
+    import os
+
+    from cdc_algorithms_spark import plans as P
+    from cdc_algorithms_spark.sources.segmented_files import segment_file_ranges
+
+    dp = spark.sparkContext.defaultParallelism
+    for name, seg_len in (("lineitem", 8192), ("orders", 16384)):
+        path = f"{SF_DIR}/{name}.parquet"
+        n_segs = -(-os.path.getsize(path) // seg_len)
+        segs = segment_file_ranges(spark, path, segment_len=seg_len, overlap=256)
+        assert P.exchange_count(segs) == 0
+        per_part = [
+            r["n"]
+            for r in segs.groupBy(F.spark_partition_id().alias("p"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        ]
+        assert len(per_part) == min(n_segs, dp)
+        assert max(per_part) - min(per_part) <= 1
+        keys = [(r["src_id"], r["seg_idx"]) for r in segs.collect()]
+        assert len(keys) == len(set(keys)) == n_segs
+
+
+def test_chunk_files_scan_cache_is_released(spark):
+    """chunk_files persists its scan output for the returned plan; the
+    scoped release handle must reclaim it — repeated chunk → stats →
+    release cycles leave no persisted RDD behind, without clearCache()."""
+    from cdc_algorithms_spark import api
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    api.release_probe_frames()
+    before = persisted()
+    for _ in range(3):
+        chunks = api.chunk_files(
+            spark, f"{SF_DIR}/orders.parquet", "ae", 4096, segment_len=16384
+        )
+        assert persisted() - before  # the eager scan cache
+        assert api.dedup_stats(chunks, key_col="hash").collect()[0]["total_bytes"] > 0
+        assert api.release_probe_frames() >= 1
+        assert persisted() == before

@@ -208,13 +208,17 @@ def test_ramp_blob_cuts_cross_check(spark):
         assert len(set(seq_cuts) - set(dist_ends)) <= n_seams
 
 
-def test_ordinal_modes_agree_and_none_omits(spark, blob, blob_df):
+def test_ordinal_modes_agree_and_unused_ordinals_pruned(spark, blob, blob_df):
     """chunk_idx from the scalable two-phase prefix count ('bucketed',
     default) must equal the per-blob window ordinal exactly — blob
     length here spans multiple ordinal buckets (bucket width =
     expected_size·1024 = 320 KiB at expected 320, segment 16 KiB), so
-    the cross-bucket base offsets are actually exercised. 'none' must
-    omit the column (the aggregate-only fast path)."""
+    the cross-bucket base offsets are actually exercised. When
+    chunk_idx is not selected, the bucketed ordinal sub-DAG must be
+    pruned (its bases join back with a left join on unique keys) and
+    the row count must not change."""
+    from cdc_algorithms_spark import plans as P
+
     kwargs = dict(algo="ae", expected_size=320, segment_len=16384)
     bucketed = parallel_chunk_blob(blob_df, ordinals="bucketed", **kwargs)
     windowed = parallel_chunk_blob(blob_df, ordinals="window", **kwargs)
@@ -222,19 +226,33 @@ def test_ordinal_modes_agree_and_none_omits(spark, blob, blob_df):
     w = {r["offset"]: r["chunk_idx"] for r in windowed.collect()}
     assert b == w and sorted(b.values()) == list(range(len(b)))
 
-    none = parallel_chunk_blob(blob_df, ordinals="none", **kwargs)
-    assert "chunk_idx" not in none.columns
-    assert none.count() == len(b)
+    unused = bucketed.select("src_id", "offset", "length", "hash")
+    assert unused.count() == len(b)
+    assert not P.window_partition_columns(unused)
+    # only the Phase-C piece-reassembly join remains
+    assert P.broadcast_join_count(unused) + P.sort_merge_join_count(unused) == 1
 
 
 def test_stats_route_plan_has_no_ordinal_machinery(spark):
-    """The dedup-stats queries opt out of chunk_idx (ordinals='none'):
-    their plans must carry no ordinal join/window — only the Phase-C
-    piece-reassembly join and the dedup aggregates."""
+    """Dedup stats never read chunk_idx, so neither the registered
+    stats queries nor the public chunk_files → dedup_stats path may
+    carry the ordinal join/window: only the Phase-C piece-reassembly
+    join and the dedup aggregates."""
+    from cdc_algorithms_spark import api
     from cdc_algorithms_spark import plans as P
     from cdc_algorithms_spark.queries import SPARK_QUERIES
+    from tests.conftest import SF_DIR as sf
 
-    df = SPARK_QUERIES["parallel_ae_dedup_stats"](spark, "/root/testdata/sf0.001")
-    assert not P.window_partition_columns(df)
-    assert P.broadcast_join_count(df) + P.sort_merge_join_count(df) <= 1
-    assert P.exchange_count(df) <= 8
+    for df in (
+        SPARK_QUERIES["parallel_ae_dedup_stats"](spark, sf),
+        api.dedup_stats(
+            api.chunk_files(
+                spark, f"{sf}/*.parquet", "ae", 4096, segment_len=262144
+            ),
+            key_col="hash",
+        ),
+    ):
+        assert not P.window_partition_columns(df)
+        assert P.broadcast_join_count(df) + P.sort_merge_join_count(df) <= 1
+        assert P.exchange_count(df) <= 8
+    api.release_probe_frames()

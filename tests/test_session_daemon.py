@@ -32,6 +32,23 @@ def test_daemon_module_available_false_for_missing_root(tmp_path):
     assert not session_mod._daemon_module_available(str(tmp_path))
 
 
+def test_default_driver_memory_is_half_of_ram_capped_at_24g(monkeypatch):
+    """The default heap must fit the host: half of physical RAM, never
+    more than 24g (a 24g heap on a 15 GB host gets the JVM OOM-killed);
+    ``SPARK_DRIVER_MEMORY`` still overrides it."""
+    def fake_sysconf(ram_gib):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": (ram_gib << 30) // 4096}
+        return lambda name: pages[name]
+
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.setattr(session_mod.os, "sysconf", fake_sysconf(15))
+    assert session_mod._driver_memory() == f"{15 << 9}m"
+    monkeypatch.setattr(session_mod.os, "sysconf", fake_sysconf(128))
+    assert session_mod._driver_memory() == f"{24 << 10}m"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert session_mod._driver_memory() == "3g"
+
+
 def test_get_spark_builds_without_daemon_module(monkeypatch, spark):
     """With the package root 'renamed' (guard returns False) the factory
     must still return a working session — degraded to the stock daemon,
