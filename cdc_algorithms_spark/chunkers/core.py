@@ -5,13 +5,17 @@ the reference's sequential ``next_chunk`` state machines (NOT ports of
 its buffered-IO plumbing — Spark hands the UDF whole values, so the
 4096-byte staging buffer and carry-over logic disappear; SURVEY.md §3 E2).
 
-All functions return the list of **inclusive end offsets** of each chunk;
-the last offset is always ``len(data) - 1`` (the reference flushes the
-remainder as a final chunk on EOF). Chunk ``k`` spans
+All functions return the list of **inclusive end offsets** of each chunk.
+With ``final=True`` (the default) the last offset is always
+``len(data) - 1`` (the reference flushes the remainder as a final chunk
+on EOF); ``final=False`` returns only the genuine content-defined cuts,
+the segment-scan semantics of ``fast.*_bounds``. Chunk ``k`` spans
 ``(cuts[k-1]+1 .. cuts[k])``.
 
-The accelerated versions in :mod:`cdc_algorithms_spark.chunkers.fast`
-are property-tested to agree with these exactly.
+The compiled kernels behind :mod:`cdc_algorithms_spark.chunkers.fast`
+are property-tested to agree with these exactly for both ``final``
+values, and these loops are what ``fast`` runs when no C compiler is
+available.
 """
 
 from __future__ import annotations
@@ -32,7 +36,7 @@ def fixed_cuts(n: int, chunk_size: int) -> list[int]:
     return cuts
 
 
-def ae_cuts_py(data: bytes, p: AeParams) -> list[int]:
+def ae_cuts_py(data: bytes, p: AeParams, final: bool = True) -> list[int]:
     """AE — asymmetric extremum (ae.rs:95-149, paper cited ae.rs:14).
 
     Per chunk: track the running max byte (strict increases move
@@ -58,12 +62,14 @@ def ae_cuts_py(data: bytes, p: AeParams) -> list[int]:
             break  # EOF: remainder is the final chunk
         cuts.append(cut)
         s = cut + 1
-    if n > 0 and (not cuts or cuts[-1] != n - 1):
+    if final and n > 0 and (not cuts or cuts[-1] != n - 1):
         cuts.append(n - 1)
     return cuts
 
 
-def rabin_cuts_py(data: bytes, p: RabinParams) -> list[int]:
+def rabin_cuts_py(
+    data: bytes, p: RabinParams, final: bool = True
+) -> list[int]:
     """Rabin rolling fingerprint mod 2^32 (rabin.rs:131-216).
 
     Per chunk: ``h = h·α + byte``; once ``local_pos >= window_size`` the
@@ -100,12 +106,14 @@ def rabin_cuts_py(data: bytes, p: RabinParams) -> list[int]:
             break
         cuts.append(cut)
         s = cut + 1
-    if n > 0 and (not cuts or cuts[-1] != n - 1):
+    if final and n > 0 and (not cuts or cuts[-1] != n - 1):
         cuts.append(n - 1)
     return cuts
 
 
-def fastcdc_cuts_py(data: bytes, p: FastCdcParams) -> list[int]:
+def fastcdc_cuts_py(
+    data: bytes, p: FastCdcParams, final: bool = True
+) -> list[int]:
     """FastCDC with normalized chunking (fastcdc.rs:77-134, paper at :5).
 
     Per chunk: Gear hash ``h = (h << 1) + gear[byte]`` accumulates only
@@ -134,6 +142,6 @@ def fastcdc_cuts_py(data: bytes, p: FastCdcParams) -> list[int]:
             break
         cuts.append(cut)
         s = cut + 1
-    if n > 0 and (not cuts or cuts[-1] != n - 1):
+    if final and n > 0 and (not cuts or cuts[-1] != n - 1):
         cuts.append(n - 1)
     return cuts

@@ -1,457 +1,56 @@
-"""Numpy-accelerated chunk-boundary computation.
+"""Chunk-boundary entry points: the compiled scan kernel, reference fallback.
 
-Same semantics as :mod:`cdc_algorithms_spark.chunkers.core` (property-
-tested to agree byte-for-byte), but the per-byte state machines are
-restated as vectorized precomputations plus sparse candidate scans:
+Every function runs the compiled scan in :mod:`.native` and, when no C
+compiler is available (``native`` logs one warning per process), the
+byte loops in :mod:`.core` — the executable specification the kernels
+are property-tested against, byte for byte and for both cut variants:
 
-* **AE** — the cut rule "running max unchanged for window_size bytes"
-  becomes: vectorized running-max increase positions, cut at the first
-  increase followed by a gap > window_size. Scanned in geometrically
-  growing blocks so cost stays O(n) even though AE has no max clamp.
-* **Rabin** — the windowed polynomial hash at position i is a pure
-  function of the last ``window_size`` bytes (independent of chunk
-  start), so the full fingerprint array F is computed once, vectorized,
-  and chunking reduces to jumping between sparse positions where
-  ``(F ^ seed) & mask == 0``.
-* **FastCDC** — the Gear hash ``h = (h<<1) + gear[b]`` sheds a byte's
-  influence after 64 shifts, so for positions ≥ min_size+63 past a chunk
-  start the hash equals a 64-term sliding dot product H, vectorized once;
-  only the 63-byte warm-up region after each chunk start needs exact
-  per-byte evaluation.
-
-This is the single-machine analogue of the scale story: on Spark the
-same arrays are computed per Arrow batch inside the UDF, so throughput
-is bounded by numpy, not the Python interpreter.
+* ``*_cuts`` — all cuts, closed by the final ``len(data) - 1`` boundary
+  (the reference flushes the remainder as a chunk on EOF).
+* ``*_bounds`` — genuine content-defined cuts only, the per-segment body
+  of the distributed chunker (role of the reference's ``get_bounds``,
+  ae.rs:31-53, rabin.rs:61-90; the reference has no FastCDC parallel
+  path, so ``fastcdc_bounds`` extends the same scheme). Rabin keeps
+  next_chunk's min/max clamps rather than get_bounds' ``last_pos = i - 1``
+  off-by-one (rabin.rs:80) and missing max-size force cut.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from cdc_algorithms_spark.chunkers import core, native
 from cdc_algorithms_spark.chunkers.params import AeParams, FastCdcParams, RabinParams
 
-_M32 = np.uint64(0xFFFFFFFF)
-_U64_ONE = np.uint64(1)
 
-
-def _as_array(data) -> np.ndarray:
+def _scan(native_fn, ref_fn, data, p, final: bool) -> list[int]:
     if isinstance(data, np.ndarray):
-        return data.astype(np.uint8, copy=False)
-    return np.frombuffer(data, dtype=np.uint8)
-
-
-# ---------------------------------------------------------------------------
-# AE
-# ---------------------------------------------------------------------------
+        arr = data.astype(np.uint8, copy=False)
+    else:
+        arr = np.frombuffer(data, dtype=np.uint8)
+    cuts = native_fn(arr, p, final)
+    return cuts if cuts is not None else ref_fn(arr.tobytes(), p, final)
 
 
 def ae_cuts(data, p: AeParams) -> list[int]:
-    """AE cuts (semantics of ae.rs:95-149) via running-max gap analysis."""
-    return _ae_scan(data, p, final=True)
+    return _scan(native.ae_scan_native, core.ae_cuts_py, data, p, True)
 
 
 def ae_bounds(data, p: AeParams) -> list[int]:
-    """Segment-scan variant: genuine window cuts only, no forced final
-    boundary — the per-partition body of the distributed chunker
-    (role of ``AeChunker::get_bounds``, ae.rs:31-53)."""
-    return _ae_scan(data, p, final=False)
-
-
-def _ae_scan(data, p: AeParams, final: bool) -> list[int]:
-    arr = _as_array(data)
-    n = arr.size
-    if n == 0:
-        return []
-    from cdc_algorithms_spark.chunkers.native import ae_scan_native
-
-    native = ae_scan_native(arr, p, final)
-    if native is not None:
-        return native
-    return _ae_scan_numpy(arr, p, final)
-
-
-def _ae_scan_numpy(arr: np.ndarray, p: AeParams, final: bool) -> list[int]:
-    n = arr.size
-    if n == 0:
-        return []
-    w = p.window_size
-    cuts: list[int] = []
-    s = 0
-    # The cut typically lands just past one window (records go quiet
-    # quickly), so the first scan block barely exceeds w — scanning 4·w
-    # up front was ~4× wasted bytes per chunk (measured 2.4× slower).
-    # Blocks still grow geometrically for adversarial monotone inputs.
-    block = max(w + (w >> 2) + 64, 1024)
-    while s < n:
-        cut = _ae_find_cut(arr, s, n, w, block)
-        if cut < 0:
-            break
-        cuts.append(cut)
-        s = cut + 1
-    if final and (not cuts or cuts[-1] != n - 1):
-        cuts.append(n - 1)
-    return cuts
-
-
-def _ae_find_cut(arr: np.ndarray, s: int, n: int, w: int, block: int) -> int:
-    """First AE cut at/after chunk start s, or -1 if the chunk runs to EOF."""
-    carry_max = 0  # initial max_val = 0 (ae.rs:103)
-    last_inc = s  # max_pos starts at local 0 (ae.rs:102)
-    lo = s
-    while lo < n:
-        hi = min(n, lo + block)
-        seg = arr[lo:hi]
-        acc = np.maximum.accumulate(seg)
-        eff = np.maximum(acc, np.uint8(min(carry_max, 255)))
-        prev = np.empty_like(eff)
-        prev[0] = min(carry_max, 255)
-        prev[1:] = eff[:-1]
-        inc = np.flatnonzero(eff > prev) + lo  # strict running-max increases
-        # candidate cut: an increase (or the carried max_pos) followed by a
-        # window_size gap with no further increase
-        points = np.concatenate(([last_inc], inc))
-        nxt = np.concatenate((points[1:], [np.iinfo(np.int64).max]))
-        ok = (points + w < nxt) & (points + w < hi)
-        hits = np.flatnonzero(ok)
-        if hits.size:
-            return int(points[hits[0]] + w)
-        if inc.size:
-            last_inc = int(inc[-1])
-        carry_max = max(carry_max, int(eff[-1]))
-        lo = hi
-        block *= 2
-    return -1
-
-
-# ---------------------------------------------------------------------------
-# Rabin
-# ---------------------------------------------------------------------------
-
-
-_RABIN_BLOCK = 1 << 15  # 32 Ki elements → scratch stays L2-resident
-                        # (same finding as _GEAR_BLOCK below: the old
-                        # 256 Ki "fits in L2/L3" blocks measured 84 MB/s
-                        # vs 95 at 32 Ki on random 64 MiB)
-
-
-def _rabin_hit_candidates(arr: np.ndarray, p: RabinParams) -> np.ndarray:
-    """Sorted positions i (i ≥ window_size) where the windowed Rabin
-    fingerprint satisfies the cut predicate ``(F ^ seed) & mask == 0``.
-
-    F[i] = P[i] − α^w·P[i−w] mod 2^32 with P[i] = α^i·Σ b_j α^(−j)
-    (arithmetic mod 2^64; low 32 bits exact because 2^32 | 2^64),
-    evaluated BLOCKWISE with preallocated scratch and a rolling w-tail
-    of P — no n-sized arrays at all. The whole-array formulation paid a
-    fresh 8n-byte allocation + page-fault sweep per operation (measured
-    ~5 MB/s at 64 MiB); this form touches O(block) memory per pass and
-    only materializes the (sparse) candidate positions.
-    """
-    n = arr.size
-    w = p.window_size
-    mod = 1 << 32
-    inv_alpha = pow(p.alpha, -1, mod)
-    B = max(min(_RABIN_BLOCK, n), min(2 * w, n))
-
-    pw_t = np.full(B, np.uint64(p.alpha), dtype=np.uint64)
-    pw_t[0] = 1
-    np.cumprod(pw_t, out=pw_t)  # α^t
-    pwi_t = np.full(B, np.uint64(inv_alpha), dtype=np.uint64)
-    pwi_t[0] = 1
-    np.cumprod(pwi_t, out=pwi_t)  # α^(−t)
-    p_blk = np.empty(B, dtype=np.uint64)
-    shifted = np.empty(B, dtype=np.uint64)
-    hist = np.empty(w, dtype=np.uint64)  # P over the last w positions
-    aw = np.uint64(pow(p.alpha, w, mod))
-    seed64 = np.uint64(p.seed)
-    mask64 = np.uint64(p.mask)
-
-    hits: list[np.ndarray] = []
-    carry = np.uint64(0)  # Σ_{j<lo} b_j α^(−j)
-    for lo in range(0, n, B):
-        hi = min(lo + B, n)
-        m = hi - lo
-        blk = p_blk[:m]
-        np.multiply(arr[lo:hi].astype(np.uint64), pwi_t[:m], out=blk)
-        if lo:
-            blk *= np.uint64(pow(inv_alpha, lo, 1 << 64))
-        np.add(blk[:1], carry, out=blk[:1])
-        np.cumsum(blk, out=blk)
-        carry = blk[-1]
-        np.multiply(blk, pw_t[:m], out=blk)
-        if lo:
-            blk *= np.uint64(pow(p.alpha, lo, 1 << 64))
-        blk &= _M32  # P[lo..hi)
-
-        # F[i] needs P[i-w]: first min(w, m) positions draw from hist
-        sh = shifted[:m]
-        k = min(w, m)
-        if lo == 0:
-            # no fingerprint before position w: placeholder values,
-            # filtered below via idx >= w
-            sh[:k] = blk[:k]
-        else:
-            # hist[j] = P[lo-w+j], so position lo+t reads hist[t]
-            sh[:k] = hist[:k]
-        if m > w:
-            sh[w:] = blk[: m - w]
-        f = sh
-        np.multiply(sh, aw, out=f)
-        np.subtract(blk, f, out=f)
-        f &= _M32
-        f ^= seed64
-        f &= mask64
-        idx = np.flatnonzero(f == 0)
-        if lo == 0:
-            idx = idx[idx >= w]
-        if idx.size:
-            hits.append(idx + lo)
-
-        # roll P history
-        if m >= w:
-            hist[:] = blk[m - w :]
-        else:
-            hist[:-m] = hist[m:]
-            hist[-m:] = blk
-    if not hits:
-        return np.empty(0, dtype=np.int64)
-    return np.concatenate(hits)
+    return _scan(native.ae_scan_native, core.ae_cuts_py, data, p, False)
 
 
 def rabin_cuts(data, p: RabinParams) -> list[int]:
-    """Rabin cuts (semantics of rabin.rs:131-216) via sparse candidates.
-
-    Within a chunk starting at s, the reference's hash at local position
-    l >= window_size equals F[s+l] (the window never spans the chunk
-    start because pops begin only once l >= window_size), so every
-    possible hash-cut position is precomputed; the force-cut at
-    ``local == max_size`` (chunk of max_size+1 bytes, rabin.rs:157)
-    is applied while jumping.
-    """
-    return _rabin_scan(data, p, final=True)
+    return _scan(native.rabin_scan_native, core.rabin_cuts_py, data, p, True)
 
 
 def rabin_bounds(data, p: RabinParams) -> list[int]:
-    """Segment-scan variant (role of ``RabinChunker::get_bounds``,
-    rabin.rs:61-90) — genuine cuts only, no forced final boundary.
-
-    Deliberate divergences from the reference's get_bounds, which is
-    internally inconsistent with its own sequential chunker: we keep
-    next_chunk's min/max clamps and chunk-relative bookkeeping instead
-    of get_bounds' ``last_pos = i - 1`` off-by-one (rabin.rs:80) and
-    missing max-size force cut; and we do not replicate the
-    segment-bound bug at rabin.rs:101 (right bound fixed at len/T).
-    """
-    return _rabin_scan(data, p, final=False)
-
-
-def _rabin_scan(data, p: RabinParams, final: bool) -> list[int]:
-    arr = _as_array(data)
-    n = arr.size
-    if n == 0:
-        return []
-    from cdc_algorithms_spark.chunkers.native import rabin_scan_native
-
-    native = rabin_scan_native(arr, p, final)
-    if native is not None:
-        return native
-    return _rabin_scan_numpy(arr, p, final)
-
-
-def _rabin_scan_numpy(arr: np.ndarray, p: RabinParams, final: bool) -> list[int]:
-    n = arr.size
-    if n == 0:
-        return []
-    cand = _rabin_hit_candidates(arr, p)
-
-    cuts: list[int] = []
-    s = 0
-    while s < n:
-        # a hash cut needs local >= min_size AND local >= window_size
-        # (core's cut check is nested inside the popped-window branch);
-        # min_size alone would also accept candidates whose fingerprint
-        # window spans bytes before the chunk start. Factory params have
-        # min = window + 1, so this only matters for hand-built params.
-        lo = s + max(p.min_size, p.window_size)
-        hi_hash = min(s + p.max_size - 1, n - 1)  # last position a hash cut can win
-        i = np.searchsorted(cand, lo)
-        cut = -1
-        if i < cand.size and cand[i] <= hi_hash:
-            cut = int(cand[i])
-        elif s + p.max_size <= n - 1:
-            cut = s + p.max_size  # force cut (before-hash check, rabin.rs:157)
-        if cut < 0:
-            break
-        cuts.append(cut)
-        s = cut + 1
-    if final and (not cuts or cuts[-1] != n - 1):
-        cuts.append(n - 1)
-    return cuts
-
-
-# ---------------------------------------------------------------------------
-# FastCDC
-# ---------------------------------------------------------------------------
-
-
-# 32 Ki elements → two 256 KB ping-pong buffers, small enough that all
-# six doubling passes stay L2-resident. Measured on random 64 MiB
-# (expected=16 KiB): 1<<18 (the old "cache-resident" 2 MB buffers —
-# actually L2-evicting) 38 MB/s; 1<<15 122 MB/s; smaller blocks lose to
-# per-block Python overhead (1<<12 → 75 MB/s).
-_GEAR_BLOCK = 1 << 15
-
-
-def _gear_hit_candidates(
-    arr: np.ndarray, gear_np: np.ndarray, p: FastCdcParams
-) -> tuple[np.ndarray, np.ndarray]:
-    """Sorted positions where the full 64-term sliding Gear hash
-    satisfies the short / long mask (two sorted arrays).
-
-    H[i] = Σ_{k=0..63} gear[b[i-k]] << k mod 2^64 — mod-2^64 wraparound
-    sheds terms with k ≥ 64, so the sliding hash IS this dot product.
-    Two key reductions vs the naive 64-pass form (measured 5 MB/s at
-    64 MiB):
-
-    * **doubling** — A_0 = g, A_{t+1}[i] = A_t[i] + (A_t[i−2^t] << 2^t)
-      reaches the full 64-term window in 6 shifted-add passes (the
-      window doubles each pass), an O(log w) evaluation of the sliding
-      polynomial instead of O(w);
-    * **blockwise scratch** — those passes ping-pong between two
-      L2-resident buffers with a 63-element head overlap; no n-sized
-      arrays, only sparse candidate positions persist.
-    """
-    n = arr.size
-    B = min(_GEAR_BLOCK, n)
-    buf_a = np.empty(B + 63, dtype=np.uint64)
-    buf_b = np.empty(B + 63, dtype=np.uint64)
-    s_mask = np.uint64(p.short_mask)
-    l_mask = np.uint64(p.long_mask)
-    short_hits: list[np.ndarray] = []
-    long_hits: list[np.ndarray] = []
-    for lo in range(0, n, B):
-        hi = min(lo + B, n)
-        m = hi - lo
-        head = min(63, lo)  # overlap from previous block (absent at start)
-        L = head + m
-        cur = buf_a[:L]
-        nxt = buf_b[:L]
-        np.take(gear_np, arr[lo - head : hi], out=cur)
-        # Doubling: A_{t+1}[i] = A_t[i] + (A_t[i−2^t] << 2^t) turns the
-        # 64-term window into 6 shifted-add passes (window doubles each
-        # pass; terms beyond the array start simply don't exist, which
-        # matches the per-byte hash's warm-from-zero behavior). Ping-pong
-        # buffers — an in-place a[k:] += a[:-k] would read already-
-        # updated elements.
-        for t in range(6):
-            step = 1 << t
-            if step >= L:
-                break
-            np.left_shift(cur[: L - step], np.uint64(step), out=nxt[step:])
-            nxt[step:] += cur[step:]
-            nxt[:step] = cur[:step]
-            cur, nxt = nxt, cur
-        a = cur[head:]
-        s_idx = np.flatnonzero((a & s_mask) == 0)
-        if s_idx.size:
-            short_hits.append(s_idx + lo)
-        l_idx = np.flatnonzero((a & l_mask) == 0)
-        if l_idx.size:
-            long_hits.append(l_idx + lo)
-    empty = np.empty(0, dtype=np.int64)
-    return (
-        np.concatenate(short_hits) if short_hits else empty,
-        np.concatenate(long_hits) if long_hits else empty,
-    )
+    return _scan(native.rabin_scan_native, core.rabin_cuts_py, data, p, False)
 
 
 def fastcdc_cuts(data, p: FastCdcParams) -> list[int]:
-    """FastCDC cuts (semantics of fastcdc.rs:77-134): exact 63-byte
-    warm-up per chunk, then sparse-candidate jumps on the vectorized
-    sliding Gear hash."""
-    return _fastcdc_scan(data, p, final=True)
+    return _scan(native.fastcdc_scan_native, core.fastcdc_cuts_py, data, p, True)
 
 
 def fastcdc_bounds(data, p: FastCdcParams) -> list[int]:
-    """Segment-scan variant — genuine cuts only, no forced final
-    boundary. The reference has no FastCDC parallel path (only AE and
-    Rabin get get_bounds); this extends the same segment-overlap scheme
-    with ``max_size`` look-back (SURVEY.md §7 'what's hard' #2)."""
-    return _fastcdc_scan(data, p, final=False)
-
-
-def _fastcdc_scan(data, p: FastCdcParams, final: bool) -> list[int]:
-    arr = _as_array(data)
-    n = arr.size
-    if n == 0:
-        return []
-    # compiled rolling-hash path when a system compiler exists (~8× the
-    # numpy scan; bit-identical — golden cuts + property tests pin it);
-    # falls through to the numpy formulation otherwise
-    from cdc_algorithms_spark.chunkers.native import fastcdc_scan_native
-
-    native = fastcdc_scan_native(arr, p, final)
-    if native is not None:
-        return native
-    return _fastcdc_scan_numpy(data, p, final)
-
-
-def _fastcdc_scan_numpy(data, p: FastCdcParams, final: bool) -> list[int]:
-    arr = _as_array(data)
-    n = arr.size
-    if n == 0:
-        return []
-    gear_np = np.array(p.gear, dtype=np.uint64)
-    cand_short, cand_long = _gear_hit_candidates(arr, gear_np, p)
-    gear = p.gear
-    mask64 = (1 << 64) - 1
-
-    cuts: list[int] = []
-    s = 0
-    while s < n:
-        cut = -1
-        # Warm-up: hash has < 64 terms for local in [min_size, min_size+62]
-        h = 0
-        warm_end = min(p.min_size + 63, n - s)
-        for local in range(p.min_size, warm_end):
-            h = ((h << 1) + gear[arr[s + local]]) & mask64
-            if (
-                (local < p.expected_size and (h & p.short_mask) == 0)
-                or (local >= p.expected_size and (h & p.long_mask) == 0)
-                or local >= p.max_size
-            ):
-                cut = s + local
-                break
-        if cut < 0 and s + p.min_size + 63 <= n - 1:
-            a0 = s + p.min_size + 63  # hash == H from here on
-            cut = _fastcdc_jump(cand_short, cand_long, s, a0, n, p)
-        if cut < 0:
-            break
-        cuts.append(cut)
-        s = cut + 1
-    if final and (not cuts or cuts[-1] != n - 1):
-        cuts.append(n - 1)
-    return cuts
-
-
-def _fastcdc_jump(
-    cand_short: np.ndarray,
-    cand_long: np.ndarray,
-    s: int,
-    a0: int,
-    n: int,
-    p: FastCdcParams,
-) -> int:
-    short_hi = min(s + p.expected_size - 1, n - 1)  # short mask: local < expected
-    if a0 <= short_hi:
-        i = np.searchsorted(cand_short, a0)
-        if i < cand_short.size and cand_short[i] <= short_hi:
-            return int(cand_short[i])
-    long_lo = max(a0, s + p.expected_size)
-    long_hi = min(s + p.max_size - 1, n - 1)  # beyond: force cut wins first
-    if long_lo <= long_hi:
-        i = np.searchsorted(cand_long, long_lo)
-        if i < cand_long.size and cand_long[i] <= long_hi:
-            return int(cand_long[i])
-    if s + p.max_size <= n - 1:
-        return s + p.max_size
-    return -1
+    return _scan(native.fastcdc_scan_native, core.fastcdc_cuts_py, data, p, False)

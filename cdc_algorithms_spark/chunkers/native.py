@@ -1,31 +1,27 @@
-"""Optional compiled FastCDC scan kernel (ctypes + system cc).
+"""Compiled chunk-boundary scan kernels (ctypes + system cc).
 
-The pure-numpy FastCDC scan (fast.py: log-doubling candidate pass +
-sparse jumps) runs ~120 MB/s single-thread — the slowest of the three
-kernels, because the 64-term Gear window costs six full-array passes
-however it is blocked. The rolling-hash formulation is ONE
-dependency-chained shift-add per byte, which a C compiler turns into
-~GB/s; this module compiles that 40-line loop at first use, caches the
-shared object per source-hash in the system temp dir, and exposes it
-behind a None-returning probe so callers fall back to the numpy path
-when no compiler exists (or ``CDC_SPARK_NATIVE=0`` disables it).
+The AE, Rabin and FastCDC state machines are sequential per byte, so
+they are restated here as three C loops (throughput floors pinned in
+tests/test_throughput.py). The source lives in this module: it is
+compiled at first use and the shared object is cached per source-hash
+under ``$TMPDIR/cdc_spark_native``. Each ``*_scan_native`` returns
+``None`` when the kernel cannot be built (no compiler, sandboxed temp
+dir, exotic platform); :mod:`.fast` then runs the reference loops in
+:mod:`.core`, and this module logs one warning per process carrying the
+compiler error, since that fallback is a few MB/s.
 
-Cluster posture: the C source lives in this module, so every executor
-host compiles its own cached copy on first import — nothing is shipped,
-no build step exists, heterogeneous nodes each get their own binary.
-Equality with the pure paths is pinned by the golden-cut fixtures and a
-native-vs-numpy property test (tests/test_property_chunkers.py).
-
-Semantics mirror chunkers/core.py::fastcdc_cuts_py exactly
-(fastcdc.rs:77-134): per chunk the Gear hash accumulates once
-``local >= min_size``; cut on the short mask below ``expected_size``,
-the long mask at/above, or unconditionally at ``max_size``.
+Cluster posture: every executor host compiles its own cached copy on
+first import — nothing is shipped, no build step exists, heterogeneous
+nodes each get their own binary. Equality with :mod:`.core` is pinned
+by the golden-cut fixtures and a property test over both ``final``
+values (tests/test_property_chunkers.py).
 """
 
 from __future__ import annotations
 
 import ctypes
 import hashlib
+import logging
 import os
 import subprocess
 import tempfile
@@ -224,8 +220,6 @@ def _load() -> ctypes.CDLL | None:
     if _lib is not None:
         return _lib or None
     _lib = False
-    if os.environ.get("CDC_SPARK_NATIVE", "1") == "0":
-        return None
     try:
         # the tag covers source AND flag preference so a flag change
         # never reuses a stale cached binary
@@ -252,6 +246,7 @@ def _load() -> ctypes.CDLL | None:
                          src_path, "-o", tmp_path],
                         check=True,
                         capture_output=True,
+                        text=True,
                         timeout=60,
                     )
                     break
@@ -282,14 +277,18 @@ def _load() -> ctypes.CDLL | None:
             ctypes.c_int, lp,
         ]
         _lib = lib
-    except Exception:  # no cc / sandboxed tmp / exotic platform → numpy path
-        _lib = False
+    except Exception as exc:  # no cc / sandboxed tmp / exotic platform
+        detail = getattr(exc, "stderr", None) or exc  # cc's own message
+        logging.getLogger(__name__).warning(
+            "compiled chunk kernel unavailable, falling back to the "
+            "reference loops (chunkers/core.py): %s", str(detail).strip()
+        )
     return _lib or None
 
 
 def fastcdc_scan_native(arr: np.ndarray, p, final: bool) -> list[int] | None:
     """Run the compiled scan, or return None when unavailable so the
-    caller falls back to the numpy formulation. ``arr`` is the uint8
+    caller falls back to the reference loop. ``arr`` is the uint8
     view fast.py already builds; the gear table converts once per call
     (256 entries — negligible next to the scan)."""
     lib = _load()

@@ -10,7 +10,7 @@ DataFrame pipeline — the 100 TB shape: no single node ever holds a whole
 blob, only ``segment_len + overlap`` slices.
 
 Phase A — ONE pass over payloads (``mapInPandas``): each segment row
-carries ``payload = blob[left-overlap .. right)``; the numpy scanner
+carries ``payload = blob[left-overlap .. right)``; the compiled scanner
 emits cut positions, trimmed to the segment's owned range ``[left,
 right)`` so every cut is emitted exactly once (the reference instead
 re-emits warm-up cuts and relies on the merge to drop them,

@@ -1,10 +1,12 @@
 """Hypothesis property tests for the chunk-boundary scanners.
 
 The corpus-based tests pin behavior on realistic text; these drive the
-vectorized scanners (chunkers/fast.py) against the reference-faithful
+public scanners (chunkers/fast.py — the compiled kernels, or the
+reference loops when no compiler exists) against the reference-faithful
 byte loops (chunkers/core.py) on adversarial random inputs — repeated
 bytes, short buffers, low-entropy runs — checking exact cut equality
-plus the CDC invariants from SURVEY.md §5: cuts strictly increasing and
+for both the ``*_cuts`` and ``*_bounds`` variants, plus the CDC
+invariants from SURVEY.md §5: cuts strictly increasing and
 ending at the last byte (cuts are inclusive end indices, reference
 style: ae.rs:49-51), chunk sizes clamped to [min, max] for non-final
 chunks where the algorithm defines clamps (fastcdc.rs:68-69,
@@ -19,19 +21,25 @@ hundreds of cases in seconds.
 
 from __future__ import annotations
 
+import logging
+import subprocess
+
+import numpy as np
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from cdc_algorithms_spark.chunkers import core, fast
+from cdc_algorithms_spark.chunkers import core, fast, native
 from cdc_algorithms_spark.chunkers.params import make_params
 
 ALGOS = ["ae", "rabin", "fastcdc"]
 
-_PAIRS = {
-    "ae": (core.ae_cuts_py, fast.ae_cuts),
-    "rabin": (core.rabin_cuts_py, fast.rabin_cuts),
-    "fastcdc": (core.fastcdc_cuts_py, fast.fastcdc_cuts),
+_REF = {algo: getattr(core, f"{algo}_cuts_py") for algo in ALGOS}
+# final=True → fast.*_cuts, final=False → fast.*_bounds
+_FAST = {
+    (algo, final): getattr(fast, f"{algo}_{'cuts' if final else 'bounds'}")
+    for algo in ALGOS
+    for final in (True, False)
 }
 
 payload = st.one_of(
@@ -48,8 +56,8 @@ payload = st.one_of(
 @given(data=payload, expected=st.sampled_from([320, 512, 1024]), seed=st.integers(0, 3))
 def test_fast_equals_core(algo, data, expected, seed):
     p = make_params(algo, expected, seed=seed)
-    ref_fn, fast_fn = _PAIRS[algo]
-    assert fast_fn(data, p) == ref_fn(data, p)
+    for final in (True, False):
+        assert _FAST[algo, final](data, p) == _REF[algo](data, p, final)
 
 
 @pytest.mark.parametrize("algo", ALGOS)
@@ -57,7 +65,7 @@ def test_fast_equals_core(algo, data, expected, seed):
 @given(data=st.binary(min_size=0, max_size=8192), seed=st.integers(0, 3))
 def test_cut_invariants(algo, data, seed):
     p = make_params(algo, 512, seed=seed)
-    cuts = _PAIRS[algo][1](data, p)
+    cuts = _FAST[algo, True](data, p)
     assert cuts == sorted(set(cuts)), "cuts strictly increasing"
     if not data:
         assert cuts == []
@@ -89,7 +97,7 @@ def test_shift_invariance_resync(algo, data, prefix):
     original cuts + len(prefix) — content-defined boundaries resynchronize
     (the defining CDC property; fixed-size chunking fails this)."""
     p = make_params(algo, 320, seed=1)
-    fast_fn = _PAIRS[algo][1]
+    fast_fn = _FAST[algo, True]
     base = {c + len(prefix) for c in fast_fn(data, p)}
     shifted = set(fast_fn(prefix + data, p))
     # all boundaries past the first resynchronized cut must agree;
@@ -107,23 +115,45 @@ def test_shift_invariance_resync(algo, data, prefix):
 @given(data=payload, expected=st.sampled_from([256, 512, 4096, 16384]))
 @settings(max_examples=50, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 def test_native_equals_numpy(algo, data, expected):
-    """The optional compiled scans (chunkers/native.py) and the numpy
-    formulations must produce identical cuts for both the final-cut and
-    bounds variants; skips when no compiler exists (then the numpy path
-    is the only one and the core-equality tests above cover it)."""
-    import numpy as np
-
-    import cdc_algorithms_spark.chunkers.native as native
-
+    """The compiled scans (chunkers/native.py), called directly on a numpy
+    buffer, must produce the reference loops' cuts for both the final-cut
+    and bounds variants, including at expected sizes far above the
+    other property tests; skips when no compiler exists (then the
+    reference loops are the only path and test_fast_equals_core covers
+    them)."""
     if algo == "ae" and expected == 256:
         expected = 512  # AE's reference window formula needs expected > 256
     p = make_params(algo, expected, 1)
     arr = np.frombuffer(data, dtype=np.uint8) if data else np.empty(0, np.uint8)
     native_fn = getattr(native, f"{algo}_scan_native")
-    numpy_fn = getattr(fast, f"_{algo}_scan_numpy")
     for final in (True, False):
         got = native_fn(arr, p, final)
         if got is None:
-            pytest.skip("no system compiler — numpy fallback is the only path")
-        want = numpy_fn(arr, p, final)
-        assert got == want
+            pytest.skip("no system compiler — reference loops are the only path")
+        assert got == _REF[algo](data, p, final)
+
+
+def test_fallback_without_compiler_equals_core(monkeypatch, tmp_path, caplog):
+    """With no cached kernel and a failing compiler, every public scanner
+    falls back to the reference loops, and the failure is logged once
+    per process with the compiler's error — not once per call."""
+
+    def failing_cc(cmd, **_kw):
+        raise subprocess.CalledProcessError(1, cmd, stderr="cc: error: no-cc-here")
+
+    monkeypatch.setattr(native, "_lib", None)
+    monkeypatch.setattr(native.tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.setattr(native.subprocess, "run", failing_cc)
+    rng = np.random.default_rng(7)
+    data = rng.integers(0, 256, 6000, dtype=np.uint8).tobytes() + b"ab" * 1000
+    with caplog.at_level(logging.WARNING, logger=native.__name__):
+        for _ in range(3):
+            for algo in ALGOS:
+                p = make_params(algo, 512, seed=1)
+                for final in (True, False):
+                    cuts = _FAST[algo, final](data, p)
+                    assert cuts and cuts == _REF[algo](data, p, final)
+    assert native._load() is None
+    warnings = [r for r in caplog.records if r.name == native.__name__]
+    assert len(warnings) == 1
+    assert "no-cc-here" in warnings[0].getMessage()

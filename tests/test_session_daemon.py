@@ -55,21 +55,20 @@ def test_get_spark_builds_without_daemon_module(monkeypatch, spark):
     never a failure.
 
     getOrCreate() on the LIVE test session applies the builder's runtime
-    confs to it — get_spark's default shuffle_partitions (core count)
-    differs from conftest's 8, so snapshot and restore it or every test
-    file after this one runs with leaked partitioning (the exact bug:
-    test_sinks' bucketed-join plan pin and test_sketches' estimator
-    stability both failed under the leaked 32)."""
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    confs to it, so build with conftest's exact arguments: then no
+    builder conf differs from the live session's and nothing leaks into
+    later test files (the bug this pins: a default shuffle_partitions of
+    the core count broke test_sinks' bucketed-join plan pin and
+    test_sketches' estimator stability). Only the app name differs, and
+    it is restored."""
     prev_name = spark.conf.get("spark.app.name", "cdc-spark-tests")
     monkeypatch.setattr(
         session_mod, "_daemon_module_available", lambda _root: False
     )
     try:
-        s = session_mod.get_spark("daemon-guard-test")
+        s = session_mod.get_spark("daemon-guard-test", cpus=8, shuffle_partitions=8)
         assert s.range(3).count() == 3
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         spark.conf.set("spark.app.name", prev_name)
 
 
