@@ -713,10 +713,11 @@ def probe_near_dup_index(spark, path: str, batch: DataFrame, **kw) -> DataFrame:
     to the base-only read for a never-extended store).
 
     The probe persists three batch-scoped frames (shingles, ordered
-    sets, candidates) that executors hold until released. A standing
-    pipeline calling this per micro-batch MUST call
-    :func:`release_probe_frames` after materializing each result, or
-    batch-scoped storage accumulates across batches."""
+    sets, candidates; the index sets are joined, never cached) that
+    executors hold until released. A standing pipeline calling this per
+    micro-batch MUST call :func:`release_probe_frames` after
+    materializing each result, or batch-scoped storage accumulates
+    across batches."""
     from cdc_algorithms_spark.operators.dedup_docs import (
         incremental_jaccard_pairs_indexed,
         read_jaccard_index_live,

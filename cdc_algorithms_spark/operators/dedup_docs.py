@@ -261,15 +261,18 @@ def _verify_pairs(sets: DataFrame, candidates: DataFrame, threshold: float) -> D
     against the full shingle sets."""
     sa = sets.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     sb = sets.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
+    joined = candidates.join(sa, "id_a").join(sb, "id_b")
+    return _jaccard_at_least(joined, F.col("id_a"), F.col("id_b"), threshold)
+
+
+def _jaccard_at_least(joined: DataFrame, id_a, id_b, threshold: float) -> DataFrame:
+    """``(id_a, id_b, jaccard)`` over ``joined``'s ``sh_a`` / ``sh_b``
+    shingle arrays, jaccard rounded to 6 places and ≥ threshold."""
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a", "id_b", F.round(inter / union, 6).alias("jaccard")
-        )
-        .where(F.col("jaccard") >= threshold)
+    jaccard = F.round(inter / union, 6).alias("jaccard")
+    return joined.select(id_a.alias("id_a"), id_b.alias("id_b"), jaccard).where(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -797,37 +800,36 @@ def extend_jaccard_index(
             )
             .persist()
         )
-        (
-            batch_sets.select(
-                "doc_id",
-                "sh",
-                "sz",
-                F.pmod(F.col("doc_id"), F.lit(id_buckets)).alias("id_bucket"),
+        try:
+            (
+                batch_sets.withColumn(
+                    "id_bucket", F.pmod(F.col("doc_id"), F.lit(id_buckets))
+                )
+                .repartition("id_bucket")
+                .write.mode("overwrite")
+                .partitionBy("id_bucket")
+                .parquet(f"{path}/sets_delta/epoch_{int(epoch)}")
             )
-            .repartition("id_bucket")
-            .write.mode("overwrite")
-            .partitionBy("id_bucket")
-            .parquet(f"{path}/sets_delta/epoch_{int(epoch)}")
-        )
-        (
-            batch_sets.select(
-                "doc_id",
-                F.explode(
-                    F.expr(f"slice(sh, 1, sz - ceil({threshold} * sz) + 1)")
-                ).alias("shingle"),
+            (
+                batch_sets.select(
+                    "doc_id",
+                    F.explode(
+                        F.expr(f"slice(sh, 1, sz - ceil({threshold} * sz) + 1)")
+                    ).alias("shingle"),
+                )
+                .select(
+                    "doc_id",
+                    "shingle",
+                    _sh_bucket("shingle", sh_buckets).alias("sh_bucket"),
+                )
+                .repartition("sh_bucket")
+                .sortWithinPartitions("shingle")
+                .write.mode("overwrite")
+                .partitionBy("sh_bucket")
+                .parquet(f"{path}/prefix_delta/epoch_{int(epoch)}")
             )
-            .select(
-                "doc_id",
-                "shingle",
-                _sh_bucket("shingle", sh_buckets).alias("sh_bucket"),
-            )
-            .repartition("sh_bucket")
-            .sortWithinPartitions("shingle")
-            .write.mode("overwrite")
-            .partitionBy("sh_bucket")
-            .parquet(f"{path}/prefix_delta/epoch_{int(epoch)}")
-        )
-        batch_sets.unpersist()
+        finally:
+            batch_sets.unpersist()
     finally:
         batch_sh.unpersist()
 
@@ -896,8 +898,9 @@ def incremental_jaccard_pairs_indexed(
     :func:`jaccard_prefix_index` — Jaccard pairs touching the NEW batch
     only, with NO corpus-side aggregate in the probe plan: the batch's
     shingles look up their frozen rank in ``df_index`` (hash join), the
-    batch's prefixes join ``prefix_index`` ∪ their own explode, and
-    verification semi-joins ``sets_index`` down to candidate ids first.
+    batch's prefixes join ``prefix_index`` ∪ their own explode into
+    candidates keyed by the batch doc, and verification inner-joins each
+    to its batch set and the other doc's set (``sets_index`` ∪ batch).
     Work at 100 TB is proportional to the batch plus index lookups.
 
     **Bucket-pruned probe**: when the index frames come from
@@ -1000,33 +1003,28 @@ def incremental_jaccard_pairs_indexed(
     # index rows was tried and REJECTED — it adds a second index pass
     # for nothing the join's own broadcast doesn't already give; the
     # partition-directory pruning above is the one that cuts I/O.
-    all_prefix = prefix_index.unionByName(batch_prefix)
+    # tagged union: a candidate is (id_q = batch doc, id_o = other doc);
+    # a batch-batch pair meets itself twice and is kept once, id_q < id_o;
+    # a replayed batch doc never pairs with its own index row
+    all_prefix = prefix_index.withColumn("in_batch", F.lit(False)).unionByName(
+        batch_prefix.withColumn("in_batch", F.lit(True))
+    )
     a = batch_prefix.alias("a")
     b = all_prefix.alias("b")
-    # persisted: candidates feed four consumers (two id-union sides and
-    # two verify joins) — without it each re-executes the prefix join,
-    # re-scanning the corpus-sized prefix_index per consumer
+    # persisted: read by the id-bucket collect and by verification
     candidates = _persist(
         a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc_id") != F.col("b.doc_id")))
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("id_b"),
-        )
-        .distinct()
-    )
-    cand_ids = (
-        candidates.select(F.col("id_a").alias("doc_id"))
-        .unionByName(candidates.select(F.col("id_b").alias("doc_id")))
+               & F.when(F.col("b.in_batch"), F.col("a.doc_id") < F.col("b.doc_id"))
+               .otherwise(F.col("a.doc_id") != F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("id_q"), F.col("b.doc_id").alias("id_o"))
         .distinct()
     )
     if "id_bucket" in sets_index.columns:
-        # candidates are already persisted (four consumers) — deriving
-        # the ≤ id_buckets candidate-id buckets here is one tiny job
+        # only id_o can be an index doc — one tiny job over the cache
         id_bs = [
             r[0]
-            for r in cand_ids.select(
-                F.pmod(F.col("doc_id"), F.lit(id_buckets)).alias("b")
+            for r in candidates.select(
+                F.pmod(F.col("id_o"), F.lit(id_buckets)).alias("b")
             )
             .distinct()
             .collect()
@@ -1034,17 +1032,16 @@ def incremental_jaccard_pairs_indexed(
         sets_index = sets_index.where(
             F.col("id_bucket").isin(id_bs)
         ).drop("id_bucket")
-    # persisted: _verify_pairs consumes this frame TWICE (the id_a and
-    # id_b sides) and Catalyst shares nothing across join branches — the
-    # unpersisted form re-ran the union + semi-join and re-scanned the
-    # sets_index parquet once per side (guide §2.4). The frame is
-    # candidate-sized (semi-joined), so the cache is tiny.
-    sets = _persist(
-        sets_index.select("doc_id", "sh")
-        .unionByName(batch_sets.select("doc_id", "sh"))
-        .join(cand_ids, "doc_id", "left_semi")
+    # inner joins only: a semi-join into the sets union would be pushed
+    # into every branch (base, each live epoch, batch), a stage apiece
+    sh_q = batch_sets.select(F.col("doc_id").alias("id_q"), F.col("sh").alias("sh_a"))
+    sh_o = sets_index.select(F.col("doc_id").alias("id_o"), F.col("sh").alias("sh_b"))
+    joined = candidates.join(sh_q, "id_q").join(
+        sh_o.unionByName(sh_q.toDF("id_o", "sh_b")), "id_o"
     )
-    return _verify_pairs(sets, candidates, threshold)
+    return _jaccard_at_least(
+        joined, F.least("id_q", "id_o"), F.greatest("id_q", "id_o"), threshold
+    )
 
 
 def minhash_signatures(

@@ -16,11 +16,11 @@ reused/dedup split is batch-boundary-invariant and the converged totals
 equal the batch plan's — the DuckDB oracle for the batch sync_plan
 (global totals form) checks this stream exactly.
 
-Scale posture: the store holds identities (at 100 TB, 8-byte
-``xxhash64`` keys, not payloads) partitioned by hash prefix; the
-per-batch anti-join shuffles only the micro-batch side because the
-store read is pruned to the batch's hash-prefix partitions. Metrics are
-1-row-per-batch writes — no driver-side accumulation.
+Store layout: ``(chunk_text, origin, batch_id)`` rows in unpartitioned
+``seed`` / ``batch_<id>`` directories. Each micro-batch reads every live
+one, unpruned, so the per-batch read grows with the store until
+:func:`compact_epoch_store` folds it. Metrics are 1-row-per-batch
+writes — no driver-side accumulation.
 
 Recovery semantics: foreachBatch is at-least-once — after a failure the
 last uncommitted batch REPLAYS with the same batch_id — so both sinks
@@ -124,17 +124,19 @@ def sync_batch(
             F.lit(0),
         ).cast("long").alias("dedup_new_bytes"),
     )
-    metrics.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(metrics_dir, f"batch_{batch_id}"))
-    classified.where(unseen).select(
-        "chunk_text",
-        F.lit("new").alias("origin"),
-        F.lit(batch_id).cast("long").alias("batch_id"),
-    ).write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch_{batch_id}")
-    )
-    classified.unpersist()
+    try:
+        metrics.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(metrics_dir, f"batch_{batch_id}"))
+        classified.where(unseen).select(
+            "chunk_text",
+            F.lit("new").alias("origin"),
+            F.lit(batch_id).cast("long").alias("batch_id"),
+        ).write.mode("overwrite").parquet(
+            os.path.join(store_dir, f"batch_{batch_id}")
+        )
+    finally:
+        classified.unpersist()
 
 
 def run_incremental_sync(

@@ -257,3 +257,99 @@ def test_adaptive_bucket_counts_recorded_and_resolved(spark, tmp_path):
             spark, path, batch, epoch=2, n=N, threshold=T,
             sh_buckets=meta["sh_buckets"] + 1,
         )
+
+
+def _final_action_jobs(spark, probe, group):
+    """Jobs the probe's final ``collect()`` launches (the bucket
+    collects already ran while the probe was built)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        probe.collect()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_probe_final_action_is_flat_over_live_epochs(spark, tmp_path):
+    """Verification keys every candidate by its batch document and
+    joins the live sets union with inner joins only: the final action
+    launches the same number of jobs with 1 and with 3 extend epochs
+    live, its plan has no semi-join (which Catalyst would push into
+    every union branch), and the probe persists three frames."""
+    from cdc_algorithms_spark.operators import dedup_docs as dd
+
+    seed, ext, batch = _splits(spark)
+    path = str(tmp_path / "jidx")
+    _build(spark, path, seed)
+    jobs = []
+    for epochs in ((1,), (2, 3)):
+        for e in epochs:
+            # ext ids are 2 mod 3, so 2, 5, 8 mod 9 split it in three
+            extend_jaccard_index(
+                spark, path, ext.where(F.col("doc_id") % 9 == 3 * e - 1),
+                epoch=e, n=N, threshold=T,
+            )
+        dd.release_cached_frames()
+        probe = incremental_jaccard_pairs_indexed(
+            read_jaccard_index_live(spark, path), batch, n=N, threshold=T
+        )
+        assert len(dd._CACHED_FRAMES) == 3
+        jobs.append(_final_action_jobs(spark, probe, f"probe_e{epochs[-1]}"))
+        plan = probe._jdf.queryExecution().executedPlan().toString()
+        semi = [line for line in plan.splitlines() if "LeftSemi" in line]
+        assert not semi, f"probe plan semi-joins: {semi[:3]}"
+        dd.release_cached_frames()
+    assert jobs[0] == jobs[1], f"final-action jobs grew with live epochs: {jobs}"
+
+
+def test_batch_internal_pairs_are_reported_once(spark, tmp_path):
+    """A batch holding two identical docs and a verbatim copy of an
+    index doc: every unordered pair comes back exactly once with
+    id_a < id_b — whichever side holds the batch doc, and including
+    the batch-batch pair — and the result equals the one-shot join."""
+    seed, _, rest = _splits(spark)
+    path = str(tmp_path / "jidx")
+    _build(spark, path, seed)
+    src = seed.orderBy(F.col("doc_id").desc()).first()
+    twin = rest.orderBy("doc_id").first()
+    # the copy gets an id BELOW its source, the twins ids above the
+    # corpus: both orientations of (batch doc, other doc) occur
+    batch = spark.createDataFrame(
+        [(3, src.text), (10_000_002, twin.text), (10_000_001, twin.text)],
+        "doc_id long, text string",
+    )
+    got = _probe(spark, path, batch)
+    pairs = [(a, b) for a, b, _ in got]
+    assert all(a < b for a, b in pairs)
+    assert len(pairs) == len(set(pairs))
+    assert {(3, src.doc_id), (10_000_001, 10_000_002)} <= set(pairs)
+    want = sorted(
+        map(
+            tuple,
+            incremental_jaccard_pairs(seed, batch, n=N, threshold=T).collect(),
+        )
+    )
+    assert got == want
+
+
+def test_extend_failed_write_releases_its_caches(spark, tmp_path):
+    """A failed delta write must not leave the batch's persisted
+    shingle or set frames behind — a standing loop would leak one per
+    failed epoch."""
+    import pytest
+
+    seed, ext, _ = _splits(spark)
+    path = str(tmp_path / "jidx")
+    _build(spark, path, seed)
+    # a plain file where the delta directory tree must go
+    with open(f"{path}/prefix_delta", "w") as f:
+        f.write("not a directory")
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    with pytest.raises(Exception):
+        extend_jaccard_index(spark, path, ext, epoch=1, n=N, threshold=T)
+    assert persisted() == before

@@ -1185,3 +1185,32 @@ def test_streaming_corpus_build_equals_batch_and_replays(spark, tmp_path):
     state1 = snapshot()
     process_corpus_batch(spark, replayed, s0, 0, **kw)  # seed replay
     assert snapshot() == state1, "seed-epoch replay changed store state"
+
+
+def test_sync_batch_failed_write_releases_its_cache(spark, tmp_path):
+    """A failed metrics/store write must not leave the classified
+    frame persisted — a standing stream would leak one per failed
+    micro-batch."""
+    import pytest
+
+    from cdc_algorithms_spark.operators.chunking import fixed_chunks
+    from cdc_algorithms_spark.streaming.sync import sync_batch
+
+    docs = load_table(spark, "documents", SF_DIR).limit(10)
+    store_dir = str(tmp_path / "store")
+    fixed_chunks(docs, 64).select("chunk_text").distinct().select(
+        "chunk_text",
+        F.lit("old").alias("origin"),
+        F.lit(-1).cast("long").alias("batch_id"),
+    ).write.parquet(store_dir + "/seed")
+    # a plain file where the metrics directory must go
+    metrics_dir = tmp_path / "metrics"
+    metrics_dir.write_bytes(b"not a directory")
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    with pytest.raises(Exception):
+        sync_batch(spark, fixed_chunks(docs, 32), store_dir, str(metrics_dir), 0)
+    assert persisted() == before
