@@ -46,6 +46,17 @@ import logging
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cdc_algorithms_spark.operators.storeio import (
+    adaptive_buckets,
+    compact_delta_store,
+    epoch_dir,
+    read_json,
+    read_live,
+    resolve_buckets,
+    write_json,
+    write_partitioned,
+)
+
 # --- scoped caching -----------------------------------------------------
 # Frames persisted for the RETURNED (still-lazy) plan are tracked here so
 # long-lived sessions can reclaim their storage between pipelines without
@@ -440,7 +451,8 @@ def jaccard_prefix_index(
 
 # Bucket-count CAPS for the DURABLE (parquet) form of the Jaccard index.
 # Writer and prober must agree; since r12 the write derives the actual
-# counts from the corpus size (see _adaptive_buckets), records them in
+# counts from the corpus size (storeio.adaptive_buckets: ≥64 docs per
+# shingle bucket, ≥256 per id bucket), records them in
 # the store's ``_index_meta.json``, and every extend/probe resolves them
 # from there — so the agreement is structural, not a convention. The
 # shingle bucket is pmod(xxhash64(shingle), SH) — a deterministic
@@ -450,25 +462,6 @@ def jaccard_prefix_index(
 # pruning, same plan shape).
 JACCARD_SH_BUCKETS = 64
 JACCARD_ID_BUCKETS = 16
-
-
-def _adaptive_buckets(
-    n_docs: int,
-    sh_cap: int = JACCARD_SH_BUCKETS,
-    id_cap: int = JACCARD_ID_BUCKETS,
-) -> tuple[int, int]:
-    """Bucket counts sized to the corpus (r12, VERDICT r11 task 6): the
-    fixed 64/16 counts made every write/extend of a TINY corpus pay 64
-    + 16 partition directories of file + commit overhead PER EPOCH —
-    the dominant cost of the streaming loops' sweep walls at fixture
-    sizes — while buying pruning granularity the corpus cannot use (a
-    500-doc store has ~8 docs per shingle bucket). Scale with the data:
-    ≥64 docs per shingle bucket and ≥256 per id bucket, capped at the
-    production counts, floor 1 — at real corpus sizes the caps engage
-    and the layout is exactly the fixed one."""
-    sh = max(1, min(int(sh_cap), n_docs // 64))
-    idb = max(1, min(int(id_cap), n_docs // 256))
-    return sh, idb
 
 # Format marker for the durable Jaccard index (r11 ADVICE): the r11
 # switch to xxhash64 shingles changed the on-disk shingle column from
@@ -480,31 +473,6 @@ def _adaptive_buckets(
 # marker-less legacy stores.
 JACCARD_INDEX_META = "_index_meta.json"
 _JACCARD_FORMAT_VERSION = 2  # v1: string shingles (≤r10); v2: xxhash64 longs
-
-
-def _write_jaccard_index_meta(
-    spark, path: str, shingle_type: str, sh_buckets: int, id_buckets: int
-) -> None:
-    from cdc_algorithms_spark.operators.storeio import write_store_meta
-
-    write_store_meta(
-        spark,
-        path,
-        {
-            "format_version": _JACCARD_FORMAT_VERSION,
-            "shingle_type": shingle_type,
-            "sh_buckets": int(sh_buckets),
-            "id_buckets": int(id_buckets),
-        },
-        name=JACCARD_INDEX_META,
-    )
-
-
-def _read_jaccard_index_meta(spark, path: str) -> dict | None:
-    from cdc_algorithms_spark.operators.storeio import read_store_meta
-
-    # None for legacy stores (pre-marker); dtype checks still apply
-    return read_store_meta(spark, path, name=JACCARD_INDEX_META)
 
 
 def _assert_shingle_type(store_type: str, batch_type: str, context: str) -> None:
@@ -525,43 +493,6 @@ def _assert_shingle_type(store_type: str, batch_type: str, context: str) -> None
 
 def _sh_bucket(col: str | Column, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(col), F.lit(n_buckets))
-
-
-def _resolve_buckets(
-    spark,
-    path: str,
-    sh_buckets: int | None,
-    id_buckets: int | None,
-    context: str,
-) -> tuple[int, int]:
-    """Bucket counts for a DURABLE store verb: the store's own meta when
-    present (the structural writer/prober agreement), else the module
-    caps (marker-less legacy stores — the pre-r12 fixed convention).
-    Explicit caller values that CONTRADICT the meta are the
-    silently-wrong-pruning trap (a probe hashing shingles modulo the
-    wrong count reads the wrong directories and misses pairs) — fail
-    loudly instead."""
-    meta = _read_jaccard_index_meta(spark, path)
-    m_sh = meta.get("sh_buckets") if meta else None
-    m_id = meta.get("id_buckets") if meta else None
-    for given, recorded, name in (
-        (sh_buckets, m_sh, "sh_buckets"),
-        (id_buckets, m_id, "id_buckets"),
-    ):
-        if given is not None and recorded is not None and given != recorded:
-            raise ValueError(
-                f"{context}({path}): {name}={given} contradicts the "
-                f"store's recorded {name}={recorded} — bucket-pruned "
-                "reads would silently miss data. Drop the explicit "
-                "argument (the store meta is authoritative) or rebuild "
-                "the index with the new count."
-            )
-    return (
-        sh_buckets if sh_buckets is not None
-        else (m_sh if m_sh is not None else JACCARD_SH_BUCKETS),
-        id_buckets if id_buckets is not None
-        else (m_id if m_id is not None else JACCARD_ID_BUCKETS),
-    )
 
 
 def write_jaccard_index(
@@ -589,51 +520,50 @@ def write_jaccard_index(
     counts (finer pruning, same plan shape).
 
     ``sh_buckets`` / ``id_buckets`` default to size-adaptive counts
-    (:func:`_adaptive_buckets` over the corpus doc count — ``sets`` is
+    (``storeio.adaptive_buckets`` over the corpus doc count — ``sets`` is
     persisted, so the count is one cheap job) and are recorded in the
     store's ``_index_meta.json``; extends and probes resolve the counts
     from there, so writer/prober agreement is structural.
     """
     df_counts, sets, prefix = index
     if sh_buckets is None or id_buckets is None:
-        a_sh, a_id = _adaptive_buckets(sets.count())
-        sh_buckets = a_sh if sh_buckets is None else sh_buckets
-        id_buckets = a_id if id_buckets is None else id_buckets
-    (
+        n_docs = sets.count()
+        if sh_buckets is None:
+            sh_buckets = adaptive_buckets(n_docs, JACCARD_SH_BUCKETS, 64)
+        if id_buckets is None:
+            id_buckets = adaptive_buckets(n_docs, JACCARD_ID_BUCKETS, 256)
+    write_partitioned(
         df_counts.select(
             "shingle", "df", _sh_bucket("shingle", sh_buckets).alias("sh_bucket")
-        )
-        .repartition("sh_bucket")
-        .write.mode("overwrite")
-        .partitionBy("sh_bucket")
-        .parquet(f"{path}/df")
+        ),
+        f"{path}/df",
+        "sh_bucket",
     )
-    (
+    write_partitioned(
         sets.select(
             "doc_id", "sh", "sz",
             F.pmod(F.col("doc_id"), F.lit(id_buckets)).alias("id_bucket"),
-        )
-        .repartition("id_bucket")
-        .write.mode("overwrite")
-        .partitionBy("id_bucket")
-        .parquet(f"{path}/sets")
+        ),
+        f"{path}/sets",
+        "id_bucket",
     )
-    (
+    write_partitioned(
         prefix.select(
             "doc_id", "shingle", _sh_bucket("shingle", sh_buckets).alias("sh_bucket")
-        )
-        .repartition("sh_bucket")
-        .sortWithinPartitions("shingle")
-        .write.mode("overwrite")
-        .partitionBy("sh_bucket")
-        .parquet(f"{path}/prefix")
+        ),
+        f"{path}/prefix",
+        "sh_bucket",
+        "shingle",
     )
-    _write_jaccard_index_meta(
+    write_json(
         df_counts.sparkSession,
-        path,
-        dict(df_counts.dtypes)["shingle"],
-        sh_buckets,
-        id_buckets,
+        f"{path}/{JACCARD_INDEX_META}",
+        {
+            "format_version": _JACCARD_FORMAT_VERSION,
+            "shingle_type": dict(df_counts.dtypes)["shingle"],
+            "sh_buckets": int(sh_buckets),
+            "id_buckets": int(id_buckets),
+        },
     )
 
 
@@ -667,7 +597,7 @@ def read_jaccard_index(
     out = tuple(
         spark.read.parquet(f"{path}/{name}") for name in ("df", "sets", "prefix")
     )
-    meta = _read_jaccard_index_meta(spark, path)
+    meta = read_json(spark, f"{path}/{JACCARD_INDEX_META}")
     if meta is not None:
         _assert_shingle_type(
             meta["shingle_type"],
@@ -682,33 +612,21 @@ def read_jaccard_index_live(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Load a durable Jaccard index INCLUDING live extend epochs:
     ``sets``/``prefix`` are base ∪ every epoch delta not yet folded per
-    the base's ``_folded_epochs.json`` manifest (storeio machinery — the
+    the base's folded-epochs manifest (``storeio.read_live`` — the
     same liveness rule as the text/PQ/DSIR stores, so a replay of a
     folded epoch is dead, not double-counted). ``df`` is the base alone:
     the frozen total order never has deltas (see
     :func:`extend_jaccard_index`). Partition columns survive the union,
     so the bucket-pruned probe path engages per generation."""
-    from cdc_algorithms_spark.operators.storeio import live_epoch_dirs
-
     df_counts = spark.read.parquet(f"{path}/df")
-    meta = _read_jaccard_index_meta(spark, path)
+    meta = read_json(spark, f"{path}/{JACCARD_INDEX_META}")
     if meta is not None:
         _assert_shingle_type(
             meta["shingle_type"],
             dict(df_counts.dtypes)["shingle"],
             f"read_jaccard_index_live({path})",
         )
-    out = [df_counts]
-    for kind in ("sets", "prefix"):
-        frame = spark.read.parquet(f"{path}/{kind}")
-        for d in live_epoch_dirs(spark, f"{path}/{kind}_delta", f"{path}/{kind}"):
-            # explicit schema: an EMPTY epoch (a batch with no docs still
-            # writes its directory, keeping replay idempotence uniform)
-            # has no files to infer from
-            frame = frame.unionByName(
-                spark.read.schema(frame.schema).parquet(d)
-            )
-        out.append(frame)
+    out = [df_counts] + [read_live(spark, path, k) for k in ("sets", "prefix")]
     return JaccardIndex.of(out, meta)
 
 
@@ -754,8 +672,11 @@ def extend_jaccard_index(
     contract as :func:`jaccard_prefix_index` — must match the store's
     element type.
     """
-    sh_buckets, id_buckets = _resolve_buckets(
-        spark, path, sh_buckets, id_buckets, "extend_jaccard_index"
+    sh_buckets, id_buckets = resolve_buckets(
+        read_json(spark, f"{path}/{JACCARD_INDEX_META}"),
+        f"extend_jaccard_index({path})",
+        sh_buckets=(sh_buckets, JACCARD_SH_BUCKETS),
+        id_buckets=(id_buckets, JACCARD_ID_BUCKETS),
     )
     batch_sh = (
         elements.select(
@@ -801,32 +722,27 @@ def extend_jaccard_index(
             .persist()
         )
         try:
-            (
+            write_partitioned(
                 batch_sets.withColumn(
                     "id_bucket", F.pmod(F.col("doc_id"), F.lit(id_buckets))
-                )
-                .repartition("id_bucket")
-                .write.mode("overwrite")
-                .partitionBy("id_bucket")
-                .parquet(f"{path}/sets_delta/epoch_{int(epoch)}")
+                ),
+                epoch_dir(path, "sets", epoch),
+                "id_bucket",
             )
-            (
+            write_partitioned(
                 batch_sets.select(
                     "doc_id",
                     F.explode(
                         F.expr(f"slice(sh, 1, sz - ceil({threshold} * sz) + 1)")
                     ).alias("shingle"),
-                )
-                .select(
+                ).select(
                     "doc_id",
                     "shingle",
                     _sh_bucket("shingle", sh_buckets).alias("sh_bucket"),
-                )
-                .repartition("sh_bucket")
-                .sortWithinPartitions("shingle")
-                .write.mode("overwrite")
-                .partitionBy("sh_bucket")
-                .parquet(f"{path}/prefix_delta/epoch_{int(epoch)}")
+                ),
+                epoch_dir(path, "prefix", epoch),
+                "sh_bucket",
+                "shingle",
             )
         finally:
             batch_sets.unpersist()
@@ -836,51 +752,19 @@ def extend_jaccard_index(
 
 def compact_jaccard_index(spark, path: str) -> None:
     """Fold extend epochs back into the base store — the Jaccard-index
-    OPTIMIZE (same staged-swap + manifest discipline as
-    compact_text_index): merged ``sets``/``prefix`` are staged with a
-    ``_folded_epochs.json`` naming the epochs they subsume (written
-    BEFORE the install rename), installed by
-    ``storeio.install_staged_store`` (park → install → GC only
-    manifest-folded deltas → rollback on failed install), so a crash at
-    any point leaves an exact, never-double-counting index and an epoch
-    a concurrent extend lands mid-compaction survives as live. ``df`` is
-    untouched — the frozen order is permanent by design."""
-    from cdc_algorithms_spark.operators import storeio
-
-    dirs = {
-        kind: storeio.live_epoch_dirs(
-            spark, f"{path}/{kind}_delta", f"{path}/{kind}"
-        )
-        for kind in ("sets", "prefix")
-    }
-    if not dirs["sets"] and not dirs["prefix"]:
-        for kind in ("sets", "prefix"):
-            storeio.gc_folded_epochs(
-                spark, f"{path}/{kind}_delta", f"{path}/{kind}"
-            )
-        return
-    for kind, part_col in (("sets", "id_bucket"), ("prefix", "sh_bucket")):
-        merged = spark.read.parquet(f"{path}/{kind}")
-        for d in dirs[kind]:
-            # explicit schema: empty epochs have no files to infer from
-            merged = merged.unionByName(
-                spark.read.schema(merged.schema).parquet(d)
-            )
-        writer = merged.repartition(part_col)
-        if kind == "prefix":
-            writer = writer.sortWithinPartitions("shingle")
-        (
-            writer.write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(f"{path}/{kind}_tmp")
-        )
-        storeio.write_folded_epochs(
-            spark,
-            f"{path}/{kind}_tmp",
-            storeio.read_folded_epochs(spark, f"{path}/{kind}")
-            | {d.rsplit("/", 1)[-1] for d in dirs[kind]},
-        )
-    storeio.install_staged_store(spark, path, ["sets", "prefix"])
+    OPTIMIZE: ``sets``/``prefix`` are pure unions of immutable rows,
+    staged and installed by ``storeio.compact_delta_store`` (manifest
+    before install, GC only manifest-folded deltas, rollback on failed
+    install), so a crash at any point leaves an exact,
+    never-double-counting index and an epoch a concurrent extend lands
+    mid-compaction survives as live. ``df`` is untouched — the frozen
+    order is permanent by design."""
+    compact_delta_store(spark, path, {
+        "sets": lambda live, dest: write_partitioned(live, dest, "id_bucket"),
+        "prefix": lambda live, dest: write_partitioned(
+            live, dest, "sh_bucket", "shingle"
+        ),
+    })
 
 
 def incremental_jaccard_pairs_indexed(
@@ -930,21 +814,13 @@ def incremental_jaccard_pairs_indexed(
     df_index, sets_index, prefix_index = index
     # bucket counts: explicit arg > the store meta riding on the index
     # frames (JaccardIndex — how adaptive-bucket stores stay consistent
-    # between writer and prober) > the module caps (legacy stores). An
-    # explicit value contradicting the meta would silently prune the
-    # wrong directories — fail loudly.
-    meta = getattr(index, "meta", None) or {}
-    for given, key in ((sh_buckets, "sh_buckets"), (id_buckets, "id_buckets")):
-        if given is not None and key in meta and given != meta[key]:
-            raise ValueError(
-                f"incremental_jaccard_pairs_indexed: {key}={given} "
-                f"contradicts the store's recorded {key}={meta[key]} — "
-                "bucket-pruned reads would silently miss data."
-            )
-    if sh_buckets is None:
-        sh_buckets = meta.get("sh_buckets", JACCARD_SH_BUCKETS)
-    if id_buckets is None:
-        id_buckets = meta.get("id_buckets", JACCARD_ID_BUCKETS)
+    # between writer and prober) > the module caps (legacy stores)
+    sh_buckets, id_buckets = resolve_buckets(
+        getattr(index, "meta", None),
+        "incremental_jaccard_pairs_indexed",
+        sh_buckets=(sh_buckets, JACCARD_SH_BUCKETS),
+        id_buckets=(id_buckets, JACCARD_ID_BUCKETS),
+    )
     pruned = "sh_bucket" in prefix_index.columns
     batch_sh = (
         elements.select(
@@ -1041,34 +917,6 @@ def incremental_jaccard_pairs_indexed(
     )
     return _jaccard_at_least(
         joined, F.least("id_q", "id_o"), F.greatest("id_q", "id_o"), threshold
-    )
-
-
-def minhash_signatures(
-    docs: DataFrame,
-    n: int = 3,
-    num_hashes: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(doc_id, sig: array<int>) — k minhashes over distinct shingles.
-
-    Hash family: Spark's Murmur3 ``hash(shingle, i)`` — JVM-side, no
-    Python. The signature is a *nested* ``transform`` over a
-    ``sequence(0, k-1)`` rather than k unrolled ``array_min`` columns:
-    unrolling inlines the whole shingle expression k times and the
-    generated Janino code blows past the JIT budget (seconds of compile
-    per plan); the nested loop form stays tiny and the shingle array is
-    materialized once per row first.
-    """
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(F.col("__sh"), lambda s: F.hash(s, i))
-        ),
-    )
-    return _shingle_arrays(docs, n, id_col, text_col).select(
-        "doc_id", sig.alias("sig")
     )
 
 

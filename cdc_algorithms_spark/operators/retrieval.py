@@ -44,6 +44,17 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdc_algorithms_spark.functions.text import words
+from cdc_algorithms_spark.operators.storeio import (
+    STORE_META,
+    adaptive_buckets,
+    compact_delta_store,
+    epoch_dir,
+    read_json,
+    read_live,
+    resolve_buckets,
+    write_json,
+    write_partitioned,
+)
 
 K1 = 1.2
 B = 0.75
@@ -208,38 +219,12 @@ def bm25_topk(
 TEXT_INDEX_BUCKETS = 32  # CAP since r12; actual counts are size-adaptive
 
 
-def _adaptive_text_buckets(
-    n_docs: int, cap: int = TEXT_INDEX_BUCKETS
-) -> int:
-    """Size the posting bucket count to the corpus (r12, same move as
-    the Jaccard/DSIR stores): a tiny corpus paid 32 partition
-    directories of file/commit overhead per write and extend epoch for
-    pruning granularity it cannot use; at real sizes the cap engages
-    and the layout is the fixed one. Raise the cap at 100 TB."""
-    return max(1, min(int(cap), n_docs // 64))
-
-
-def _resolve_text_buckets(
-    spark: SparkSession, path: str, buckets: int | None, context: str
-) -> int:
-    """The store's recorded count (structural writer/prober agreement),
-    else the legacy fixed cap. Probes PRUNE reads modulo this count, so
-    an explicit value contradicting the record would silently read the
-    wrong directories — fail loudly."""
-    from cdc_algorithms_spark.operators.storeio import read_store_meta
-
-    meta = read_store_meta(spark, path)
-    recorded = meta.get("buckets") if meta else None
-    if buckets is not None and recorded is not None and buckets != recorded:
-        raise ValueError(
-            f"{context}({path}): buckets={buckets} contradicts the "
-            f"store's recorded buckets={recorded} — bucket-pruned reads "
-            "would silently miss postings. Drop the explicit argument "
-            "or rebuild the index."
-        )
-    if buckets is not None:
-        return buckets
-    return recorded if recorded is not None else TEXT_INDEX_BUCKETS
+def _sum_meta(meta: DataFrame) -> DataFrame:
+    """One (n, sum_dl) row from the per-generation meta rows."""
+    return meta.agg(
+        F.sum("n").cast("long").alias("n"),
+        F.sum("sum_dl").cast("long").alias("sum_dl"),
+    )
 
 
 def _postings_frame(docs: DataFrame, buckets: int) -> DataFrame:
@@ -259,29 +244,11 @@ def write_text_index(
     store's ``_store_meta.json``; probes and extends resolve it from
     there.
     """
-    from cdc_algorithms_spark.operators.storeio import write_store_meta
-
     if buckets is None:
-        buckets = _adaptive_text_buckets(docs.count())
-    (
-        _postings_frame(docs, buckets)
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path + "/postings")
-    )
+        buckets = adaptive_buckets(docs.count(), TEXT_INDEX_BUCKETS, 64)
+    write_partitioned(_postings_frame(docs, buckets), path + "/postings", "bucket")
     corpus_meta(docs).write.mode("overwrite").parquet(path + "/meta")
-    write_store_meta(docs.sparkSession, path, {"buckets": int(buckets)})
-
-
-def _text_delta_dirs(spark: SparkSession, path: str, kind: str) -> list[str]:
-    """LIVE epoch subdirectories under ``{path}/{kind}_delta``: absent
-    root → []; epochs the base store's ``_folded_epochs.json`` manifest
-    records as already compacted in are skipped (storeio module
-    docstring — the crash-window fix)."""
-    from cdc_algorithms_spark.operators.storeio import live_epoch_dirs
-
-    return live_epoch_dirs(spark, f"{path}/{kind}_delta", f"{path}/{kind}")
+    write_json(docs.sparkSession, f"{path}/{STORE_META}", {"buckets": int(buckets)})
 
 
 def extend_text_index(
@@ -299,70 +266,35 @@ def extend_text_index(
     Cost tracks the batch (one tokenize + one hash exchange over the
     batch alone); probes stay exact across generations because df and
     avgdl are derived at read time (see layout comment). ``buckets``
-    resolves from the store meta (see _resolve_text_buckets)."""
-    buckets = _resolve_text_buckets(spark, path, buckets, "extend_text_index")
-    (
-        _postings_frame(batch_docs, buckets)
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings_delta/epoch_{int(epoch)}")
+    resolves from the store meta (``storeio.resolve_buckets``)."""
+    [buckets] = resolve_buckets(
+        read_json(spark, f"{path}/{STORE_META}"),
+        f"extend_text_index({path})",
+        buckets=(buckets, TEXT_INDEX_BUCKETS),
+    )
+    write_partitioned(
+        _postings_frame(batch_docs, buckets),
+        epoch_dir(path, "postings", epoch),
+        "bucket",
     )
     corpus_meta(batch_docs).write.mode("overwrite").parquet(
-        f"{path}/meta_delta/epoch_{int(epoch)}"
+        epoch_dir(path, "meta", epoch)
     )
 
 
 def compact_text_index(spark: SparkSession, path: str) -> None:
     """Fold epoch deltas back into one base store — the text-index
-    OPTIMIZE (same rename-first swap as compact_pq_index: stage the
-    merged store, park the old base, install, drop deltas last, so a
-    crash at any point leaves a readable index). Postings are immutable
-    rows — the merge is a pure union, no dedup logic.
-
-    Each staged store carries a ``_folded_epochs.json`` manifest listing
-    the epochs it subsumes (written BEFORE the install rename), so the
-    rename atomically retires those deltas from probes' view; the
-    trailing GC deletes ONLY manifest-folded epochs — a crash between
-    install and GC can no longer double-count postings or meta, and an
-    epoch a concurrent extend lands mid-compaction survives as live
-    (install/crash contract: storeio.install_staged_store)."""
-    from cdc_algorithms_spark.operators import storeio
-
-    pdirs = _text_delta_dirs(spark, path, "postings")
-    mdirs = _text_delta_dirs(spark, path, "meta")
-    if not pdirs and not mdirs:
-        # nothing live to fold; reclaim any crash-deferred folded deltas
-        for kind in ("postings", "meta"):
-            storeio.gc_folded_epochs(
-                spark, f"{path}/{kind}_delta", f"{path}/{kind}"
-            )
-        return
-    postings = spark.read.parquet(f"{path}/postings")
-    for d in pdirs:
-        postings = postings.unionByName(spark.read.parquet(d))
-    meta = spark.read.parquet(f"{path}/meta")
-    for d in mdirs:
-        meta = meta.unionByName(spark.read.parquet(d))
-    folded_meta = meta.agg(
-        F.sum("n").cast("long").alias("n"),
-        F.sum("sum_dl").cast("long").alias("sum_dl"),
-    )
-    (
-        postings.repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings_tmp")
-    )
-    folded_meta.write.mode("overwrite").parquet(f"{path}/meta_tmp")
-    for kind, dirs in (("postings", pdirs), ("meta", mdirs)):
-        storeio.write_folded_epochs(
-            spark,
-            f"{path}/{kind}_tmp",
-            storeio.read_folded_epochs(spark, f"{path}/{kind}")
-            | {d.rsplit("/", 1)[-1] for d in dirs},
-        )
-    storeio.install_staged_store(spark, path, ["postings", "meta"])
+    OPTIMIZE (``storeio.compact_delta_store``: stage the merged store
+    with its manifest, park the old base, install, drop deltas last, so
+    a crash at any point leaves a readable index). Postings are
+    immutable rows — the merge is a pure union, no dedup logic; the
+    meta rows sum."""
+    compact_delta_store(spark, path, {
+        "postings": lambda live, dest: write_partitioned(live, dest, "bucket"),
+        "meta": lambda live, dest: _sum_meta(live).write.mode(
+            "overwrite"
+        ).parquet(dest),
+    })
 
 
 def bm25_topk_indexed(
@@ -383,11 +315,13 @@ def bm25_topk_indexed(
     Spark prunes each read down to those directories statically
     (PartitionFilters — pinned in tests/test_plans.py and
     tests/test_retrieval.py). ``buckets`` resolves from the store meta
-    (see _resolve_text_buckets) — pruning with the wrong modulus would
+    (``storeio.resolve_buckets``) — pruning with the wrong modulus would
     silently read the wrong directories.
     """
-    buckets = _resolve_text_buckets(
-        spark, path, buckets, "bm25_topk_indexed"
+    [buckets] = resolve_buckets(
+        read_json(spark, f"{path}/{STORE_META}"),
+        f"bm25_topk_indexed({path})",
+        buckets=(buckets, TEXT_INDEX_BUCKETS),
     )
     bkts = [
         r["bucket"]
@@ -397,19 +331,12 @@ def bm25_topk_indexed(
         .distinct()
         .collect()
     ]
-    postings = spark.read.parquet(path + "/postings")
-    for d in _text_delta_dirs(spark, path, "postings"):
-        postings = postings.unionByName(spark.read.parquet(d))
-    matched = postings.where(F.col("bucket").isin(bkts)).join(
-        F.broadcast(qterms.select("term").distinct()), "term"
+    matched = (
+        read_live(spark, path, "postings")
+        .where(F.col("bucket").isin(bkts))
+        .join(F.broadcast(qterms.select("term").distinct()), "term")
     )
-    meta = spark.read.parquet(path + "/meta")
-    for d in _text_delta_dirs(spark, path, "meta"):
-        meta = meta.unionByName(spark.read.parquet(d))
-    meta = meta.agg(
-        F.sum("n").cast("long").alias("n"),
-        F.sum("sum_dl").cast("long").alias("sum_dl"),
-    )
+    meta = _sum_meta(read_live(spark, path, "meta"))
     return _bm25_from_matched(matched, qterms, meta, k, k1, b)
 
 

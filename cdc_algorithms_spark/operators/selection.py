@@ -50,6 +50,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cdc_algorithms_spark.functions.text import shingles_of_words, words
+from cdc_algorithms_spark.operators.storeio import (
+    STORE_META,
+    adaptive_buckets,
+    compact_delta_store,
+    epoch_dir,
+    read_json,
+    read_live,
+    resolve_buckets,
+    write_json,
+    write_partitioned,
+)
 
 QUANT = 1_000_000_000
 
@@ -301,31 +312,30 @@ DSIR_BUCKETS = 32  # CAP since r12; actual counts are size-adaptive
 
 # Store-layout marker (r12, same discipline as the Jaccard index's
 # _index_meta.json): the writer derives a size-adaptive bucket count,
-# records it here, and every extend resolves it from the store — a tiny
-# corpus writes a couple of partition directories per epoch instead of
-# 32 (the per-epoch directory/commit overhead dominated the streaming
-# loops' sweep walls at fixture sizes), while at real corpus sizes the
-# cap engages and the layout is exactly the fixed one. Readers are
-# unaffected: they fold the whole vocabulary-sized store and never
-# prune by bucket (see dsir_weights_indexed).
-DSIR_STORE_META = "_store_meta.json"
+# records it in storeio.STORE_META, and every extend resolves it from
+# the store — a tiny corpus writes a couple of partition directories per
+# epoch instead of 32 (the per-epoch directory/commit overhead dominated
+# the streaming loops' sweep walls at fixture sizes), while at real
+# corpus sizes the cap engages and the layout is exactly the fixed one.
+# Readers are unaffected: they fold the whole vocabulary-sized store and
+# never prune by bucket (see dsir_weights_indexed).
 
 
-def _adaptive_dsir_buckets(n_docs: int, cap: int = DSIR_BUCKETS) -> int:
-    return max(1, min(int(cap), n_docs // 64))
+def _fold_counts(counts: DataFrame, *keys: str) -> DataFrame:
+    """Sum the per-generation term counts (a term may appear in several
+    generations) into one row per ``keys``."""
+    return counts.groupBy(*keys).agg(
+        F.sum("c_raw").cast("long").alias("c_raw"),
+        F.sum("c_tgt").cast("long").alias("c_tgt"),
+    )
 
 
-def _write_dsir_store_meta(spark, path: str, buckets: int) -> None:
-    from cdc_algorithms_spark.operators.storeio import write_store_meta
-
-    write_store_meta(spark, path, {"buckets": int(buckets)})
-
-
-def _read_dsir_store_meta(spark, path: str) -> dict | None:
-    from cdc_algorithms_spark.operators.storeio import read_store_meta
-
-    # None for legacy stores: the fixed pre-r12 convention
-    return read_store_meta(spark, path)
+def _fold_totals(meta: DataFrame) -> DataFrame:
+    """One (total_raw, total_tgt) row from the per-generation rows."""
+    return meta.agg(
+        F.sum("total_raw").cast("long").alias("total_raw"),
+        F.sum("total_tgt").cast("long").alias("total_tgt"),
+    )
 
 
 def _dsir_term_frame(
@@ -369,20 +379,18 @@ def write_dsir_counts(
 ) -> None:
     """Write the base DSIR term-count store (layout comment above).
     ``buckets`` defaults to a size-adaptive count recorded in the
-    store's ``_store_meta.json`` (see DSIR_STORE_META)."""
+    store's ``_store_meta.json``."""
     if buckets is None:
-        buckets = _adaptive_dsir_buckets(docs.count())
-    (
-        _dsir_term_frame(docs, target_pred, text_col, buckets)
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/counts")
+        buckets = adaptive_buckets(docs.count(), DSIR_BUCKETS, 64)
+    write_partitioned(
+        _dsir_term_frame(docs, target_pred, text_col, buckets),
+        f"{path}/counts",
+        "bucket",
     )
     _dsir_meta_frame(docs, target_pred, text_col).write.mode(
         "overwrite"
     ).parquet(f"{path}/meta")
-    _write_dsir_store_meta(docs.sparkSession, path, buckets)
+    write_json(docs.sparkSession, f"{path}/{STORE_META}", {"buckets": int(buckets)})
 
 
 def extend_dsir_counts(
@@ -408,80 +416,38 @@ def extend_dsir_counts(
     keeps the epochs' bucket VALUES inconsistent with the base — still
     read-exact (readers fold by term, never by bucket) but it defeats
     the one-writer-task-per-directory layout, so it fails loudly."""
-    meta = _read_dsir_store_meta(spark, path)
-    recorded = meta.get("buckets") if meta else None
-    if buckets is not None and recorded is not None and buckets != recorded:
-        raise ValueError(
-            f"extend_dsir_counts({path}): buckets={buckets} contradicts "
-            f"the store's recorded buckets={recorded}; drop the explicit "
-            "argument or rebuild the store."
-        )
-    if buckets is None:
-        buckets = recorded if recorded is not None else DSIR_BUCKETS
-    (
-        _dsir_term_frame(batch_docs, target_pred, text_col, buckets)
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/counts_delta/epoch_{int(epoch)}")
+    [buckets] = resolve_buckets(
+        read_json(spark, f"{path}/{STORE_META}"),
+        f"extend_dsir_counts({path})",
+        buckets=(buckets, DSIR_BUCKETS),
+    )
+    write_partitioned(
+        _dsir_term_frame(batch_docs, target_pred, text_col, buckets),
+        epoch_dir(path, "counts", epoch),
+        "bucket",
     )
     _dsir_meta_frame(batch_docs, target_pred, text_col).write.mode(
         "overwrite"
-    ).parquet(f"{path}/meta_delta/epoch_{int(epoch)}")
+    ).parquet(epoch_dir(path, "meta", epoch))
 
 
 def compact_dsir_counts(spark, path: str) -> None:
     """Fold epoch deltas back into one base count store — the DSIR
-    OPTIMIZE, same discipline as compact_text_index: counts pre-fold by
-    term (so probes read one row per term again), token-total meta rows
-    sum, the staged stores carry ``_folded_epochs.json`` manifests
-    written BEFORE the install rename (the install atomically retires
-    the folded deltas; the trailing GC deletes only manifest-folded
-    epochs, so a concurrent extend's fresh epoch survives —
-    install/crash contract: storeio.install_staged_store)."""
-    from cdc_algorithms_spark.operators import storeio
-
-    cdirs = storeio.live_epoch_dirs(
-        spark, f"{path}/counts_delta", f"{path}/counts"
-    )
-    mdirs = storeio.live_epoch_dirs(
-        spark, f"{path}/meta_delta", f"{path}/meta"
-    )
-    if not cdirs and not mdirs:
-        for kind in ("counts", "meta"):
-            storeio.gc_folded_epochs(
-                spark, f"{path}/{kind}_delta", f"{path}/{kind}"
-            )
-        return
-    counts = spark.read.parquet(f"{path}/counts")
-    for d in cdirs:
-        counts = counts.unionByName(spark.read.parquet(d))
-    folded = counts.groupBy("bucket", "term").agg(
-        F.sum("c_raw").cast("long").alias("c_raw"),
-        F.sum("c_tgt").cast("long").alias("c_tgt"),
-    ).select("term", "c_raw", "c_tgt", "bucket")
-    meta = spark.read.parquet(f"{path}/meta")
-    for d in mdirs:
-        meta = meta.unionByName(spark.read.parquet(d))
-    folded_meta = meta.agg(
-        F.sum("total_raw").cast("long").alias("total_raw"),
-        F.sum("total_tgt").cast("long").alias("total_tgt"),
-    )
-    (
-        folded.repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/counts_tmp")
-    )
-    folded_meta.write.mode("overwrite").parquet(f"{path}/meta_tmp")
-    for kind, dirs in (("counts", cdirs), ("meta", mdirs)):
-        storeio.write_folded_epochs(
-            spark,
-            f"{path}/{kind}_tmp",
-            storeio.read_folded_epochs(spark, f"{path}/{kind}")
-            | {d.rsplit("/", 1)[-1] for d in dirs},
-        )
-    storeio.install_staged_store(spark, path, ["counts", "meta"])
+    OPTIMIZE (``storeio.compact_delta_store``, same discipline as
+    compact_text_index): counts pre-fold by term (so probes read one row
+    per term again) and token-total meta rows sum."""
+    compact_delta_store(spark, path, {
+        "counts": lambda live, dest: write_partitioned(
+            _fold_counts(live, "bucket", "term").select(
+                "term", "c_raw", "c_tgt", "bucket"
+            ),
+            dest,
+            "bucket",
+        ),
+        "meta": lambda live, dest: _fold_totals(live).write.mode(
+            "overwrite"
+        ).parquet(dest),
+    })
 
 
 def dsir_weights_indexed(
@@ -507,24 +473,10 @@ def dsir_weights_indexed(
     partitioning exists for the writers (one hash exchange per epoch)
     and for future term-subset probes, not for this whole-model
     read."""
-    from cdc_algorithms_spark.operators.storeio import live_epoch_dirs
-
-    counts = spark.read.parquet(f"{path}/counts")
-    for d in live_epoch_dirs(
-        spark, f"{path}/counts_delta", f"{path}/counts"
-    ):
-        counts = counts.unionByName(spark.read.parquet(d))
-    folded = counts.groupBy("term").agg(
-        F.sum("c_raw").cast("long").alias("c_raw"),
-        F.sum("c_tgt").cast("long").alias("c_tgt"),
+    folded = _fold_counts(read_live(spark, path, "counts"), "term")
+    meta = _fold_totals(read_live(spark, path, "meta")).crossJoin(
+        folded.agg(F.count(F.lit(1)).cast("long").alias("v"))
     )
-    meta = spark.read.parquet(f"{path}/meta")
-    for d in live_epoch_dirs(spark, f"{path}/meta_delta", f"{path}/meta"):
-        meta = meta.unionByName(spark.read.parquet(d))
-    meta = meta.agg(
-        F.sum("total_raw").cast("long").alias("total_raw"),
-        F.sum("total_tgt").cast("long").alias("total_tgt"),
-    ).crossJoin(folded.agg(F.count(F.lit(1)).cast("long").alias("v")))
     tf = (
         docs.select(
             F.col(id_col).cast("long").alias("doc_id"),

@@ -32,6 +32,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cdc_algorithms_spark.functions.arrays import dot_product, l2_norm
+from cdc_algorithms_spark.operators.storeio import (
+    compact_delta_store,
+    epoch_dir,
+    read_epochs,
+    read_live,
+    write_partitioned,
+)
 
 
 def _paired_cosine() -> "F.Column":
@@ -140,16 +147,6 @@ def lsh_bucket(vec_col, dim: int, bits: int, seed: int = 42):
         "        (acc, val) -> acc + val) >= 0,"
         "      shiftleft(1L, b), 0L)),"
         "  0L, (acc, x) -> acc + x)"
-    )
-
-
-def _sq_dist_to(vec_col, centroid: list[float]):
-    """Squared L2 distance from a vector column to a literal centroid."""
-    lit_arr = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(vec_col, lit_arr, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
 
 
@@ -662,13 +659,7 @@ def _write_codes_and_stats(
         _pq_quant_err_q(F.col(vec_col), books, sub).alias("__e"),
     ).persist()
     try:
-        (
-            enc.drop("__e")
-            .repartition("cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(codes_path)
-        )
+        write_partitioned(enc.drop("__e"), codes_path, "cell")
         (
             enc.groupBy("cell")
             .agg(
@@ -892,16 +883,6 @@ def write_pq_index(
     )
 
 
-def _pq_delta_dirs(spark, path: str) -> list[str]:
-    """LIVE epoch subdirectories under ``{path}/codes_delta``: absent
-    root → []; epochs the base store's ``_folded_epochs.json`` manifest
-    records as already compacted in are skipped (storeio module
-    docstring — the crash-window fix)."""
-    from cdc_algorithms_spark.operators.storeio import live_epoch_dirs
-
-    return live_epoch_dirs(spark, f"{path}/codes_delta", f"{path}/codes")
-
-
 def read_pq_index(spark, path: str) -> PqIndex:
     """Load a :func:`write_pq_index` store. The model row (centroids +
     codebooks) is collected — it is k·dim floats by construction; the
@@ -913,10 +894,10 @@ def read_pq_index(spark, path: str) -> PqIndex:
     row = spark.read.parquet(f"{path}/model").collect()[0]
     cents = [list(map(float, c)) for c in row["centroids"]]
     books = [[list(map(float, cw)) for cw in bk] for bk in row["books"]]
-    codes = spark.read.parquet(f"{path}/codes")
-    for d in _pq_delta_dirs(spark, path):
-        codes = codes.unionByName(spark.read.parquet(d))
-    return PqIndex(cents, books, row["dim"], row["m"], row["ksub"], codes)
+    return PqIndex(
+        cents, books, row["dim"], row["m"], row["ksub"],
+        read_live(spark, path, "codes"),
+    )
 
 
 def extend_pq_index(
@@ -951,8 +932,8 @@ def extend_pq_index(
     # keeps at-least-once replay idempotent for both)
     _write_codes_and_stats(
         batch, cents, books, sub, corpus_id, vec_col,
-        f"{path}/codes_delta/epoch_{int(epoch)}",
-        f"{path}/stats_delta/epoch_{int(epoch)}",
+        epoch_dir(path, "codes", epoch),
+        epoch_dir(path, "stats", epoch),
     )
 
 
@@ -967,37 +948,13 @@ def compact_pq_index(spark, path: str) -> None:
     until the new one is in place) so a crash mid-swap leaves a
     recoverable store, and the deltas are dropped last. Codes are
     immutable rows keyed by vec_id — the merge is a pure union, no
-    dedup logic. The staged store carries a ``_folded_epochs.json``
-    manifest (written BEFORE the install rename) so the rename
-    atomically retires the folded deltas from probes' view; the
-    trailing delete is garbage collection, and a crash between install
-    and delete can no longer double-count codes (storeio docstring)."""
-    from cdc_algorithms_spark.operators import storeio
-
-    deltas = _pq_delta_dirs(spark, path)
-    if not deltas:
-        # nothing live to fold; reclaim any crash-deferred folded deltas
-        storeio.gc_folded_epochs(
-            spark, f"{path}/codes_delta", f"{path}/codes"
-        )
-        return
-    codes = spark.read.parquet(f"{path}/codes")
-    for d in deltas:
-        codes = codes.unionByName(spark.read.parquet(d))
-    tmp = f"{path}/codes_tmp"
-    (
-        codes.repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp)
-    )
-    storeio.write_folded_epochs(
-        spark,
-        tmp,
-        storeio.read_folded_epochs(spark, f"{path}/codes")
-        | {d.rsplit("/", 1)[-1] for d in deltas},
-    )
-    storeio.install_staged_store(spark, path, ["codes"])
+    dedup logic. Staging, the folded-epochs manifest (written
+    BEFORE the install rename, so a crash between install and delete
+    cannot double-count codes) and the install are
+    ``storeio.compact_delta_store``'s."""
+    compact_delta_store(spark, path, {
+        "codes": lambda live, dest: write_partitioned(live, dest, "cell"),
+    })
 
 
 def rebuild_pq_index(
@@ -1083,35 +1040,18 @@ def pq_drift_report(spark, path: str) -> DataFrame:
     model is still the seed model, so the evidence stays until a
     rebuild re-derives it. The whole report reads ≤ nlist·(epochs+1)
     pre-aggregated rows — no corpus scan."""
-    seed = spark.read.parquet(f"{path}/stats").select(
+    stats = spark.read.parquet(f"{path}/stats")
+    seed = stats.select(
         F.col("cell").cast("long").alias("cell"),
         F.col("n").alias("n_seed"),
         F.col("err_q").alias("err_seed_q"),
     )
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(f"{path}/stats_delta")
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    epochs = (
-        sorted(
-            str(st.getPath())
-            for st in fs.listStatus(root)
-            if st.isDirectory()
-        )
-        if fs.exists(root)
-        else []
-    )
-    if epochs:
-        new = spark.read.parquet(epochs[0])
-        for d in epochs[1:]:
-            new = new.unionByName(spark.read.parquet(d))
-        new = new.groupBy("cell").agg(
-            F.sum("n").cast("long").alias("n_new"),
-            F.sum("err_q").cast("long").alias("err_new_q"),
-        ).select(F.col("cell").cast("long").alias("cell"), "n_new", "err_new_q")
-    else:
-        new = spark.createDataFrame(
-            [], "cell long, n_new long, err_new_q long"
-        )
+    new = read_epochs(spark, path, "stats", stats.schema).groupBy(
+        "cell"
+    ).agg(
+        F.sum("n").cast("long").alias("n_new"),
+        F.sum("err_q").cast("long").alias("err_new_q"),
+    ).select(F.col("cell").cast("long").alias("cell"), "n_new", "err_new_q")
     zero = F.lit(0).cast("long")
     joined = seed.join(new, "cell", "full_outer").select(
         "cell",

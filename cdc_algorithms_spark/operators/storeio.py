@@ -1,8 +1,29 @@
-"""Hadoop-FS helpers shared by the durable index stores (text postings,
-PQ codes): epoch-directory listing and the folded-epochs manifest that
-makes compaction atomic with respect to delta liveness.
+"""Hadoop-FS policy shared by every durable epoch store.
 
-The crash window the manifest closes: every ``compact_*`` stages the
+Two store layouts live here.
+
+* The ``*_delta`` stores: the Jaccard prefix index
+  (operators/dedup_docs.py), the BM25 text index
+  (operators/retrieval.py), the DSIR count store
+  (operators/selection.py) and the PQ codes (operators/similarity.py).
+  Each is one or more KINDS, a ``{path}/{kind}`` base plus
+  ``{path}/{kind}_delta/epoch_<n>`` extend epochs. This module owns
+  their epoch naming (:func:`epoch_dir`), their live read
+  (:func:`read_live`), their partitioned writes
+  (:func:`write_partitioned`), their bucket meta
+  (:func:`adaptive_buckets`, :func:`resolve_buckets`, the JSON sidecars
+  of :func:`write_json`) and their compaction
+  (:func:`compact_delta_store`); a store keeps only its schema, its
+  partition column and its fold.
+* The ``seed`` + ``batch_<id>`` generation stores of the streaming
+  loops, folded by :func:`compact_epoch_store`.
+
+Every epoch is read with the schema of its base (or the caller's
+schema, :func:`read_epochs`): an EMPTY epoch (a batch with no rows
+still writes its directory, keeping replay idempotence uniform) has no
+data file to infer a schema from.
+
+The crash window the manifest closes: every compaction stages the
 merged store, installs it with a rename, then deletes the now-folded
 epoch deltas. A crash BETWEEN the install rename and the delta delete
 used to leave both the folded rows (inside the new base) and the live
@@ -28,12 +49,18 @@ from __future__ import annotations
 
 import json
 import logging
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _LOG = logging.getLogger(__name__)
 
 MANIFEST = "_folded_epochs.json"
+# Store-format marker (r12): writers record layout parameters a reader
+# or extender MUST agree with (bucket counts, key types) in one small
+# JSON beside the store. The text and DSIR stores use this name; the
+# Jaccard index keeps its own (dedup_docs.JACCARD_INDEX_META).
+STORE_META = "_store_meta.json"
 
 
 def _fs_and_path(spark: SparkSession, path_str: str):
@@ -42,59 +69,10 @@ def _fs_and_path(spark: SparkSession, path_str: str):
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
-def read_folded_epochs(spark: SparkSession, store_dir: str) -> set[str]:
-    """Epoch basenames the base store at ``store_dir`` already contains
-    (empty set when the store predates manifests or was never
-    compacted)."""
-    fs, p = _fs_and_path(spark, f"{store_dir}/{MANIFEST}")
-    if not fs.exists(p):
-        return set()
-    stream = fs.open(p)
-    try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return set(json.loads(text)["folded"])
-
-
-def write_folded_epochs(
-    spark: SparkSession, staged_dir: str, folded: set[str]
-) -> None:
-    """Record ``folded`` epoch basenames inside a STAGED store so the
-    install rename publishes rows and manifest in one atomic step."""
-    fs, p = _fs_and_path(spark, f"{staged_dir}/{MANIFEST}")
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps({"folded": sorted(folded)}).encode()))
-    finally:
-        out.close()
-
-
-# Store-format marker (r12): writers record layout parameters a reader
-# or extender MUST agree with (bucket counts, key types) in one small
-# JSON beside the store. Shared by the Jaccard index (_index_meta.json),
-# the DSIR count store and the BM25 text index (_store_meta.json).
-STORE_META = "_store_meta.json"
-
-
-def write_store_meta(
-    spark: SparkSession, store_root: str, meta: dict, name: str = STORE_META
-) -> None:
-    fs, p = _fs_and_path(spark, f"{store_root}/{name}")
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(meta).encode()))
-    finally:
-        out.close()
-
-
-def read_store_meta(
-    spark: SparkSession, store_root: str, name: str = STORE_META
-) -> dict | None:
-    """None for stores predating markers (the fixed pre-r12 layouts)."""
-    fs, p = _fs_and_path(spark, f"{store_root}/{name}")
+def read_json(spark: SparkSession, file: str):
+    """The JSON value stored at ``file``; None when it does not exist
+    (a store that predates the marker)."""
+    fs, p = _fs_and_path(spark, file)
     if not fs.exists(p):
         return None
     stream = fs.open(p)
@@ -105,6 +83,192 @@ def read_store_meta(
     finally:
         stream.close()
     return json.loads(text)
+
+
+def write_json(spark: SparkSession, file: str, value) -> None:
+    """Write ``value`` as JSON at ``file`` through the Hadoop FS (the
+    local FS keeps ``.crc`` sidecars a plain ``open()`` would stale)."""
+    fs, p = _fs_and_path(spark, file)
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(json.dumps(value).encode()))
+    finally:
+        out.close()
+
+
+def read_folded_epochs(spark: SparkSession, store_dir: str) -> set[str]:
+    """Epoch basenames the base store at ``store_dir`` already contains
+    (empty set when the store predates manifests or was never
+    compacted)."""
+    manifest = read_json(spark, f"{store_dir}/{MANIFEST}")
+    return set(manifest["folded"]) if manifest else set()
+
+
+def write_folded_epochs(
+    spark: SparkSession, staged_dir: str, folded: set[str]
+) -> None:
+    """Record ``folded`` epoch basenames inside a STAGED store so the
+    install rename publishes rows and manifest in one atomic step."""
+    write_json(spark, f"{staged_dir}/{MANIFEST}", {"folded": sorted(folded)})
+
+
+def adaptive_buckets(n_docs: int, cap: int, per_bucket: int) -> int:
+    """A bucket count sized to the corpus (r12): at least ``per_bucket``
+    docs per bucket, capped at the store's production count, floor 1.
+    The fixed counts made every write and extend of a tiny corpus pay
+    one partition directory per bucket — the dominant cost of the
+    streaming loops at fixture sizes — for pruning granularity the
+    corpus cannot use; at real corpus sizes the cap engages and the
+    layout is exactly the fixed one."""
+    return max(1, min(int(cap), n_docs // per_bucket))
+
+
+def resolve_buckets(
+    meta: dict | None, context: str, **given: tuple[int | None, int]
+) -> tuple[int, ...]:
+    """Bucket counts for a store verb, one per ``name=(explicit,
+    legacy)`` keyword, in keyword order: the explicit value, else the
+    store's recorded meta (the structural writer/prober agreement),
+    else the legacy fixed count (marker-less pre-r12 stores). An
+    explicit value that CONTRADICTS the record is the silently-wrong
+    trap — a probe hashing keys modulo the wrong count prunes the wrong
+    directories and misses data — so it fails loudly."""
+    meta = meta or {}
+    out = []
+    for name, (explicit, legacy) in given.items():
+        recorded = meta.get(name)
+        if explicit is not None and recorded is not None and explicit != recorded:
+            raise ValueError(
+                f"{context}: {name}={explicit} contradicts the store's "
+                f"recorded {name}={recorded} — bucket-pruned reads would "
+                "silently miss data. Drop the explicit argument (the "
+                "store meta is authoritative) or rebuild the store with "
+                "the new count."
+            )
+        out.append(
+            explicit if explicit is not None
+            else recorded if recorded is not None
+            else legacy
+        )
+    return tuple(out)
+
+
+def _subdirs(spark: SparkSession, root_str: str) -> list[tuple[str, str]]:
+    """``(name, path)`` of every directory under ``root_str``, sorted by
+    path; absent root → []."""
+    fs, root = _fs_and_path(spark, root_str)
+    if not fs.exists(root):
+        return []
+    return sorted(
+        (
+            (st.getPath().getName(), str(st.getPath()))
+            for st in fs.listStatus(root)
+            if st.isDirectory()
+        ),
+        key=lambda nd: nd[1],
+    )
+
+
+def live_epoch_dirs(
+    spark: SparkSession, delta_root: str, store_dir: str
+) -> list[str]:
+    """Epoch subdirectories under ``delta_root`` NOT already folded into
+    the base store at ``store_dir`` (per its manifest); sorted, absent
+    root → []."""
+    dirs = _subdirs(spark, delta_root)
+    if not dirs:
+        return []
+    folded = read_folded_epochs(spark, store_dir)
+    return [d for name, d in dirs if name not in folded]
+
+
+def epoch_dir(path: str, kind: str, epoch: int) -> str:
+    """Where extend epoch ``epoch`` of ``kind`` lands. Writers overwrite
+    it whole, so an at-least-once replay of the epoch is idempotent."""
+    return f"{path}/{kind}_delta/epoch_{int(epoch)}"
+
+
+def _union(spark: SparkSession, base: DataFrame, dirs: list[str]) -> DataFrame:
+    for d in dirs:
+        base = base.unionByName(spark.read.schema(base.schema).parquet(d))
+    return base
+
+
+def read_live(spark: SparkSession, path: str, kind: str) -> DataFrame:
+    """The live ``kind`` of a ``*_delta`` store: the base
+    ``{path}/{kind}`` ∪ every epoch under ``{path}/{kind}_delta`` its
+    manifest has not folded, each read with the base's schema.
+    Partition columns survive the union, so a partition filter on the
+    result prunes every branch."""
+    return _union(
+        spark,
+        spark.read.parquet(f"{path}/{kind}"),
+        live_epoch_dirs(spark, f"{path}/{kind}_delta", f"{path}/{kind}"),
+    )
+
+
+def read_epochs(spark: SparkSession, path: str, kind: str, schema) -> DataFrame:
+    """Every epoch under ``{path}/{kind}_delta``, read with ``schema`` —
+    for the per-epoch artifacts that are never compacted (the
+    corpus-build deltas, the PQ drift stats), where liveness is just
+    existence. No epoch → an empty frame of ``schema``."""
+    return _union(
+        spark,
+        spark.createDataFrame([], schema),
+        [
+            d
+            for name, d in _subdirs(spark, f"{path}/{kind}_delta")
+            if name.startswith("epoch_")
+        ],
+    )
+
+
+def write_partitioned(
+    df: DataFrame, dest: str, part_col: str, sort_col: str | None = None
+) -> None:
+    """Overwrite ``dest`` partitioned by ``part_col``; ``repartition``
+    on it first ⇒ one writer task per directory (no small-file
+    explosion). ``sort_col`` orders rows within each partition, so
+    parquet row-group min/max stats prune inside a bucket too."""
+    df = df.repartition(part_col)
+    if sort_col is not None:
+        df = df.sortWithinPartitions(sort_col)
+    df.write.mode("overwrite").partitionBy(part_col).parquet(dest)
+
+
+def compact_delta_store(
+    spark: SparkSession,
+    path: str,
+    folds: dict[str, Callable[[DataFrame, str], None]],
+) -> None:
+    """Fold every live epoch of each ``kind`` in ``folds`` back into its
+    base — the OPTIMIZE of a ``*_delta`` store. ``folds[kind](live,
+    dest)`` writes the staged store at ``dest`` from the live rows (a
+    pure union for immutable rows, a re-aggregation for counts). Each
+    staged store carries its manifest (the previous one ∪ the epochs
+    folded now), written BEFORE :func:`install_staged_store` swaps it
+    in, so a crash at any point leaves an exact, never-double-counting
+    store and an epoch a concurrent extend lands mid-compaction
+    survives as live. With no live epoch anywhere it only
+    garbage-collects crash-deferred folded epochs."""
+    dirs = {
+        kind: live_epoch_dirs(spark, f"{path}/{kind}_delta", f"{path}/{kind}")
+        for kind in folds
+    }
+    if not any(dirs.values()):
+        for kind in folds:
+            gc_folded_epochs(spark, f"{path}/{kind}_delta", f"{path}/{kind}")
+        return
+    for kind, fold in folds.items():
+        base = f"{path}/{kind}"
+        fold(_union(spark, spark.read.parquet(base), dirs[kind]), f"{base}_tmp")
+        write_folded_epochs(
+            spark,
+            f"{base}_tmp",
+            read_folded_epochs(spark, base)
+            | {d.rsplit("/", 1)[-1] for d in dirs[kind]},
+        )
+    install_staged_store(spark, path, list(folds))
 
 
 def gc_folded_epochs(
@@ -139,10 +303,9 @@ def _try_rename(fs, src, dst) -> bool:
 def install_staged_store(
     spark: SparkSession, path: str, kinds: list[str]
 ) -> None:
-    """Shared install tail for the ``*_delta`` compactors
-    (compact_text_index / compact_pq_index / compact_dsir_counts): for
-    each ``kind``, park the live ``{path}/{kind}`` at ``{kind}_old``,
-    install ``{kind}_tmp`` (whose manifest was written by the caller
+    """Install tail of :func:`compact_delta_store`: for each ``kind``,
+    park the live ``{path}/{kind}`` at ``{kind}_old``, install
+    ``{kind}_tmp`` (whose manifest was written by the caller
     BEFORE this call), then garbage-collect ONLY the manifest-folded
     epochs under ``{kind}_delta`` — never the whole delta root, so an
     epoch a concurrent extend landed after the caller's listing
@@ -188,7 +351,7 @@ def compact_epoch_store(spark: SparkSession, store_dir: str) -> int:
     """Fold every live generation of an epoch-SUBDIR store (the
     ``seed`` + ``batch_<id>`` layout of streaming/sync.py,
     streaming/near_dup.py, streaming/ingest_pipeline.py — distinct from
-    the ``*_delta`` layout the ``compact_*`` verbs own) into ONE
+    the ``*_delta`` layout of :func:`compact_delta_store`) into ONE
     consolidated ``seed`` generation. Returns the number of generations
     folded (0 when a store with ≤ 1 live generation only
     garbage-collects dead subdirectories).
@@ -330,19 +493,3 @@ def compact_epoch_store(spark: SparkSession, store_dir: str) -> int:
             fs.delete(oldp, True)
     return len(live)
 
-
-def live_epoch_dirs(
-    spark: SparkSession, delta_root: str, store_dir: str
-) -> list[str]:
-    """Epoch subdirectories under ``delta_root`` NOT already folded into
-    the base store at ``store_dir`` (per its manifest); sorted, absent
-    root → []."""
-    fs, root = _fs_and_path(spark, delta_root)
-    if not fs.exists(root):
-        return []
-    folded = read_folded_epochs(spark, store_dir)
-    return sorted(
-        str(st.getPath())
-        for st in fs.listStatus(root)
-        if st.isDirectory() and st.getPath().getName() not in folded
-    )

@@ -70,12 +70,19 @@ two-phase forms.
 
 from __future__ import annotations
 
-import json
 import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cdc_algorithms_spark.operators.storeio import (
+    epoch_dir,
+    read_epochs,
+    read_json,
+    read_live,
+    write_json,
+)
 
 SEED_MARKER = "_seed_epoch.json"
 
@@ -83,33 +90,6 @@ _PAIRS_SCHEMA = "id_a long, id_b long, jaccard double"
 _DOCTF_SCHEMA = "doc_id long, lang string, dl int, term string, tf long"
 _DOCS_SCHEMA = "doc_id long, lang string, n_chars long"
 _CENSUS_SCHEMA = "n_input long"
-
-
-def _read_seed_epoch(spark: SparkSession, root: str) -> int | None:
-    from cdc_algorithms_spark.operators.storeio import _fs_and_path
-
-    fs, p = _fs_and_path(spark, f"{root}/{SEED_MARKER}")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return int(json.loads(text)["seed_epoch"])
-
-
-def _write_seed_epoch(spark: SparkSession, root: str, epoch: int) -> None:
-    from cdc_algorithms_spark.operators.storeio import _fs_and_path
-
-    fs, p = _fs_and_path(spark, f"{root}/{SEED_MARKER}")
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps({"seed_epoch": int(epoch)}).encode()))
-    finally:
-        out.close()
 
 
 def process_corpus_batch(
@@ -147,7 +127,7 @@ def process_corpus_batch(
     # census first: raw arrivals, before the quality gate
     batch.agg(F.count(F.lit(1)).cast("long").alias("n_input")).write.mode(
         "overwrite"
-    ).parquet(f"{root}/census_delta/epoch_{epoch}")
+    ).parquet(epoch_dir(root, "census", epoch))
 
     good = quality_scores(batch).where(
         F.col("quality_score") >= qmin
@@ -163,20 +143,20 @@ def process_corpus_batch(
         .persist()
     )
 
-    seed_epoch = _read_seed_epoch(spark, root)
-    seeding = seed_epoch is None or seed_epoch == epoch
+    seed = read_json(spark, f"{root}/{SEED_MARKER}")
+    seeding = seed is None or int(seed["seed_epoch"]) == epoch
     jpath = f"{root}/jaccard"
     if seeding:
         # seed epoch (or its replay): pairs are within-batch; both
         # stores are (re)written whole — overwrite ⇒ idempotent
         pairs = ngram_jaccard_pairs(fdocs, n=n, threshold=threshold)
         pairs.write.mode("overwrite").parquet(
-            f"{root}/pairs_delta/epoch_{epoch}"
+            epoch_dir(root, "pairs", epoch)
         )
         index = jaccard_prefix_index(fdocs, n=n, threshold=threshold)
         write_jaccard_index(index, jpath)
         write_dsir_counts(fdocs, target_pred, f"{root}/dsir")
-        _write_seed_epoch(spark, root, epoch)
+        write_json(spark, f"{root}/{SEED_MARKER}", {"seed_epoch": epoch})
     else:
         # probe BEFORE extending (a replay's store already holds this
         # epoch's ids — same ids ⇒ the candidate distinct dedupes to
@@ -200,7 +180,7 @@ def process_corpus_batch(
             elements=batch_sh,
         )
         pairs.write.mode("overwrite").parquet(
-            f"{root}/pairs_delta/epoch_{epoch}"
+            epoch_dir(root, "pairs", epoch)
         )
         extend_jaccard_index(
             spark, jpath, fdocs.select("doc_id", "text"), epoch,
@@ -223,10 +203,10 @@ def process_corpus_batch(
         .groupBy("doc_id", "lang", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    tf.write.mode("overwrite").parquet(f"{root}/doctf_delta/epoch_{epoch}")
+    tf.write.mode("overwrite").parquet(epoch_dir(root, "doctf", epoch))
     fdocs.select(
         "doc_id", "lang", F.length("text").cast("long").alias("n_chars")
-    ).write.mode("overwrite").parquet(f"{root}/docs_delta/epoch_{epoch}")
+    ).write.mode("overwrite").parquet(epoch_dir(root, "docs", epoch))
     # the probe's internal persists served their writes — reclaim
     fdocs.unpersist()
     release_cached_frames()
@@ -296,32 +276,6 @@ def run_streaming_corpus_build(
     return root
 
 
-def _epoch_union(
-    spark: SparkSession, delta_root: str, schema: str
-) -> DataFrame:
-    """Union every ``epoch_<n>`` directory under ``delta_root`` (these
-    per-epoch artifacts are never compacted, so liveness is just
-    existence). Explicit schema: an empty epoch has no files to infer
-    from."""
-    from cdc_algorithms_spark.operators.storeio import _fs_and_path
-
-    fs, root = _fs_and_path(spark, delta_root)
-    dirs = (
-        sorted(
-            str(st.getPath())
-            for st in fs.listStatus(root)
-            if st.isDirectory()
-            and st.getPath().getName().startswith("epoch_")
-        )
-        if fs.exists(root)
-        else []
-    )
-    out = spark.createDataFrame([], schema)
-    for d in dirs:
-        out = out.unionByName(spark.read.schema(out.schema).parquet(d))
-    return out
-
-
 def corpus_build_manifest_from_store(
     spark: SparkSession,
     root: str,
@@ -345,13 +299,15 @@ def corpus_build_manifest_from_store(
     )
     from cdc_algorithms_spark.operators.packing import sequence_packing
     from cdc_algorithms_spark.operators.sampling import pps_systematic_sample
-    from cdc_algorithms_spark.operators.selection import _dsir_score
+    from cdc_algorithms_spark.operators.selection import (
+        _dsir_score,
+        _fold_counts,
+    )
     from cdc_algorithms_spark.operators.splits import split_assignment
-    from cdc_algorithms_spark.operators.storeio import live_epoch_dirs
 
-    pairs = _epoch_union(spark, f"{root}/pairs_delta", _PAIRS_SCHEMA)
+    pairs = read_epochs(spark, root, "pairs", _PAIRS_SCHEMA)
     comp = connected_components(pairs)
-    docmeta = _epoch_union(spark, f"{root}/docs_delta", _DOCS_SCHEMA)
+    docmeta = read_epochs(spark, root, "docs", _DOCS_SCHEMA)
     # persisted: survivors feed the scoring semi-join, the dedup census,
     # and (via dropped) the model subtraction
     kept = _persist(
@@ -370,7 +326,7 @@ def corpus_build_manifest_from_store(
         .where(F.col("component_id") != F.col("doc_id"))
         .select("doc_id")
     )
-    doctf = _epoch_union(spark, f"{root}/doctf_delta", _DOCTF_SCHEMA)
+    doctf = read_epochs(spark, root, "doctf", _DOCTF_SCHEMA)
     drop_model = (
         doctf.join(F.broadcast(dropped_ids), "doc_id", "left_semi")
         .groupBy("term")
@@ -384,15 +340,7 @@ def corpus_build_manifest_from_store(
             .alias("d_tgt"),
         )
     )
-    counts = spark.read.parquet(f"{root}/dsir/counts")
-    for d in live_epoch_dirs(
-        spark, f"{root}/dsir/counts_delta", f"{root}/dsir/counts"
-    ):
-        counts = counts.unionByName(spark.read.parquet(d))
-    folded = counts.groupBy("term").agg(
-        F.sum("c_raw").cast("long").alias("c_raw"),
-        F.sum("c_tgt").cast("long").alias("c_tgt"),
-    )
+    folded = _fold_counts(read_live(spark, f"{root}/dsir", "counts"), "term")
     # kept-corpus model = all-quality model − dropped docs' counts
     # (exact integers); a term entirely inside dropped docs leaves the
     # vocabulary, matching the batch model built from survivors alone
@@ -443,7 +391,7 @@ def corpus_build_manifest_from_store(
         F.count(F.lit(1)).cast("long").alias("n_sequences"),
         F.sum("n_boundary_docs").cast("long").alias("n_boundary_crossings"),
     )
-    census_in = _epoch_union(spark, f"{root}/census_delta", _CENSUS_SCHEMA)
+    census_in = read_epochs(spark, root, "census", _CENSUS_SCHEMA)
     census = (
         census_in.agg(F.sum("n_input").cast("long").alias("n_input_docs"))
         .crossJoin(

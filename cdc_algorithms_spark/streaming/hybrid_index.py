@@ -88,14 +88,11 @@ def run_streaming_hybrid_index(
             buckets=buckets,
         )
         # partial modality is legal: a doc arriving without an embedding
-        # is lexically findable and semantically absent (NULL embedding
-        # rows are skipped; an all-NULL batch writes no epoch at all —
-        # an empty partitioned parquet dir would break the delta union)
+        # is lexically findable and semantically absent
         vecs = batch.where(batch["embedding"].isNotNull()).select(
             batch["doc_id"].alias("vec_id"), "embedding"
         )
-        if not vecs.isEmpty():
-            extend_pq_index(spark, pq_path, vecs, epoch)
+        extend_pq_index(spark, pq_path, vecs, epoch)
 
     in_dir = tempfile.mkdtemp(prefix="cdc_hybridstream_in_")
     try:

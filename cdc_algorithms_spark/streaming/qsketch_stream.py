@@ -14,7 +14,7 @@ This completes the pattern: every durable artifact in the package —
 near-dup band index, PQ codes, ingest manifests, and now quantile
 sketches — has (a) a one-shot build, (b) an epoch-keyed streaming
 extension, and (c) a fold-the-epochs compaction
-(streaming/sync.py::compact_epoch_store works on this store unchanged;
+(operators/storeio.py::compact_epoch_store works on this store unchanged;
 sketch rows are row-mergeable on read either way).
 
 Scale posture: per-batch work is one (group, bucket) aggregate over the

@@ -19,7 +19,7 @@ equal the batch plan's — the DuckDB oracle for the batch sync_plan
 Store layout: ``(chunk_text, origin, batch_id)`` rows in unpartitioned
 ``seed`` / ``batch_<id>`` directories. Each micro-batch reads every live
 one, unpruned, so the per-batch read grows with the store until
-:func:`compact_epoch_store` folds it. Metrics are 1-row-per-batch
+``operators/storeio.py::compact_epoch_store`` folds it. Metrics are 1-row-per-batch
 writes — no driver-side accumulation.
 
 Recovery semantics: foreachBatch is at-least-once — after a failure the
@@ -194,26 +194,3 @@ def run_incremental_sync(
         F.sum("dedup_new_bytes").cast("long").alias("dedup_new_bytes"),
     )
 
-
-def compact_epoch_store(spark: SparkSession, store_dir: str) -> int:
-    """Fold an epoch-keyed store's subdirectories (``seed`` +
-    ``batch_<id>``) into ONE new ``seed`` — the maintenance verb every
-    foreachBatch store in this package eventually needs (band index,
-    doc store, manifests, watermarks): each settled micro-batch adds a
-    directory, and after 10k batches every reader's listing and scan
-    carries 10k branches. Returns the number of directories folded.
-
-    Delegates to :func:`cdc_algorithms_spark.operators.storeio.
-    compact_epoch_store` — the single implementation with the
-    ``_folded_epochs.json`` manifest (replay-after-compaction
-    dead-lettering), concurrent-extend rescue, and install-failure
-    rollback. This module used to carry its own manifest-less compactor;
-    the two are now one so every caller (including the public
-    ``api.compact_stream_store`` verb) gets the same guarantees. Run
-    with readers quiesced (between micro-batches) — see the storeio
-    docstring for the exact contract."""
-    from cdc_algorithms_spark.operators.storeio import (
-        compact_epoch_store as _compact,
-    )
-
-    return _compact(spark, store_dir)

@@ -168,11 +168,18 @@ def test_index_meta_marker_and_type_mismatch_fail_loudly(spark, tmp_path):
     # a stale-format store: meta says string, data is bigint -> loud
     # (rewrite through the same Hadoop FS helper — the local FS keeps
     # .crc sidecars a plain open() rewrite would invalidate)
-    from cdc_algorithms_spark.operators.dedup_docs import (
-        _write_jaccard_index_meta,
-    )
+    from cdc_algorithms_spark.operators.storeio import write_json
 
-    _write_jaccard_index_meta(spark, path, "string", 64, 16)
+    write_json(
+        spark,
+        f"{path}/{JACCARD_INDEX_META}",
+        {
+            "format_version": 2,
+            "shingle_type": "string",
+            "sh_buckets": 64,
+            "id_buckets": 16,
+        },
+    )
     with pytest.raises(ValueError, match="shingle type mismatch"):
         read_jaccard_index(spark, path)
 
@@ -199,15 +206,31 @@ def test_adaptive_bucket_counts_recorded_and_resolved(spark, tmp_path):
     import pytest
 
     from cdc_algorithms_spark.operators.dedup_docs import (
+        JACCARD_ID_BUCKETS,
         JACCARD_INDEX_META,
-        _adaptive_buckets,
+        JACCARD_SH_BUCKETS,
         read_jaccard_index,
     )
+    from cdc_algorithms_spark.operators.storeio import adaptive_buckets
 
-    # the derivation: floors, scaling, caps
-    assert _adaptive_buckets(0) == (1, 1)
-    assert _adaptive_buckets(500) == (7, 1)
-    assert _adaptive_buckets(10**9) == (64, 16)
+    # the derivation write_jaccard_index runs: floors, scaling, caps
+    def _adaptive(n_docs):
+        return (
+            adaptive_buckets(n_docs, JACCARD_SH_BUCKETS, 64),
+            adaptive_buckets(n_docs, JACCARD_ID_BUCKETS, 256),
+        )
+
+    assert _adaptive(0) == (1, 1)
+    assert _adaptive(500) == (7, 1)
+    assert _adaptive(10**9) == (64, 16)
+    # ... and what it records for the 500-doc sf0.001 corpus
+    whole = str(tmp_path / "jidx_500")
+    docs = load_table(spark, "documents", SF_DIR).select("doc_id", "text")
+    assert docs.count() == 500
+    _build(spark, whole, docs)
+    with open(f"{whole}/{JACCARD_INDEX_META}") as f:
+        meta = json.load(f)
+    assert (meta["sh_buckets"], meta["id_buckets"]) == (7, 1)
 
     seed, ext, batch = _splits(spark)  # 166/167/167 docs at sf0.001
     path = str(tmp_path / "jidx_adaptive")

@@ -168,11 +168,11 @@ def test_text_index_extend_exact_and_idempotent(spark, tmp_path):
 
 def test_text_index_compact_preserves_answers(spark, tmp_path):
     from cdc_algorithms_spark.operators.retrieval import (
-        _text_delta_dirs,
         compact_text_index,
         extend_text_index,
         write_text_index,
     )
+    from cdc_algorithms_spark.operators.storeio import live_epoch_dirs
 
     docs = _docs(spark)
     qt = query_terms(spark, QUERIES)
@@ -183,8 +183,8 @@ def test_text_index_compact_preserves_answers(spark, tmp_path):
     )
     before = sorted(bm25_topk_indexed(spark, path, qt, k=10, buckets=8).collect())
     compact_text_index(spark, path)
-    assert _text_delta_dirs(spark, path, "postings") == []
-    assert _text_delta_dirs(spark, path, "meta") == []
+    assert live_epoch_dirs(spark, f"{path}/postings_delta", f"{path}/postings") == []
+    assert live_epoch_dirs(spark, f"{path}/meta_delta", f"{path}/meta") == []
     after = sorted(bm25_topk_indexed(spark, path, qt, k=10, buckets=8).collect())
     assert after == before
     # compacting a store with no deltas is a no-op
@@ -204,11 +204,11 @@ def test_text_index_compact_crash_window_no_double_count(spark, tmp_path):
     import shutil
 
     from cdc_algorithms_spark.operators.retrieval import (
-        _text_delta_dirs,
         compact_text_index,
         extend_text_index,
         write_text_index,
     )
+    from cdc_algorithms_spark.operators.storeio import live_epoch_dirs
 
     docs = _docs(spark)
     qt = query_terms(spark, QUERIES)
@@ -226,8 +226,8 @@ def test_text_index_compact_crash_window_no_double_count(spark, tmp_path):
         shutil.move(f"{path}/{kind}_crash", f"{path}/{kind}_delta")
     # the manifest marks epoch_0 folded: probes and a re-compact see no
     # live deltas, and answers stay exact
-    assert _text_delta_dirs(spark, path, "postings") == []
-    assert _text_delta_dirs(spark, path, "meta") == []
+    assert live_epoch_dirs(spark, f"{path}/postings_delta", f"{path}/postings") == []
+    assert live_epoch_dirs(spark, f"{path}/meta_delta", f"{path}/meta") == []
     after = sorted(bm25_topk_indexed(spark, path, qt, k=10, buckets=8).collect())
     assert after == before
     compact_text_index(spark, path)  # pure GC; still exact

@@ -1019,7 +1019,7 @@ def test_compact_epoch_store_folds_without_changing_answers(spark, tmp_path):
         near_dup_batch,
         run_streaming_near_dup_index,
     )
-    from cdc_algorithms_spark.streaming.sync import compact_epoch_store
+    from cdc_algorithms_spark.operators.storeio import compact_epoch_store
 
     docs = load_table(spark, "documents", SF_DIR).select("doc_id", "text")
     corpus = docs.where(F.col("doc_id") % 3 != 0)
