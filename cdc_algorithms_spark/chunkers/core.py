@@ -25,6 +25,13 @@ from cdc_algorithms_spark.chunkers.params import AeParams, FastCdcParams, RabinP
 _U32 = (1 << 32) - 1
 _U64 = (1 << 64) - 1
 
+XXH64_SEED = 42  # Spark's xxhash64 seed: chunk ids equal F.xxhash64
+_XXH_P1 = 11400714785074694791
+_XXH_P2 = 14029467366897019727
+_XXH_P3 = 1609587929392839161
+_XXH_P4 = 9650029242287828579
+_XXH_P5 = 2870177450012600261
+
 
 def fixed_cuts(n: int, chunk_size: int) -> list[int]:
     """Fixed-size boundaries (fixed.rs:20-52): every chunk_size bytes."""
@@ -145,3 +152,59 @@ def fastcdc_cuts_py(
     if final and n > 0 and (not cuts or cuts[-1] != n - 1):
         cuts.append(n - 1)
     return cuts
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _U64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return (_rotl64((acc + lane * _XXH_P2) & _U64, 31) * _XXH_P1) & _U64
+
+
+def xxh64_py(data: bytes) -> int:
+    """XXH64 (the xxHash spec, = Spark's ``XXH64.hashUnsafeBytes``) as a
+    signed 64-bit int — the value ``F.xxhash64`` gives the same bytes.
+    The reference for the compiled ``xxh64`` in :mod:`.native`."""
+    seed = XXH64_SEED
+    n = len(data)
+    p = 0
+    if n >= 32:
+        v = [
+            (seed + _XXH_P1 + _XXH_P2) & _U64,
+            (seed + _XXH_P2) & _U64,
+            seed & _U64,
+            (seed - _XXH_P1) & _U64,
+        ]
+        while p + 32 <= n:
+            for i in range(4):
+                lane = int.from_bytes(data[p + 8 * i : p + 8 * i + 8], "little")
+                v[i] = _xxh_round(v[i], lane)
+            p += 32
+        h = (
+            _rotl64(v[0], 1) + _rotl64(v[1], 7)
+            + _rotl64(v[2], 12) + _rotl64(v[3], 18)
+        ) & _U64
+        for lane in v:
+            h = ((h ^ _xxh_round(0, lane)) * _XXH_P1 + _XXH_P4) & _U64
+    else:
+        h = (seed + _XXH_P5) & _U64
+    h = (h + n) & _U64
+    while p + 8 <= n:
+        h ^= _xxh_round(0, int.from_bytes(data[p : p + 8], "little"))
+        h = (_rotl64(h, 27) * _XXH_P1 + _XXH_P4) & _U64
+        p += 8
+    if p + 4 <= n:
+        h ^= (int.from_bytes(data[p : p + 4], "little") * _XXH_P1) & _U64
+        h = (_rotl64(h, 23) * _XXH_P2 + _XXH_P3) & _U64
+        p += 4
+    while p < n:
+        h ^= (data[p] * _XXH_P5) & _U64
+        h = (_rotl64(h, 11) * _XXH_P1) & _U64
+        p += 1
+    h ^= h >> 33
+    h = (h * _XXH_P2) & _U64
+    h ^= h >> 29
+    h = (h * _XXH_P3) & _U64
+    h ^= h >> 32
+    return h - (1 << 64) if h >= (1 << 63) else h

@@ -10,6 +10,13 @@ dir, exotic platform); :mod:`.fast` then runs the reference loops in
 :mod:`.core`, and this module logs one warning per process carrying the
 compiler error, since that fallback is a few MB/s.
 
+The same source carries XXH64, Spark's ``xxhash64``, the one 64-bit
+chunk identity of the engine: ``bounds_hashed_native`` returns a
+segment's cuts and the hash of every span between them in one call, so
+no per-chunk Python loop sits on the scan path. Equality with
+:func:`.core.xxh64_py` is pinned in tests/test_property_chunkers.py,
+with ``F.xxhash64`` in tests/test_distributed.py.
+
 Cluster posture: every executor host compiles its own cached copy on
 first import — nothing is shipped, no build step exists, heterogeneous
 nodes each get their own binary. Equality with :mod:`.core` is pinned
@@ -28,8 +35,16 @@ import tempfile
 
 import numpy as np
 
+from cdc_algorithms_spark.chunkers.core import XXH64_SEED
+
 _C_SRC = r"""
 #include <stdint.h>
+
+/* The Rabin word loads and XXH64's lanes read bytes little-endian; a
+   big-endian host fails this compile and runs the reference loops. */
+#if defined(__BYTE_ORDER__) && __BYTE_ORDER__ == __ORDER_BIG_ENDIAN__
+#error "the chunk kernels assume a little-endian host"
+#endif
 
 long fastcdc_scan(const uint8_t *data, long n, const uint64_t *gear,
                   long min_size, long expected_size, long max_size,
@@ -210,6 +225,91 @@ long rabin_scan(const uint8_t *data, long n, const uint32_t *pow_table,
         out[ncuts++] = n - 1;
     return ncuts;
 }
+
+/* XXH64 (the xxHash spec), bit-identical to Spark's
+   XXH64.hashUnsafeBytes, so a chunk hashed here equals F.xxhash64 of
+   the same bytes at the same seed. */
+#define XXH_P1 11400714785074694791ULL
+#define XXH_P2 14029467366897019727ULL
+#define XXH_P3 1609587929392839161ULL
+#define XXH_P4 9650029242287828579ULL
+#define XXH_P5 2870177450012600261ULL
+
+static inline uint64_t xxh_rotl(uint64_t x, int r) {
+    return (x << r) | (x >> (64 - r));
+}
+
+static inline uint64_t xxh_round(uint64_t acc, uint64_t lane) {
+    acc += lane * XXH_P2;
+    return xxh_rotl(acc, 31) * XXH_P1;
+}
+
+static inline uint64_t xxh_merge(uint64_t h, uint64_t v) {
+    h ^= xxh_round(0, v);
+    return h * XXH_P1 + XXH_P4;
+}
+
+static inline uint64_t xxh_read64(const uint8_t *p) {
+    uint64_t v;
+    __builtin_memcpy(&v, p, 8);
+    return v;
+}
+
+uint64_t xxh64(const uint8_t *p, long len, uint64_t seed) {
+    const uint8_t *end = p + len;
+    uint64_t h;
+    if (len >= 32) {
+        const uint8_t *limit = end - 32;
+        uint64_t v1 = seed + XXH_P1 + XXH_P2, v2 = seed + XXH_P2;
+        uint64_t v3 = seed, v4 = seed - XXH_P1;
+        do {
+            v1 = xxh_round(v1, xxh_read64(p));
+            v2 = xxh_round(v2, xxh_read64(p + 8));
+            v3 = xxh_round(v3, xxh_read64(p + 16));
+            v4 = xxh_round(v4, xxh_read64(p + 24));
+            p += 32;
+        } while (p <= limit);
+        h = xxh_rotl(v1, 1) + xxh_rotl(v2, 7) + xxh_rotl(v3, 12) +
+            xxh_rotl(v4, 18);
+        h = xxh_merge(h, v1);
+        h = xxh_merge(h, v2);
+        h = xxh_merge(h, v3);
+        h = xxh_merge(h, v4);
+    } else {
+        h = seed + XXH_P5;
+    }
+    h += (uint64_t)len;
+    for (; p + 8 <= end; p += 8) {
+        h ^= xxh_round(0, xxh_read64(p));
+        h = xxh_rotl(h, 27) * XXH_P1 + XXH_P4;
+    }
+    if (p + 4 <= end) {
+        uint32_t w;
+        __builtin_memcpy(&w, p, 4);
+        h ^= (uint64_t)w * XXH_P1;
+        h = xxh_rotl(h, 23) * XXH_P2 + XXH_P3;
+        p += 4;
+    }
+    for (; p < end; p++) {
+        h ^= (uint64_t)(*p) * XXH_P5;
+        h = xxh_rotl(h, 11) * XXH_P1;
+    }
+    h ^= h >> 33;
+    h *= XXH_P2;
+    h ^= h >> 29;
+    h *= XXH_P3;
+    h ^= h >> 32;
+    return h;
+}
+
+/* out[i] = XXH64 of the span (cuts[i], cuts[i+1]] — the chunk between
+   consecutive cuts; ncuts - 1 hashes. */
+void span_hashes(const uint8_t *data, const long *cuts, long ncuts,
+                 uint64_t seed, int64_t *out) {
+    for (long i = 0; i + 1 < ncuts; i++)
+        out[i] = (int64_t)xxh64(data + cuts[i] + 1, cuts[i + 1] - cuts[i],
+                                seed);
+}
 """
 
 _lib: ctypes.CDLL | bool | None = None  # None = unprobed, False = unavailable
@@ -276,6 +376,13 @@ def _load() -> ctypes.CDLL | None:
             ctypes.c_long, ctypes.c_long, ctypes.c_long,
             ctypes.c_int, lp,
         ]
+        lib.xxh64.restype = ctypes.c_uint64
+        lib.xxh64.argtypes = [u8p, ctypes.c_long, ctypes.c_uint64]
+        lib.span_hashes.restype = None
+        lib.span_hashes.argtypes = [
+            u8p, lp, ctypes.c_long, ctypes.c_uint64,
+            ctypes.POINTER(ctypes.c_int64),
+        ]
         _lib = lib
     except Exception as exc:  # no cc / sandboxed tmp / exotic platform
         detail = getattr(exc, "stderr", None) or exc  # cc's own message
@@ -286,71 +393,56 @@ def _load() -> ctypes.CDLL | None:
     return _lib or None
 
 
-def fastcdc_scan_native(arr: np.ndarray, p, final: bool) -> list[int] | None:
-    """Run the compiled scan, or return None when unavailable so the
-    caller falls back to the reference loop. ``arr`` is the uint8
-    view fast.py already builds; the gear table converts once per call
-    (256 entries — negligible next to the scan)."""
-    lib = _load()
-    if lib is None:
-        return None
-    n = arr.size
-    if n == 0:
-        return []
+def _ptr(arr: np.ndarray, ctype):
+    # the caller holds ``arr`` for the whole native call: a pointer into
+    # a temporary (e.g. ``np.frombuffer(bytes(x))`` inline) would dangle
+    return arr.ctypes.data_as(ctypes.POINTER(ctype))
+
+
+def _fastcdc_scan(lib, arr: np.ndarray, p, final: bool) -> np.ndarray:
+    # the gear table converts once per call (256 entries — negligible
+    # next to the scan)
     gear = np.asarray(p.gear, dtype=np.uint64)
-    out = np.empty(n // (p.min_size + 1) + 2, dtype=np.int64)
+    out = np.empty(arr.size // (p.min_size + 1) + 2, dtype=np.int64)
     ncuts = lib.fastcdc_scan(
-        arr.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
-        n,
-        gear.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64)),
+        _ptr(arr, ctypes.c_uint8),
+        arr.size,
+        _ptr(gear, ctypes.c_uint64),
         p.min_size,
         p.expected_size,
         p.max_size,
         p.short_mask,
         p.long_mask,
         1 if final else 0,
-        out.ctypes.data_as(ctypes.POINTER(ctypes.c_long)),
+        _ptr(out, ctypes.c_long),
     )
-    return out[:ncuts].tolist()
+    return out[:ncuts]
 
 
-def ae_scan_native(arr: np.ndarray, p, final: bool) -> list[int] | None:
-    lib = _load()
-    if lib is None:
-        return None
-    n = arr.size
-    if n == 0:
-        return []
+def _ae_scan(lib, arr: np.ndarray, p, final: bool) -> np.ndarray:
     # every AE chunk is at least window_size + 1 bytes (the first
     # possible cut is max_pos=0 + window_size)
-    out = np.empty(n // (p.window_size + 1) + 2, dtype=np.int64)
+    out = np.empty(arr.size // (p.window_size + 1) + 2, dtype=np.int64)
     ncuts = lib.ae_scan(
-        arr.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
-        n,
+        _ptr(arr, ctypes.c_uint8),
+        arr.size,
         p.window_size,
         1 if final else 0,
-        out.ctypes.data_as(ctypes.POINTER(ctypes.c_long)),
+        _ptr(out, ctypes.c_long),
     )
-    return out[:ncuts].tolist()
+    return out[:ncuts]
 
 
-def rabin_scan_native(arr: np.ndarray, p, final: bool) -> list[int] | None:
-    lib = _load()
-    if lib is None:
-        return None
-    n = arr.size
-    if n == 0:
-        return []
+def _rabin_scan(lib, arr: np.ndarray, p, final: bool) -> np.ndarray:
     # earliest hash cut at local = max(window_size, min_size); earliest
     # force cut at local = max_size — so chunks can't be shorter than
     # min(max(window_size, min_size), max_size) + 1 bytes
     shortest = min(max(p.window_size, p.min_size), p.max_size) + 1
-    out = np.empty(n // shortest + 2, dtype=np.int64)
-    pow_table = p.pow_table  # uint32[256]
+    out = np.empty(arr.size // shortest + 2, dtype=np.int64)
     ncuts = lib.rabin_scan(
-        arr.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
-        n,
-        pow_table.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32)),
+        _ptr(arr, ctypes.c_uint8),
+        arr.size,
+        _ptr(p.pow_table, ctypes.c_uint32),  # uint32[256]
         p.alpha & 0xFFFFFFFF,
         p.seed & 0xFFFFFFFF,
         p.mask & 0xFFFFFFFF,
@@ -358,6 +450,67 @@ def rabin_scan_native(arr: np.ndarray, p, final: bool) -> list[int] | None:
         p.max_size,
         p.window_size,
         1 if final else 0,
-        out.ctypes.data_as(ctypes.POINTER(ctypes.c_long)),
+        _ptr(out, ctypes.c_long),
     )
-    return out[:ncuts].tolist()
+    return out[:ncuts]
+
+
+_SCANS = {"ae": _ae_scan, "rabin": _rabin_scan, "fastcdc": _fastcdc_scan}
+
+
+def _scan_list(algo: str, arr: np.ndarray, p, final: bool) -> list[int] | None:
+    """Run the compiled scan, or return None when unavailable so the
+    caller falls back to the reference loop. ``arr`` is the uint8 view
+    fast.py already builds."""
+    lib = _load()
+    if lib is None:
+        return None
+    if arr.size == 0:
+        return []
+    return _SCANS[algo](lib, arr, p, final).tolist()
+
+
+def fastcdc_scan_native(arr: np.ndarray, p, final: bool) -> list[int] | None:
+    return _scan_list("fastcdc", arr, p, final)
+
+
+def ae_scan_native(arr: np.ndarray, p, final: bool) -> list[int] | None:
+    return _scan_list("ae", arr, p, final)
+
+
+def rabin_scan_native(arr: np.ndarray, p, final: bool) -> list[int] | None:
+    return _scan_list("rabin", arr, p, final)
+
+
+def bounds_hashed_native(
+    algo: str, arr: np.ndarray, p
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """The ``final=False`` cuts of ``arr`` and, in the same pass over the
+    Python boundary, the XXH64 at Spark's seed of every span between
+    consecutive cuts: ``hashes[i]`` covers ``arr[cuts[i] + 1 :
+    cuts[i + 1] + 1]``. Both int64 arrays; None when no kernel."""
+    lib = _load()
+    if lib is None:
+        return None
+    if arr.size == 0:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    cuts = _SCANS[algo](lib, arr, p, False)
+    hashes = np.empty(max(cuts.size - 1, 0), dtype=np.int64)
+    lib.span_hashes(
+        _ptr(arr, ctypes.c_uint8),
+        _ptr(cuts, ctypes.c_long),
+        cuts.size,
+        XXH64_SEED,
+        _ptr(hashes, ctypes.c_int64),
+    )
+    return cuts, hashes
+
+
+def xxh64_native(arr: np.ndarray) -> int | None:
+    """XXH64 of a uint8 buffer at Spark's seed, as a signed 64-bit int
+    (``F.xxhash64``'s value), or None when no kernel."""
+    lib = _load()
+    if lib is None:
+        return None
+    h = lib.xxh64(_ptr(arr, ctypes.c_uint8), arr.size, XXH64_SEED)
+    return h - (1 << 64) if h >= (1 << 63) else h

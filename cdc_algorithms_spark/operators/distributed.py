@@ -14,13 +14,15 @@ carries ``payload = blob[left-overlap .. right)``; the compiled scanner
 emits cut positions, trimmed to the segment's owned range ``[left,
 right)`` so every cut is emitted exactly once (the reference instead
 re-emits warm-up cuts and relies on the merge to drop them,
-ae.rs:36-47). The task fingerprints every chunk whose span the seam
-merge cannot change — consecutive cuts from one scan are ≥ the merge
-spacing apart, so only a segment's first two owned cuts are
-merge-uncertain — shipping 24 bytes per chunk instead of content, and
-additionally ships the raw bytes of the few merge-uncertain spans
-(head up to the 2nd owned cut, tail after the last owned cut — ~1% of
-the corpus) as ``piece`` rows, plus the blob-final sentinel boundary
+ae.rs:36-47). The same kernel call hashes every span between its cuts
+(XXH64, = Spark's ``xxhash64``), and the task keeps the hash of every
+chunk whose span the seam merge cannot change — consecutive cuts from
+one scan are ≥ the merge spacing apart, so only a segment's first two
+owned cuts are merge-uncertain — shipping 24 bytes per chunk instead
+of content, sliced from the kernel's arrays with no per-chunk Python
+loop. It additionally ships the raw bytes of the few merge-uncertain
+spans (head up to the 2nd owned cut, tail after the last owned cut —
+~1% of the corpus) as ``piece`` rows, plus the blob-final sentinel boundary
 from the task owning the last segment. Only this mixed output is
 persisted; the corpus itself is read exactly once and never cached (an
 earlier design persisted the whole segment table — a corpus-sized
@@ -44,9 +46,10 @@ Phase C — seam-chunk reassembly, for the few spans the merge owns
 (first/second owned cuts per segment + the final chunk): those
 range-join against the Phase-A piece rows, pieces are sliced with
 ``substring`` on binary, reassembled with ``array_sort`` +
-``aggregate``/``concat``, and fingerprinted with the same blake2b-64
-family as Phase A; the global per-blob ``chunk_idx`` is then a
-distributed ``row_number`` over offsets. Chunk CONTENT therefore never
+``aggregate``/``concat``, and fingerprinted in the JVM with
+``F.xxhash64`` — the XXH64 the Phase-A kernel computes, so a chunk's
+identity never depends on which phase hashed it; the global per-blob
+``chunk_idx`` is then a distributed ``row_number`` over offsets. Chunk CONTENT therefore never
 shuffles and the source is never re-read — at 100 TB the dominant
 costs of the naive design (a second full-corpus shuffle, a
 corpus-sized cache, a per-blob merge task) all disappear; this
@@ -60,13 +63,14 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cdc_algorithms_spark.chunkers.fast import (
-    ae_bounds,
-    fastcdc_bounds,
-    rabin_bounds,
+    ae_bounds_hashed,
+    fastcdc_bounds_hashed,
+    rabin_bounds_hashed,
 )
 from cdc_algorithms_spark.chunkers.params import (
     AeParams,
@@ -75,59 +79,11 @@ from cdc_algorithms_spark.chunkers.params import (
     make_params,
 )
 
-_BOUND_FNS = {"ae": ae_bounds, "rabin": rabin_bounds, "fastcdc": fastcdc_bounds}
-
-_H64_MOD = 1 << 64
-_H64_SIGN = 1 << 63
-
-
-def _h64(data) -> int:
-    """64-bit chunk fingerprint (blake2b-8, signed-long range).
-
-    One hash family for BOTH the scan-local fast path and the seam
-    reassembly path — chunk identity must not depend on which path
-    computed it. (The reference's DefaultHasher role, ae.rs:75-78;
-    xxhash64 isn't callable from Python, and hashing locally beats
-    shuffling content to the JVM's hash by orders of magnitude.)
-
-    Deliberately NOT promoted to ``F.xxhash64`` on the Phase C side:
-    that would be JVM-side for the O(seam-chunks) reassembled pieces,
-    but the scan-local path (which holds content only inside
-    mapInPandas) cannot compute Spark's xxhash64 without either a
-    pure-Python xxh64 (~100× slower than C blake2b per chunk on the
-    O(chunks) hot path) or emitting every chunk's bytes over Arrow just
-    to hash them. Split families would give a seam chunk and a
-    scan-local chunk with IDENTICAL content different hashes and
-    silently corrupt dedup accounting — cross-path equality is pinned
-    by tests/test_distributed.py::test_parallel_matches_single_segment_hashes.
-    The Python loop in ``_h64_series`` runs only over seam pieces
-    (O(segments), not O(chunks)); it is not a hot path.
-    """
-    import hashlib
-
-    v = int.from_bytes(hashlib.blake2b(bytes(data), digest_size=8).digest(), "big")
-    return v - _H64_MOD if v >= _H64_SIGN else v
-
-
-def _h64_series(col):
-    import pandas as pd
-
-    return pd.Series(
-        [None if b is None else _h64(b) for b in col], dtype="Int64"
-    )
-
-
-_H64_UDF_CACHE: list = []
-
-
-def _h64_udf(col):
-    # built lazily: pandas_udf construction needs an active SparkSession,
-    # which doesn't exist at import time
-    if not _H64_UDF_CACHE:
-        from pyspark.sql.functions import pandas_udf
-
-        _H64_UDF_CACHE.append(pandas_udf(_h64_series, "long"))
-    return _H64_UDF_CACHE[0](col)
+_BOUND_FNS = {
+    "ae": ae_bounds_hashed,
+    "rabin": rabin_bounds_hashed,
+    "fastcdc": fastcdc_bounds_hashed,
+}
 
 
 def _default_overlap(params) -> int:
@@ -144,6 +100,60 @@ def _merge_spacing(params) -> int:
     if isinstance(params, (AeParams, RabinParams)):
         return params.window_size
     return params.min_size
+
+
+def _read_range(path: str, start, end) -> bytes:
+    with open(path, "rb") as f:
+        f.seek(int(start))
+        return f.read(int(end) - int(start))
+
+
+def _scan_segment(
+    payload, left: int, right: int, scan_start: int, blob_len: int,
+    bound_fn, params,
+) -> tuple[tuple[np.ndarray, np.ndarray, np.ndarray], list[tuple]]:
+    """Phase A for one segment whose bytes ``payload`` start at
+    ``scan_start`` and whose owned range is ``[left, right)``.
+
+    Returns the done chunks as ``(offset, length, hash)`` arrays and the
+    few seam-cut and piece rows as ``(kind, a, b, piece)`` tuples (see
+    the kinds in :func:`chunk_segments`). The kernel hashes every span
+    between consecutive cuts in the same call that finds them, so a done
+    chunk's row is a slice of its arrays: no per-chunk Python work.
+    """
+    rel, hashes = bound_fn(payload, params)
+    cuts = rel + scan_start  # absolute cut offsets, ascending
+    # owned range: every cut is emitted by exactly one segment
+    lo, hi = (int(i) for i in np.searchsorted(cuts, (left, right)))
+    owned = cuts[lo:hi]
+    k = hi - lo
+    # merge-certain chunks (owned cuts j-1, j with j >= 2) bypass Phase
+    # B; hashes[i] covers (cuts[i], cuts[i + 1]]
+    offsets = owned[1:-1] + 1
+    done = (offsets, np.diff(owned[1:]), hashes[lo + 1 : lo + 1 + offsets.size])
+    # seam cut rows: a segment's first two owned cuts are rejectable /
+    # rebuildable (b=-2: "emit a chunk if accepted", hash resolved in
+    # Phase C); its last owned cut is kept-context for the next seam's
+    # decision (b=-3, never re-emitted as a chunk)
+    rows = [(0, int(c), -2, None) for c in owned[:2]]
+    if k >= 3:
+        rows.append((0, int(owned[-1]), -3, None))
+    if right == blob_len and not (k and owned[-1] == blob_len - 1):
+        rows.append((0, blob_len - 1, -2, None))  # blob-final sentinel
+    # piece rows: bytes the seam merge could reassign — head up to the
+    # 2nd owned cut and tail after the last, or the whole owned range
+    if k >= 2:
+        spans = [(left, int(owned[1]) + 1)]
+        if owned[-1] + 1 < right:
+            spans.append((int(owned[-1]) + 1, right))
+    else:
+        spans = [(left, right)]
+    view = memoryview(payload)
+    rows += [
+        (1, a, b, view[a - scan_start : b - scan_start].tobytes())
+        for a, b in spans
+    ]
+    return done, rows
 
 
 def segment_blob_df(
@@ -205,8 +215,9 @@ def parallel_chunk_blob(
     """Distributed CDC chunking of binary blobs.
 
     Returns ``(src_id, algo, chunk_idx, offset, length, hash)`` where
-    ``hash = blake2b64(chunk bytes)`` (the reference's DefaultHasher
-    role, ae.rs:75-78; see ``_h64``). See :func:`chunk_segments` for
+    ``hash = xxhash64(chunk bytes)`` (the reference's DefaultHasher
+    role, ae.rs:75-78), equal to ``F.xxhash64`` of the same bytes
+    anywhere in the engine. See :func:`chunk_segments` for
     the ``ordinals`` modes.
     """
     if overlap is None:
@@ -292,108 +303,62 @@ def chunk_segments(
         import pandas as pd
 
         for pdf in batches:
-            src_ids: list[int] = []
-            kinds: list[int] = []
-            a_vals: list[int] = []
-            b_vals: list[int] = []
-            blob_lens: list[int] = []
-            hashes: list[int] = []
-            pieces: list[object] = []
-
-            def emit(sid, kind, a, b, blob_len, h, piece):
-                src_ids.append(sid)
-                kinds.append(kind)
-                a_vals.append(a)
-                b_vals.append(b)
-                blob_lens.append(blob_len)
-                hashes.append(h)
-                pieces.append(piece)
-
             # Lazy segment tables (sources/segmented_files.py) carry a
             # ``path`` instead of ``payload``: this task range-reads its
             # own slice, so segment bytes are born in the worker that
             # chunks them — no payload shuffle, no extra Arrow hop.
             if "payload" in pdf.columns:
-                payload_iter = iter(pdf["payload"])
-
-                def get_payload(_row_i):
-                    return next(payload_iter)
-
+                payloads = iter(pdf["payload"])
             else:
-                paths = list(pdf["path"])
-                starts = list(pdf["scan_start"])
-                rights = list(pdf["right"])
-
-                def get_payload(row_i):
-                    with open(paths[row_i], "rb") as f:
-                        f.seek(int(starts[row_i]))
-                        return f.read(int(rights[row_i]) - int(starts[row_i]))
-
-            for row_i, (sid, left, right, scan_start, blob_len) in enumerate(
-                zip(
-                    pdf["src_id"], pdf["left"], pdf["right"],
-                    pdf["scan_start"], pdf["blob_len"],
+                payloads = map(
+                    _read_range, pdf["path"], pdf["scan_start"], pdf["right"]
                 )
+            # per segment: (src_id, blob_len, offsets, lengths, hashes)
+            done: list[tuple] = []
+            rows: list[tuple] = []  # seam-cut and piece rows
+            for payload, sid, left, right, scan_start, blob_len in zip(
+                payloads, pdf["src_id"], pdf["left"], pdf["right"],
+                pdf["scan_start"], pdf["blob_len"],
             ):
-                payload = get_payload(row_i)
-                sid, left, right = int(sid), int(left), int(right)
-                scan_start, blob_len = int(scan_start), int(blob_len)
-                view = memoryview(payload)
-                owned: list[int] = []  # relative cut positions in owned range
-                for rel in bound_fn(payload, params):
-                    cut = scan_start + rel
-                    if left <= cut < right:  # owned range: exactly-once emission
-                        owned.append(rel)
-                k = len(owned)
-                for j, rel in enumerate(owned):
-                    if j >= 2:
-                        prev_rel = owned[j - 1]
-                        # merge-certain chunk: bypasses Phase B entirely
-                        emit(
-                            sid, 2, scan_start + prev_rel + 1, rel - prev_rel,
-                            blob_len, _h64(view[prev_rel + 1 : rel + 1]), None,
-                        )
-                        if j == k - 1:
-                            # kept-context for the next seam's decision
-                            emit(sid, 0, scan_start + rel, -3, blob_len, 0, None)
-                    else:
-                        # rejectable / rebuildable seam cut (b=-2: "emit
-                        # a chunk if accepted"; hash resolved in Phase C)
-                        emit(sid, 0, scan_start + rel, -2, blob_len, 0, None)
-                if right == blob_len and not (
-                    owned and scan_start + owned[-1] == blob_len - 1
-                ):
-                    # blob-final sentinel boundary
-                    emit(sid, 0, blob_len - 1, -2, blob_len, 0, None)
-                # piece rows: bytes the seam merge could reassign
-                if k >= 2:
-                    head_to = scan_start + owned[1] + 1
-                    emit(
-                        sid, 1, left, head_to, blob_len, 0,
-                        view[left - scan_start : head_to - scan_start].tobytes(),
-                    )
-                    tail_from = scan_start + owned[-1] + 1
-                    if tail_from < right:
-                        emit(
-                            sid, 1, tail_from, right, blob_len, 0,
-                            view[tail_from - scan_start : right - scan_start].tobytes(),
-                        )
-                else:
-                    emit(
-                        sid, 1, left, right, blob_len, 0,
-                        view[left - scan_start : right - scan_start].tobytes(),
-                    )
-            yield pd.DataFrame(
-                {
-                    "src_id": pd.Series(src_ids, dtype="int64"),
-                    "kind": pd.Series(kinds, dtype="int32"),
-                    "a": pd.Series(a_vals, dtype="int64"),
-                    "b": pd.Series(b_vals, dtype="int64"),
-                    "blob_len": pd.Series(blob_lens, dtype="int64"),
-                    "hash": pd.Series(hashes, dtype="int64"),
-                    "piece": pd.Series(pieces, dtype="object"),
-                }
-            )
+                sid, blob_len = int(sid), int(blob_len)
+                d, r = _scan_segment(
+                    payload, int(left), int(right), int(scan_start), blob_len,
+                    bound_fn, params,
+                )
+                done.append((sid, blob_len, *d))
+                rows.extend(
+                    (sid, kind, a, b, blob_len, piece) for kind, a, b, piece in r
+                )
+            counts = [d[2].size for d in done]
+            if sum(counts):
+                yield pd.DataFrame(
+                    {
+                        "src_id": np.repeat(
+                            np.asarray([d[0] for d in done], np.int64), counts
+                        ),
+                        "kind": np.full(sum(counts), 2, dtype=np.int32),
+                        "a": np.concatenate([d[2] for d in done]),
+                        "b": np.concatenate([d[3] for d in done]),
+                        "blob_len": np.repeat(
+                            np.asarray([d[1] for d in done], np.int64), counts
+                        ),
+                        "hash": np.concatenate([d[4] for d in done]),
+                        "piece": None,
+                    }
+                )
+            if rows:
+                sids, kinds, a_vals, b_vals, blob_lens, pieces = zip(*rows)
+                yield pd.DataFrame(
+                    {
+                        "src_id": np.asarray(sids, dtype=np.int64),
+                        "kind": np.asarray(kinds, dtype=np.int32),
+                        "a": np.asarray(a_vals, dtype=np.int64),
+                        "b": np.asarray(b_vals, dtype=np.int64),
+                        "blob_len": np.asarray(blob_lens, dtype=np.int64),
+                        "hash": np.zeros(len(rows), dtype=np.int64),
+                        "piece": pd.Series(pieces, dtype="object"),
+                    }
+                )
 
     from pyspark.storagelevel import StorageLevel
 
@@ -487,7 +452,7 @@ def chunk_segments(
     rebuilt = (
         sliced.groupBy("src_id", "offset", "length")
         .agg(
-            _h64_udf(
+            F.xxhash64(
                 F.aggregate(
                     F.array_sort(F.collect_list(F.struct("p_from", "piece"))),
                     F.lit(b""),

@@ -16,7 +16,8 @@ Two store layouts live here.
   (:func:`compact_delta_store`); a store keeps only its schema, its
   partition column and its fold.
 * The ``seed`` + ``batch_<id>`` generation stores of the streaming
-  loops, folded by :func:`compact_epoch_store`.
+  loops, listed by :func:`live_generation_dirs` and folded by
+  :func:`compact_epoch_store`.
 
 Every epoch is read with the schema of its base (or the caller's
 schema, :func:`read_epochs`): an EMPTY epoch (a batch with no rows
@@ -347,6 +348,41 @@ def _is_generation(name: str) -> bool:
     return name == "seed" or name.startswith("batch_")
 
 
+def _generations(fs, root) -> list[tuple[str, str]]:
+    """``(name, path)`` of every ``seed`` / ``batch_<id>`` directory of
+    an epoch-subdir store, sorted by path. Only the names the streaming
+    loops write are returned: a stray ``_SUCCESS`` marker or temp
+    directory must not end up in a ``read.parquet`` call."""
+    return sorted(
+        (
+            (st.getPath().getName(), str(st.getPath()))
+            for st in fs.listStatus(root)
+            if st.isDirectory() and _is_generation(st.getPath().getName())
+        ),
+        key=lambda nd: nd[1],
+    )
+
+
+def live_generation_dirs(
+    spark: SparkSession, store_dir: str, exclude: str
+) -> list[str]:
+    """The live generations of an epoch-subdir store (``seed`` +
+    ``batch_<id>``), as sorted paths, minus the one named ``exclude``.
+    Listed through the Hadoop FileSystem API, so the streaming sinks
+    work against any Spark-supported store path (``hdfs://``,
+    ``s3a://``, local). Generations the store's manifest records as
+    folded by :func:`compact_epoch_store` are skipped — including a
+    folded ``batch_<id>`` re-created by an at-least-once replay AFTER
+    the compaction that subsumed it."""
+    folded = read_folded_epochs(spark, store_dir)
+    fs, root = _fs_and_path(spark, store_dir)
+    return [
+        path
+        for name, path in _generations(fs, root)
+        if name != exclude and name not in folded
+    ]
+
+
 def compact_epoch_store(spark: SparkSession, store_dir: str) -> int:
     """Fold every live generation of an epoch-SUBDIR store (the
     ``seed`` + ``batch_<id>`` layout of streaming/sync.py,
@@ -385,11 +421,7 @@ def compact_epoch_store(spark: SparkSession, store_dir: str) -> int:
     if not fs.exists(root):
         return 0
     folded = read_folded_epochs(spark, store_dir)
-    names = [
-        st.getPath().getName()
-        for st in fs.listStatus(root)
-        if st.isDirectory() and _is_generation(st.getPath().getName())
-    ]
+    names = [name for name, _ in _generations(fs, root)]
     live = [n for n in names if n not in folded]
     jvm = spark._jvm
     P = jvm.org.apache.hadoop.fs.Path

@@ -66,7 +66,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cdc_algorithms_spark.streaming.sync import _list_store_subdirs
+from cdc_algorithms_spark.operators.storeio import live_generation_dirs
 
 
 def ingest_pipeline_batch(
@@ -110,10 +110,10 @@ def ingest_pipeline_batch(
         raise ValueError(f"on_late must be 'quarantine' or 'error', got {on_late!r}")
     me = f"batch_{batch_id}"
     index = spark.read.parquet(
-        *_list_store_subdirs(spark, index_dir, exclude=me)
+        *live_generation_dirs(spark, index_dir, exclude=me)
     )
     corpus = spark.read.parquet(
-        *_list_store_subdirs(spark, docs_dir, exclude=me)
+        *live_generation_dirs(spark, docs_dir, exclude=me)
     )
     batch = batch.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -125,7 +125,7 @@ def ingest_pipeline_batch(
         # carried watermark: max settled id over previous epochs — one
         # row per epoch, so this read is #batches-bounded metadata, and
         # on replay the epoch's own row is path-excluded like any store
-        wm_dirs = _list_store_subdirs(spark, wm_dir, exclude=me)
+        wm_dirs = live_generation_dirs(spark, wm_dir, exclude=me)
         if wm_dirs:
             carried_wm = (
                 spark.read.parquet(*wm_dirs).agg(F.max("max_id")).first()[0]
@@ -176,7 +176,7 @@ def ingest_pipeline_batch(
 
     # carried per-source byte totals = what the manifest already holds
     # (state lives in the store: one ≤#sources-row aggregate per batch)
-    prev_dirs = _list_store_subdirs(spark, manifest_dir, exclude=me)
+    prev_dirs = live_generation_dirs(spark, manifest_dir, exclude=me)
     if prev_dirs:
         carried = (
             spark.read.parquet(*prev_dirs)

@@ -34,7 +34,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cdc_algorithms_spark.streaming.sync import _list_store_subdirs
+from cdc_algorithms_spark.operators.storeio import live_generation_dirs
 
 
 def media_phash_batch(
@@ -58,7 +58,7 @@ def media_phash_batch(
 
     me = f"batch_{batch_id}"
     index = spark.read.parquet(
-        *_list_store_subdirs(spark, fps_dir, exclude=me)
+        *live_generation_dirs(spark, fps_dir, exclude=me)
     )
     fps = media_fingerprints(batch_media).persist()
     try:

@@ -37,7 +37,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_algorithms_spark.streaming.sync import _list_store_subdirs
+from cdc_algorithms_spark.operators.storeio import live_generation_dirs
 
 
 def near_dup_batch(
@@ -67,10 +67,10 @@ def near_dup_batch(
 
     me = f"batch_{batch_id}"
     index = spark.read.parquet(
-        *_list_store_subdirs(spark, index_dir, exclude=me)
+        *live_generation_dirs(spark, index_dir, exclude=me)
     )
     corpus = spark.read.parquet(
-        *_list_store_subdirs(spark, docs_dir, exclude=me)
+        *live_generation_dirs(spark, docs_dir, exclude=me)
     )
     batch = batch.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
     pairs = incremental_minhash_pairs(

@@ -30,7 +30,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cdc_algorithms_spark.streaming.sync import _list_store_subdirs
+from cdc_algorithms_spark.operators.storeio import live_generation_dirs
 
 
 def run_streaming_quantile_sketch(
@@ -86,7 +86,7 @@ def run_streaming_quantile_sketch(
         shutil.rmtree(in_dir, ignore_errors=True)
 
     epochs = spark.read.parquet(
-        *_list_store_subdirs(spark, store_dir, exclude="")
+        *live_generation_dirs(spark, store_dir, exclude="")
     )
     return sketch_merge(epochs, group_cols)
 
@@ -144,7 +144,7 @@ def run_streaming_quantile_sketch_log(
         shutil.rmtree(in_dir, ignore_errors=True)
 
     epochs = spark.read.parquet(
-        *_list_store_subdirs(spark, store_dir, exclude="")
+        *live_generation_dirs(spark, store_dir, exclude="")
     )
     return sketch_merge(epochs, group_cols)
 

@@ -38,38 +38,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _list_store_subdirs(
-    spark: SparkSession, store_dir: str, exclude: str
-) -> list[str]:
-    """Enumerate the store's epoch subdirectories via the Hadoop
-    FileSystem API, so the sink works against any Spark-supported store
-    path (``hdfs://``, ``s3a://``, local) — ``os.listdir`` would couple
-    it to a driver-local filesystem. Only the names this module writes
-    (``seed``, ``batch_<id>``) are returned: a stray ``_SUCCESS`` marker
-    or temp directory in ``store_dir`` must not end up in a
-    ``read.parquet`` call. Generations recorded as folded by the
-    store's ``_folded_epochs.json`` manifest (written by
-    storeio.compact_epoch_store) are skipped — including a folded
-    ``batch_<id>`` re-created by an at-least-once replay AFTER the
-    compaction that subsumed it."""
-    from cdc_algorithms_spark.operators.storeio import read_folded_epochs
-
-    folded = read_folded_epochs(spark, store_dir)
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(store_dir)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = []
-    for st in fs.listStatus(path):
-        if not st.isDirectory():
-            continue
-        name = st.getPath().getName()
-        if name == exclude or name in folded or not (
-            name == "seed" or name.startswith("batch_")
-        ):
-            continue
-        out.append(st.getPath().toString())
-    return sorted(out)
+from cdc_algorithms_spark.operators.storeio import live_generation_dirs
 
 
 def sync_batch(
@@ -103,7 +72,7 @@ def sync_batch(
     # executor between the metrics and store writes) would re-read files
     # the overwrite just removed — FileNotFound in exactly the recovery
     # path this sink exists to survive.
-    prior = _list_store_subdirs(spark, store_dir, f"batch_{batch_id}")
+    prior = live_generation_dirs(spark, store_dir, f"batch_{batch_id}")
     store = spark.read.parquet(*prior)
     classified = per_key.join(store, "chunk_text", "left").persist()
     unseen = F.col("origin").isNull()

@@ -153,8 +153,6 @@ def test_slow_ramp_first_chunk_spans_many_segments(spark):
     first chunk spans multiple 4 KiB segments whose scans emit no owned
     cuts — every one ships its whole range as a piece and Phase C must
     reassemble the cross-segment chunk bit-exactly."""
-    import hashlib
-
     from cdc_algorithms_spark.chunkers.fast import ae_cuts as _ae_cuts
     from cdc_algorithms_spark.operators.distributed import parallel_chunk_blob
 
@@ -173,10 +171,11 @@ def test_slow_ramp_first_chunk_spans_many_segments(spark):
     assert sum(r["length"] for r in rows) == len(data)
     head = rows[0]
     assert (head["offset"], head["length"]) == (0, first_cut + 1)
-    v = int.from_bytes(
-        hashlib.blake2b(data[: first_cut + 1], digest_size=8).digest(), "big"
+    expect = (
+        spark.createDataFrame([(data[: first_cut + 1],)], "b binary")
+        .select(F.xxhash64("b"))
+        .first()[0]
     )
-    expect = v - (1 << 64) if v >= (1 << 63) else v
     assert head["hash"] == expect
     # merge invariant: interior boundaries ≥ window apart
     ends = [r["offset"] + r["length"] - 1 for r in rows]
@@ -255,4 +254,61 @@ def test_stats_route_plan_has_no_ordinal_machinery(spark):
         assert not P.window_partition_columns(df)
         assert P.broadcast_join_count(df) + P.sort_merge_join_count(df) <= 1
         assert P.exchange_count(df) <= 8
+    api.release_probe_frames()
+
+
+def test_kernel_xxh64_equals_spark_xxhash64(spark):
+    """The compiled XXH64 is Spark's ``xxhash64`` on binary, on every
+    branch length (empty, tails, lanes, stripes, long) — so a chunk hashed
+    in the scan kernel and one reassembled and hashed in the JVM share
+    one identity. Non-empty lengths matter: a kernel reading a dangling
+    buffer still hashes the empty input right."""
+    import numpy as np
+
+    from cdc_algorithms_spark.chunkers import native
+    from tests.test_property_chunkers import XXH_LENGTHS
+
+    rng = np.random.default_rng(3)
+    blobs = [rng.integers(0, 256, n, dtype=np.uint8).tobytes() for n in XXH_LENGTHS]
+    got = [native.xxh64_native(np.frombuffer(b, np.uint8)) for b in blobs]
+    if got[0] is None:
+        pytest.skip("no system compiler — the reference XXH64 is the only path")
+    rows = (
+        spark.createDataFrame(list(enumerate(blobs)), "i int, b binary")
+        .select("i", F.xxhash64("b").alias("h"))
+        .collect()
+    )
+    expect = [h for _, h in sorted((r["i"], r["h"]) for r in rows)]
+    assert got == expect
+
+
+def test_file_and_text_chunks_share_chunk_ids(spark, blob, tmp_path):
+    """Same bytes, same id: ``api.chunk_files`` (kernel-hashed done chunks,
+    JVM-hashed seam chunks) and ``api.chunk`` + ``with_chunk_hash`` over
+    the same ASCII text give every shared span the same hash."""
+    from cdc_algorithms_spark import api
+    from cdc_algorithms_spark.operators.chunking import with_chunk_hash
+
+    path = tmp_path / "corpus.txt"
+    path.write_bytes(blob)
+    files = {
+        (r["offset"], r["length"]): r["hash"]
+        for r in api.chunk_files(
+            spark, str(path), "ae", 320, segment_len=8192
+        ).collect()
+    }
+    docs = spark.createDataFrame(
+        [(0, blob.decode("ascii"))], "doc_id long, text string"
+    )
+    text = {
+        (r["offset"], r["length"]): r["hash"]
+        for r in with_chunk_hash(api.chunk(docs, "ae", 320)).collect()
+    }
+    common = set(files) & set(text)
+    # the head chunk ends at segment 0's first owned cut, so Phase C
+    # reassembles it; the chunks past a segment's 2nd cut are kernel-hashed
+    head = min(text)
+    assert head in common and len(common) >= 0.8 * len(text)
+    for span in common:
+        assert files[span] == text[span], f"hash mismatch at {span}"
     api.release_probe_frames()

@@ -157,3 +157,62 @@ def test_fallback_without_compiler_equals_core(monkeypatch, tmp_path, caplog):
     warnings = [r for r in caplog.records if r.name == native.__name__]
     assert len(warnings) == 1
     assert "no-cc-here" in warnings[0].getMessage()
+
+
+# the lengths that cross every XXH64 branch: empty, 1-byte tail, the
+# 4-byte word, the 8-byte lane, the 32-byte stripe, and a long input
+XXH_LENGTHS = [0, 1, 3, 4, 7, 8, 9, 31, 32, 33, 63, 64, 65, 16385]
+
+
+def test_xxh64_reference_equals_compiled():
+    """The pure-Python XXH64 (the no-compiler tier) equals the compiled
+    one on every branch length. Non-empty inputs matter: a kernel reading
+    a dangling buffer still hashes the empty input right."""
+    rng = np.random.default_rng(11)
+    for n in XXH_LENGTHS:
+        data = rng.integers(0, 256, n, dtype=np.uint8).tobytes()
+        got = native.xxh64_native(np.frombuffer(data, np.uint8))
+        if got is None:
+            pytest.skip("no system compiler — the reference XXH64 is the only path")
+        assert got == core.xxh64_py(data), n
+
+
+@pytest.mark.parametrize("algo", ALGOS)
+@settings(max_examples=60, deadline=None)
+@given(data=payload, expected=st.sampled_from([320, 512]))
+def test_bounds_hashed_equals_reference(algo, data, expected):
+    """``*_bounds_hashed`` returns the ``*_bounds`` cuts and, per span
+    between consecutive cuts, the reference XXH64 of its bytes."""
+    p = make_params(algo, expected, seed=1)
+    cuts, hashes = getattr(fast, f"{algo}_bounds_hashed")(data, p)
+    ref = _REF[algo](data, p, False)
+    assert cuts.dtype == hashes.dtype == np.int64
+    assert cuts.tolist() == ref
+    assert hashes.tolist() == [
+        core.xxh64_py(data[a + 1 : b + 1]) for a, b in zip(ref, ref[1:])
+    ]
+
+
+def test_bounds_hashed_fallback_without_compiler(monkeypatch, tmp_path):
+    """With no kernel, ``*_bounds_hashed`` runs the reference loops and
+    the pure-Python XXH64 and gives the compiled tier's arrays."""
+    rng = np.random.default_rng(5)
+    data = rng.integers(0, 256, 20000, dtype=np.uint8).tobytes()
+    compiled = {}
+    for algo in ALGOS:
+        p = make_params(algo, 512, seed=1)
+        compiled[algo] = getattr(fast, f"{algo}_bounds_hashed")(data, p)
+
+    def failing_cc(cmd, **_kw):
+        raise subprocess.CalledProcessError(1, cmd, stderr="cc: error: no-cc-here")
+
+    monkeypatch.setattr(native, "_lib", None)
+    monkeypatch.setattr(native.tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.setattr(native.subprocess, "run", failing_cc)
+    for algo in ALGOS:
+        p = make_params(algo, 512, seed=1)
+        cuts, hashes = getattr(fast, f"{algo}_bounds_hashed")(data, p)
+        assert len(cuts) > 2
+        assert cuts.tolist() == compiled[algo][0].tolist()
+        assert hashes.tolist() == compiled[algo][1].tolist()
+    assert native._load() is None

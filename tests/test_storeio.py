@@ -16,9 +16,9 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from cdc_algorithms_spark.operators.storeio import (
     compact_epoch_store,
+    live_generation_dirs as _list_store_subdirs,
     read_folded_epochs,
 )
-from cdc_algorithms_spark.streaming.sync import _list_store_subdirs
 
 
 def _write_epochs(spark, store, epochs):

@@ -590,10 +590,10 @@ def test_sync_store_listing_ignores_stray_entries(spark, tmp_path):
     must not reach spark.read.parquet (where a non-parquet entry would
     abort every subsequent batch)."""
     from cdc_algorithms_spark.operators.chunking import fixed_chunks
-    from cdc_algorithms_spark.streaming.sync import (
-        _list_store_subdirs,
-        sync_batch,
+    from cdc_algorithms_spark.operators.storeio import (
+        live_generation_dirs as _list_store_subdirs,
     )
+    from cdc_algorithms_spark.streaming.sync import sync_batch
 
     docs = load_table(spark, "documents", SF_DIR).limit(10)
     old = fixed_chunks(docs, 64)
@@ -1076,7 +1076,9 @@ def test_compact_epoch_store_folds_without_changing_answers(spark, tmp_path):
     # directory on disk, but every manifest-aware reader skips the dead
     # name — the store's effective row set is unchanged (it used to
     # double-count; pinned red before the storeio unification)
-    from cdc_algorithms_spark.streaming.sync import _list_store_subdirs
+    from cdc_algorithms_spark.operators.storeio import (
+        live_generation_dirs as _list_store_subdirs,
+    )
 
     live_before = _list_store_subdirs(spark, index_dir, "")
     n_before = spark.read.parquet(*live_before).count()
