@@ -451,8 +451,8 @@ def extend_ann_index(spark, path: str, batch: DataFrame, epoch: int, **kw) -> No
 
 def compact_ann_index(spark, path: str) -> None:
     """Fold a streamed ANN index's epoch deltas back into one base
-    codes store (operators/similarity.py::compact_pq_index) — probe
-    plans carry a scan branch per delta generation, so a standing
+    codes store (operators/similarity.py::compact_pq_index) — every
+    probe lists and opens each live epoch's files, so a standing
     pipeline runs this periodically, like any table OPTIMIZE. Probe
     results are bit-identical before and after."""
     from cdc_algorithms_spark.operators.similarity import compact_pq_index
@@ -914,16 +914,22 @@ def rebuild_ann_index(spark, path: str, vectors: DataFrame, **kw) -> None:
 
 
 def compact_stream_store(spark, store_dir: str) -> int:
-    """Fold an epoch-keyed foreachBatch store (band index / doc store /
-    manifests / watermarks) into one seed directory — the maintenance
-    verb that stops per-batch directories accumulating into
-    10k-branch scans. Run with readers quiesced (between micro-batches)
-    — routes to operators/storeio.py::compact_epoch_store, whose
+    """Fold the live ``seed_delta/epoch=<id>`` epochs of a foreachBatch
+    store (sync chunk store, band index, doc store, media fingerprints)
+    into its ``seed`` base, rewritten as flat parquet, and return the
+    number of epochs folded — the maintenance verb that stops per-batch
+    epochs piling up as files every read must list and open. Run with
+    readers quiesced (between micro-batches). A plain-union fold through
+    operators/storeio.py::compact_delta_store, whose
     ``_folded_epochs.json`` manifest makes an at-least-once replay of a
-    folded ``batch_<id>`` dead instead of double-counted."""
-    from cdc_algorithms_spark.operators.storeio import compact_epoch_store
+    folded epoch dead instead of double-counted; an epoch landing
+    mid-fold stays live. The store needs its seed: the seedless
+    watermark, manifest and sketch stores are never folded."""
+    from cdc_algorithms_spark.operators.storeio import compact_delta_store
 
-    return compact_epoch_store(spark, store_dir)
+    return compact_delta_store(spark, store_dir, {
+        "seed": lambda live, dest: live.write.mode("overwrite").parquet(dest),
+    })
 
 
 def realize_mixture(

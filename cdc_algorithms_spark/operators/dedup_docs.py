@@ -646,8 +646,8 @@ def extend_jaccard_index(
     """Add a batch of documents to a durable Jaccard index WITHOUT
     rebuilding it — the maintenance verb this store was missing (every
     other durable store here has one): the batch's sets/prefix rows land
-    as bucket-partitioned epoch deltas under ``sets_delta/epoch_<n>`` /
-    ``prefix_delta/epoch_<n>``, per-epoch OVERWRITE so foreachBatch's
+    as bucket-partitioned epoch deltas under ``sets_delta/epoch=<n>`` /
+    ``prefix_delta/epoch=<n>``, per-epoch OVERWRITE so foreachBatch's
     at-least-once replay is idempotent.
 
     Exactness: the frozen total order is ``(df_base(shingle) or 0,
@@ -726,7 +726,7 @@ def extend_jaccard_index(
                 batch_sets.withColumn(
                     "id_bucket", F.pmod(F.col("doc_id"), F.lit(id_buckets))
                 ),
-                epoch_dir(path, "sets", epoch),
+                epoch_dir(spark, path, "sets", epoch),
                 "id_bucket",
             )
             write_partitioned(
@@ -740,7 +740,7 @@ def extend_jaccard_index(
                     "shingle",
                     _sh_bucket("shingle", sh_buckets).alias("sh_bucket"),
                 ),
-                epoch_dir(path, "prefix", epoch),
+                epoch_dir(spark, path, "prefix", epoch),
                 "sh_bucket",
                 "shingle",
             )
@@ -909,7 +909,7 @@ def incremental_jaccard_pairs_indexed(
             F.col("id_bucket").isin(id_bs)
         ).drop("id_bucket")
     # inner joins only: a semi-join into the sets union would be pushed
-    # into every branch (base, each live epoch, batch), a stage apiece
+    # into every branch (base, live epochs, batch), a stage apiece
     sh_q = batch_sets.select(F.col("doc_id").alias("id_q"), F.col("sh").alias("sh_a"))
     sh_o = sets_index.select(F.col("doc_id").alias("id_o"), F.col("sh").alias("sh_b"))
     joined = candidates.join(sh_q, "id_q").join(

@@ -773,7 +773,7 @@ def zorder_compact_cells(spark, path: str, cells: list[int]) -> None:
     installed, and only then the parked copy dropped — so a crash
     between any two steps leaves the cell's data on disk (either
     installed or parked, never deleted-but-not-replaced), the same
-    park-then-install discipline as compact_epoch_store /
+    park-then-install discipline as storeio.install_staged_store /
     similarity.py::compact_pq_index. Metadata-only operations bounded
     by ``len(cells)``."""
     if not cells:

@@ -204,9 +204,9 @@ def bm25_topk(
 # similarity.py::extend_pq_index, restated for postings):
 #
 #     path/postings/bucket=<pmod(xxhash64(term), buckets)>/...   base
-#     path/postings_delta/epoch_<n>/bucket=.../                  extends
+#     path/postings_delta/epoch=<n>/bucket=.../                  extends
 #     path/meta/                    one row (n, sum_dl)          base
-#     path/meta_delta/epoch_<n>/    one row per extend epoch
+#     path/meta_delta/epoch=<n>/    one row per extend epoch
 #
 # Postings rows are (term, doc_id, tf, dl), unique on (doc_id, term)
 # across ALL generations (a doc arrives exactly once). Because the
@@ -260,8 +260,8 @@ def extend_text_index(
 ) -> None:
     """Add a batch of new documents to a durable text index WITHOUT
     touching resident postings: the batch's postings land bucket-
-    partitioned under ``postings_delta/epoch_<n>`` and its exact
-    (n, sum_dl) counts under ``meta_delta/epoch_<n>``. Per-epoch
+    partitioned under ``postings_delta/epoch=<n>`` and its exact
+    (n, sum_dl) counts under ``meta_delta/epoch=<n>``. Per-epoch
     OVERWRITE keeps foreachBatch's at-least-once replay idempotent.
     Cost tracks the batch (one tokenize + one hash exchange over the
     batch alone); probes stay exact across generations because df and
@@ -274,11 +274,11 @@ def extend_text_index(
     )
     write_partitioned(
         _postings_frame(batch_docs, buckets),
-        epoch_dir(path, "postings", epoch),
+        epoch_dir(spark, path, "postings", epoch),
         "bucket",
     )
     corpus_meta(batch_docs).write.mode("overwrite").parquet(
-        epoch_dir(path, "meta", epoch)
+        epoch_dir(spark, path, "meta", epoch)
     )
 
 

@@ -300,9 +300,9 @@ def _dsir_score(
 # from the folded counts at read time. Layout:
 #
 #     path/counts/bucket=<pmod(xxhash64(term), buckets)>/   base
-#     path/counts_delta/epoch_<n>/bucket=.../               extends
+#     path/counts_delta/epoch=<n>/bucket=.../               extends
 #     path/meta/                 one row (total_raw, total_tgt)  base
-#     path/meta_delta/epoch_<n>/ one row per extend epoch
+#     path/meta_delta/epoch=<n>/ one row per extend epoch
 #
 # Counts rows are (term, c_raw, c_tgt) — integer sums, so generations
 # fold exactly; a term may appear in several generations (grouped at
@@ -404,8 +404,8 @@ def extend_dsir_counts(
 ) -> None:
     """Fold a document batch into the standing unigram models WITHOUT
     touching resident counts: the batch's term counts land bucket-
-    partitioned under ``counts_delta/epoch_<n>``, its exact token
-    totals under ``meta_delta/epoch_<n>``. Cost tracks the batch (one
+    partitioned under ``counts_delta/epoch=<n>``, its exact token
+    totals under ``meta_delta/epoch=<n>``. Cost tracks the batch (one
     tokenize + one hash exchange over the batch alone); because counts
     are integers, the folded store equals a one-shot build over
     seed ∪ batches BIT-identically — same contract as the BM25 store,
@@ -423,12 +423,12 @@ def extend_dsir_counts(
     )
     write_partitioned(
         _dsir_term_frame(batch_docs, target_pred, text_col, buckets),
-        epoch_dir(path, "counts", epoch),
+        epoch_dir(spark, path, "counts", epoch),
         "bucket",
     )
     _dsir_meta_frame(batch_docs, target_pred, text_col).write.mode(
         "overwrite"
-    ).parquet(epoch_dir(path, "meta", epoch))
+    ).parquet(epoch_dir(spark, path, "meta", epoch))
 
 
 def compact_dsir_counts(spark, path: str) -> None:

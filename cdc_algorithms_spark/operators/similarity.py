@@ -914,7 +914,7 @@ def extend_pq_index(
     stores, streaming/near_dup.py): the persisted model is loaded (a
     few-KB row), the batch is encoded with it (nearest coarse cell +
     m-byte PQ code — pure map-side expressions, no Lloyd, no corpus
-    read), and the codes land in ``{path}/codes_delta/epoch_<n>``,
+    read), and the codes land in ``{path}/codes_delta/epoch=<n>``,
     cell-partitioned like the base store. Per-epoch OVERWRITE keeps
     foreachBatch's at-least-once replay idempotent. Because encoding
     depends only on the frozen model, the extended index is
@@ -932,17 +932,18 @@ def extend_pq_index(
     # keeps at-least-once replay idempotent for both)
     _write_codes_and_stats(
         batch, cents, books, sub, corpus_id, vec_col,
-        epoch_dir(path, "codes", epoch),
-        epoch_dir(path, "stats", epoch),
+        epoch_dir(spark, path, "codes", epoch),
+        epoch_dir(spark, path, "stats", epoch),
     )
 
 
 def compact_pq_index(spark, path: str) -> None:
     """Fold the epoch deltas back into one base codes store — the
     ANN-side OPTIMIZE (the layout analogue is zorder_compact_cells).
-    Probe plans carry one scan branch per delta generation, and the
-    measured cost of that is real (§19: 5 deltas ≈ 2.8× the one-file
-    probe wall at 250k vectors), so a standing pipeline compacts
+    Every live epoch's files are listed and opened by every probe, and
+    the measured cost of unfolded deltas is real (§19: 5 deltas ≈ 2.8×
+    the one-file probe wall at 250k vectors, measured when each epoch
+    was its own scan branch), so a standing pipeline compacts
     periodically. The merged store is staged to a sibling directory,
     then swapped in rename-first (old base parked at ``codes_old``
     until the new one is in place) so a crash mid-swap leaves a

@@ -1,28 +1,39 @@
 """Hadoop-FS policy shared by every durable epoch store.
 
-Two store layouts live here.
+One layout. A store is one or more KINDS, each a base at
+``{path}/{kind}`` plus ONE delta relation at ``{path}/{kind}_delta``,
+partitioned by ``epoch``: extend epoch ``n`` lands whole in
+``{kind}_delta/epoch=<n>/``. The stores:
 
-* The ``*_delta`` stores: the Jaccard prefix index
-  (operators/dedup_docs.py), the BM25 text index
-  (operators/retrieval.py), the DSIR count store
-  (operators/selection.py) and the PQ codes (operators/similarity.py).
-  Each is one or more KINDS, a ``{path}/{kind}`` base plus
-  ``{path}/{kind}_delta/epoch_<n>`` extend epochs. This module owns
-  their epoch naming (:func:`epoch_dir`), their live read
-  (:func:`read_live`), their partitioned writes
-  (:func:`write_partitioned`), their bucket meta
-  (:func:`adaptive_buckets`, :func:`resolve_buckets`, the JSON sidecars
-  of :func:`write_json`) and their compaction
-  (:func:`compact_delta_store`); a store keeps only its schema, its
-  partition column and its fold.
-* The ``seed`` + ``batch_<id>`` generation stores of the streaming
-  loops, listed by :func:`live_generation_dirs` and folded by
-  :func:`compact_epoch_store`.
+* the Jaccard prefix index (operators/dedup_docs.py), the BM25 text
+  index (operators/retrieval.py), the DSIR count store
+  (operators/selection.py), the PQ codes (operators/similarity.py) and
+  the corpus-build deltas (streaming/corpus_build.py);
+* the foreachBatch stores of the streaming loops (streaming/sync.py,
+  near_dup.py, ingest_pipeline.py, media_index.py, qsketch_stream.py),
+  whose single kind is ``seed``: the seed is the base and micro-batch
+  ``<id>`` lands in ``seed_delta/epoch=<id>``. The watermark, manifest
+  and sketch stores have no seed and read through :func:`read_epochs`.
 
-Every epoch is read with the schema of its base (or the caller's
-schema, :func:`read_epochs`): an EMPTY epoch (a batch with no rows
-still writes its directory, keeping replay idempotence uniform) has no
-data file to infer a schema from.
+This module owns the epoch naming (:func:`epoch_dir`), the live read
+(:func:`read_live`, :func:`read_epochs`), partitioned writes
+(:func:`write_partitioned`), the bucket meta (:func:`adaptive_buckets`,
+:func:`resolve_buckets`, the JSON sidecars of :func:`write_json`) and
+the one compaction (:func:`compact_delta_store`); a store keeps only
+its schema, its partition column and its fold.
+
+A live read is two scans at any number of epochs: the base, and the
+delta root filtered on the partition column ``epoch``. The epoch
+predicate (and any bucket predicate a probe adds) lands in the delta
+scan's ``PartitionFilters``, so dead and excluded epochs are pruned at
+planning and their files never enter the scan. Every epoch is read
+with the schema of its base (or the caller's schema,
+:func:`read_epochs`): an EMPTY epoch (a batch with no rows still
+writes its directory, keeping replay idempotence uniform) has no data
+file to infer a schema from. A store in a retired layout
+(``batch_<id>`` generations beside ``seed``, or ``epoch_<n>`` deltas)
+is refused with a ``ValueError`` naming the path; it never reads as
+fewer rows.
 
 The crash window the manifest closes: every compaction stages the
 merged store, installs it with a rename, then deletes the now-folded
@@ -32,16 +43,16 @@ epoch directories — the next probe would union them and double-count.
 
 Fix: the staged store carries ``_folded_epochs.json`` (a ``_``-prefixed
 file, invisible to Spark's parquet reader) listing every epoch directory
-it subsumes, written BEFORE the install rename. The install rename is
-therefore the single atomic operation that both publishes the folded
-rows and retires their deltas: :func:`live_epoch_dirs` consults the
-manifest of the CURRENT base and skips listed epochs, so post-install
-delta deletion is garbage collection, not correctness. A bonus: an
-at-least-once replay that re-writes an epoch AFTER a compaction folded
-it is now skipped too, instead of double-counting.
+it subsumes (``epoch=<n>``), written BEFORE the install rename. The
+install rename is therefore the single atomic operation that both
+publishes the folded rows and retires their deltas: :func:`live_epochs`
+consults the manifest of the CURRENT base and drops listed epochs, so
+post-install delta deletion is garbage collection, not correctness. A
+bonus: an at-least-once replay that re-writes an epoch AFTER a
+compaction folded it is dead too, instead of double-counting.
 
 Manifests accumulate (each compaction unions the previous manifest), so
-epoch names must never be REUSED for new data after a compaction — the
+epoch ids must never be REUSED for new data after a compaction — the
 existing monotonic-epoch contract of the ``extend_*`` writers
 (foreachBatch batch ids) already guarantees that.
 """
@@ -49,12 +60,11 @@ existing monotonic-epoch contract of the ``extend_*`` writers
 from __future__ import annotations
 
 import json
-import logging
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-
-_LOG = logging.getLogger(__name__)
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_folded_epochs.json"
 # Store-format marker (r12): writers record layout parameters a reader
@@ -154,74 +164,105 @@ def resolve_buckets(
     return tuple(out)
 
 
-def _subdirs(spark: SparkSession, root_str: str) -> list[tuple[str, str]]:
-    """``(name, path)`` of every directory under ``root_str``, sorted by
-    path; absent root → []."""
-    fs, root = _fs_and_path(spark, root_str)
+def _dir_names(fs, root) -> list[str]:
+    """Names of the directories directly under ``root``; absent → []."""
     if not fs.exists(root):
         return []
-    return sorted(
-        (
-            (st.getPath().getName(), str(st.getPath()))
-            for st in fs.listStatus(root)
-            if st.isDirectory()
-        ),
-        key=lambda nd: nd[1],
-    )
+    return [st.getPath().getName() for st in fs.listStatus(root) if st.isDirectory()]
 
 
-def live_epoch_dirs(
-    spark: SparkSession, delta_root: str, store_dir: str
-) -> list[str]:
-    """Epoch subdirectories under ``delta_root`` NOT already folded into
-    the base store at ``store_dir`` (per its manifest); sorted, absent
-    root → []."""
-    dirs = _subdirs(spark, delta_root)
-    if not dirs:
+def _epoch_ids(spark: SparkSession, path: str, kind: str) -> list[int]:
+    """Sorted ids of the ``epoch=<n>`` directories under
+    ``{path}/{kind}_delta``. A store in a retired layout fails loudly:
+    ``batch_<id>`` generations beside the base, or ``epoch_<n>``
+    deltas, would otherwise drop out of every read without a trace."""
+    fs, root = _fs_and_path(spark, path)
+    names = _dir_names(fs, root)
+    old = sorted(n for n in names if n.startswith("batch_"))
+    if old:
+        raise ValueError(
+            f"{path}/{old[0]}: a batch_<id> generation of the retired"
+            f" seed + batch_<id> layout; move each batch_<id> to"
+            f" {kind}_delta/epoch=<id> (seed is the {kind} base)"
+        )
+    if f"{kind}_delta" not in names:
         return []
-    folded = read_folded_epochs(spark, store_dir)
-    return [d for name, d in dirs if name not in folded]
+    names = _dir_names(fs, _fs_and_path(spark, f"{path}/{kind}_delta")[1])
+    old = sorted(n for n in names if n.startswith("epoch_"))
+    if old:
+        raise ValueError(
+            f"{path}/{kind}_delta/{old[0]}: an epoch of the retired"
+            f" epoch_<n> layout; rename each to epoch=<n>"
+        )
+    return sorted(int(n[6:]) for n in names if n.startswith("epoch="))
 
 
-def epoch_dir(path: str, kind: str, epoch: int) -> str:
-    """Where extend epoch ``epoch`` of ``kind`` lands. Writers overwrite
-    it whole, so an at-least-once replay of the epoch is idempotent."""
-    return f"{path}/{kind}_delta/epoch_{int(epoch)}"
+def epoch_dir(spark: SparkSession, path: str, kind: str, epoch: int) -> str:
+    """Where extend epoch ``epoch`` of ``kind`` lands: one ``epoch=<n>``
+    partition of the ``{path}/{kind}_delta`` relation. Writers
+    overwrite it whole, so an at-least-once replay of the epoch is
+    idempotent. Refuses a store in a retired layout."""
+    _epoch_ids(spark, path, kind)
+    return f"{path}/{kind}_delta/epoch={int(epoch)}"
 
 
-def _union(spark: SparkSession, base: DataFrame, dirs: list[str]) -> DataFrame:
-    for d in dirs:
-        base = base.unionByName(spark.read.schema(base.schema).parquet(d))
-    return base
+def live_epochs(
+    spark: SparkSession, path: str, kind: str, exclude: int | None = None
+) -> list[int]:
+    """Ids of the ``kind`` epochs the base's manifest has not folded,
+    minus ``exclude`` (the epoch a replaying batch is rewriting)."""
+    folded = read_folded_epochs(spark, f"{path}/{kind}")
+    return [
+        e for e in _epoch_ids(spark, path, kind)
+        if f"epoch={e}" not in folded and e != exclude
+    ]
 
 
-def read_live(spark: SparkSession, path: str, kind: str) -> DataFrame:
-    """The live ``kind`` of a ``*_delta`` store: the base
-    ``{path}/{kind}`` ∪ every epoch under ``{path}/{kind}_delta`` its
-    manifest has not folded, each read with the base's schema.
-    Partition columns survive the union, so a partition filter on the
-    result prunes every branch."""
-    return _union(
-        spark,
-        spark.read.parquet(f"{path}/{kind}"),
-        live_epoch_dirs(spark, f"{path}/{kind}_delta", f"{path}/{kind}"),
+def _delta(
+    spark: SparkSession, path: str, kind: str, schema, ids: list[int]
+) -> DataFrame:
+    """Epochs ``ids`` of ``kind`` as ONE scan of the delta root, read
+    with ``schema``: the ``epoch`` predicate is a partition filter, so
+    every other epoch's files are pruned at planning and never enter
+    the scan. An EMPTY epoch (a batch with no rows still writes its
+    directory, keeping replay idempotence uniform) has no data file to
+    infer a schema from, hence the explicit one."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not ids:
+        return spark.createDataFrame([], schema)
+    return (
+        spark.read.schema(StructType(schema.fields).add("epoch", "long"))
+        .parquet(f"{path}/{kind}_delta")
+        .where(F.col("epoch").isin(ids))
+        .drop("epoch")
     )
 
 
-def read_epochs(spark: SparkSession, path: str, kind: str, schema) -> DataFrame:
-    """Every epoch under ``{path}/{kind}_delta``, read with ``schema`` —
-    for the per-epoch artifacts that are never compacted (the
-    corpus-build deltas, the PQ drift stats), where liveness is just
-    existence. No epoch → an empty frame of ``schema``."""
-    return _union(
-        spark,
-        spark.createDataFrame([], schema),
-        [
-            d
-            for name, d in _subdirs(spark, f"{path}/{kind}_delta")
-            if name.startswith("epoch_")
-        ],
-    )
+def read_live(
+    spark: SparkSession, path: str, kind: str, exclude: int | None = None
+) -> DataFrame:
+    """The live ``kind`` of a store: the base ``{path}/{kind}`` ∪ its
+    live epochs (:func:`live_epochs`) read as one relation with the
+    base's schema — two scans at any number of live epochs. Partition
+    columns survive the union, so a partition filter on the result
+    prunes both."""
+    base = spark.read.parquet(f"{path}/{kind}")
+    ids = live_epochs(spark, path, kind, exclude)
+    if not ids:
+        return base
+    return base.unionByName(_delta(spark, path, kind, base.schema, ids))
+
+
+def read_epochs(
+    spark: SparkSession, path: str, kind: str, schema, exclude: int | None = None
+) -> DataFrame:
+    """The live epochs of ``kind`` alone, read with ``schema`` (a
+    ``StructType`` or DDL string) — for stores with no base (the
+    streaming watermark, manifest and sketch stores) and for per-epoch
+    artifacts read apart from their base (the corpus-build deltas, the
+    PQ drift stats). No live epoch → an empty frame of ``schema``."""
+    return _delta(spark, path, kind, schema, live_epochs(spark, path, kind, exclude))
 
 
 def write_partitioned(
@@ -241,35 +282,37 @@ def compact_delta_store(
     spark: SparkSession,
     path: str,
     folds: dict[str, Callable[[DataFrame, str], None]],
-) -> None:
+) -> int:
     """Fold every live epoch of each ``kind`` in ``folds`` back into its
-    base — the OPTIMIZE of a ``*_delta`` store. ``folds[kind](live,
-    dest)`` writes the staged store at ``dest`` from the live rows (a
-    pure union for immutable rows, a re-aggregation for counts). Each
-    staged store carries its manifest (the previous one ∪ the epochs
-    folded now), written BEFORE :func:`install_staged_store` swaps it
-    in, so a crash at any point leaves an exact, never-double-counting
-    store and an epoch a concurrent extend lands mid-compaction
-    survives as live. With no live epoch anywhere it only
-    garbage-collects crash-deferred folded epochs."""
-    dirs = {
-        kind: live_epoch_dirs(spark, f"{path}/{kind}_delta", f"{path}/{kind}")
-        for kind in folds
-    }
-    if not any(dirs.values()):
+    base — the OPTIMIZE of an epoch store — and return how many epochs
+    it folded. ``folds[kind](live, dest)`` writes the staged store at
+    ``dest`` from the live rows (a pure union for immutable rows, a
+    re-aggregation for counts). The live epochs are listed ONCE, and
+    the fold reads exactly those (``epoch IN <ids>``): an epoch a
+    concurrent extend lands mid-fold is not in the fold, not in the
+    manifest, and stays live for the next one — the delta root is
+    never moved. Each staged store carries its manifest (the previous
+    one ∪ the epochs folded now), written BEFORE
+    :func:`install_staged_store` swaps it in, so a crash at any point
+    leaves an exact, never-double-counting store. With no live epoch
+    anywhere it only garbage-collects crash-deferred folded epochs."""
+    ids = {kind: live_epochs(spark, path, kind) for kind in folds}
+    if not any(ids.values()):
         for kind in folds:
             gc_folded_epochs(spark, f"{path}/{kind}_delta", f"{path}/{kind}")
-        return
+        return 0
     for kind, fold in folds.items():
         base = f"{path}/{kind}"
-        fold(_union(spark, spark.read.parquet(base), dirs[kind]), f"{base}_tmp")
+        live = spark.read.parquet(base)
+        live = live.unionByName(_delta(spark, path, kind, live.schema, ids[kind]))
+        fold(live, f"{base}_tmp")
         write_folded_epochs(
             spark,
             f"{base}_tmp",
-            read_folded_epochs(spark, base)
-            | {d.rsplit("/", 1)[-1] for d in dirs[kind]},
+            read_folded_epochs(spark, base) | {f"epoch={e}" for e in ids[kind]},
         )
     install_staged_store(spark, path, list(folds))
+    return len(set().union(*ids.values()))
 
 
 def gc_folded_epochs(
@@ -322,9 +365,8 @@ def install_staged_store(
     raising, so only a crash or a double failure needs manual recovery.
     Every other crash point leaves a readable, never-double-counting
     store."""
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, _ = _fs_and_path(spark, path)
+    P = spark._jvm.org.apache.hadoop.fs.Path
     for kind in kinds:
         old = P(f"{path}/{kind}_old")
         fs.delete(old, True)
@@ -342,186 +384,3 @@ def install_staged_store(
             )
         gc_folded_epochs(spark, f"{path}/{kind}_delta", f"{path}/{kind}")
         fs.delete(old, True)
-
-
-def _is_generation(name: str) -> bool:
-    return name == "seed" or name.startswith("batch_")
-
-
-def _generations(fs, root) -> list[tuple[str, str]]:
-    """``(name, path)`` of every ``seed`` / ``batch_<id>`` directory of
-    an epoch-subdir store, sorted by path. Only the names the streaming
-    loops write are returned: a stray ``_SUCCESS`` marker or temp
-    directory must not end up in a ``read.parquet`` call."""
-    return sorted(
-        (
-            (st.getPath().getName(), str(st.getPath()))
-            for st in fs.listStatus(root)
-            if st.isDirectory() and _is_generation(st.getPath().getName())
-        ),
-        key=lambda nd: nd[1],
-    )
-
-
-def live_generation_dirs(
-    spark: SparkSession, store_dir: str, exclude: str
-) -> list[str]:
-    """The live generations of an epoch-subdir store (``seed`` +
-    ``batch_<id>``), as sorted paths, minus the one named ``exclude``.
-    Listed through the Hadoop FileSystem API, so the streaming sinks
-    work against any Spark-supported store path (``hdfs://``,
-    ``s3a://``, local). Generations the store's manifest records as
-    folded by :func:`compact_epoch_store` are skipped — including a
-    folded ``batch_<id>`` re-created by an at-least-once replay AFTER
-    the compaction that subsumed it."""
-    folded = read_folded_epochs(spark, store_dir)
-    fs, root = _fs_and_path(spark, store_dir)
-    return [
-        path
-        for name, path in _generations(fs, root)
-        if name != exclude and name not in folded
-    ]
-
-
-def compact_epoch_store(spark: SparkSession, store_dir: str) -> int:
-    """Fold every live generation of an epoch-SUBDIR store (the
-    ``seed`` + ``batch_<id>`` layout of streaming/sync.py,
-    streaming/near_dup.py, streaming/ingest_pipeline.py — distinct from
-    the ``*_delta`` layout of :func:`compact_delta_store`) into ONE
-    consolidated ``seed`` generation. Returns the number of generations
-    folded (0 when a store with ≤ 1 live generation only
-    garbage-collects dead subdirectories).
-
-    Same discipline as every other compaction here: the staged root
-    carries the manifest BEFORE the install rename, so the rename
-    atomically retires the folded generations; a crash between install
-    and cleanup leaves probes exact. The manifest also closes the
-    replay-after-compaction hole this layout uniquely has: an
-    at-least-once replay of ``batch_k`` AFTER ``batch_k`` was folded
-    into seed re-creates its subdirectory — without the manifest every
-    reader would double-count it; with it the name is dead forever
-    (epoch ids are never reused for NEW data — the foreachBatch batch-id
-    contract).
-
-    Concurrency contract: READERS must be quiesced (run between
-    micro-batches / with the stream's foreachBatch not mid-probe) — the
-    root-swap is the only single-commit-point publish a rename-based FS
-    offers, and between the park rename and the install rename the root
-    is briefly absent. Concurrent EXTENDS are survived: an epoch
-    directory a writer landed between this verb's listing and the park
-    rename travels with the parked root, is NOT in the new manifest, and
-    is rescued — renamed back into the installed root — before the
-    parked copy is deleted. If a writer recreates the root itself inside
-    the swap window, the staged store's children are installed INTO that
-    recreated root (a plain rename would nest the staged root inside it
-    on Hadoop FS semantics). A failed install rename rolls the parked
-    root back into place before raising, so only a double failure leaves
-    the store at ``__compact_old`` needing manual recovery."""
-    fs, root = _fs_and_path(spark, store_dir)
-    if not fs.exists(root):
-        return 0
-    folded = read_folded_epochs(spark, store_dir)
-    names = [name for name, _ in _generations(fs, root)]
-    live = [n for n in names if n not in folded]
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    if len(live) <= 1:
-        for n in names:
-            if n in folded:
-                fs.delete(P(f"{store_dir}/{n}"), True)
-        return 0
-    df = spark.read.parquet(*[f"{store_dir}/{n}" for n in sorted(live)])
-    tmp = f"{store_dir}__compact_tmp"
-    fs.delete(P(tmp), True)
-    df.write.mode("overwrite").parquet(f"{tmp}/seed")
-    new_manifest = (folded | set(live)) - {"seed"}
-    write_folded_epochs(spark, tmp, new_manifest)
-    old = f"{store_dir}__compact_old"
-    fs.delete(P(old), True)
-    if not fs.rename(root, P(old)):
-        raise IOError(f"could not park the live store at {old}")
-    if fs.exists(root):
-        # a concurrent writer recreated the root inside the swap window;
-        # rename(tmp, root) would NEST tmp under it — install the staged
-        # children into the recreated root instead (the writer's fresh
-        # epoch dirs are not in the manifest, so they stay live)
-        if not _try_rename(fs, P(f"{tmp}/seed"), P(f"{store_dir}/seed")):
-            _try_rename(fs, P(old), root)  # best-effort rollback
-            raise IOError(
-                f"could not install the compacted seed into the"
-                f" recreated root; live data parked at {old}"
-            )
-        fs.delete(P(f"{store_dir}/{MANIFEST}"), False)
-        if not _try_rename(
-            fs, P(f"{tmp}/{MANIFEST}"), P(f"{store_dir}/{MANIFEST}")
-        ):
-            # without the manifest a replay of a folded batch_<id> would
-            # go live again and double-count; keep tmp (it still holds
-            # the manifest) and fail loudly instead of GC-ing it
-            raise IOError(
-                f"installed the compacted seed but could not install its"
-                f" manifest; staged manifest left at {tmp}/{MANIFEST} —"
-                f" the store double-counts folded epochs until it is"
-                f" moved to {store_dir}/{MANIFEST}"
-            )
-        fs.delete(P(tmp), True)
-    elif not _try_rename(fs, P(tmp), root):
-        # roll the parked root back so probes keep working; only a
-        # double failure strands the store at __compact_old
-        if _try_rename(fs, P(old), root):
-            raise IOError(
-                "could not install the compacted store; the previous"
-                " store was rolled back into place"
-            )
-        raise IOError(
-            f"could not install the compacted store; live data parked"
-            f" at {old}"
-        )
-    # rescue concurrent-extend epochs that travelled with the parked
-    # root: any generation in the parked copy that is neither in the
-    # fold snapshot nor already folded arrived during the swap — rename
-    # it into the installed root (not in the manifest ⇒ still live).
-    # Each rescue rename is CHECKED: an unchecked rename followed by an
-    # unconditional delete of the parked root would silently destroy a
-    # live epoch when the rename fails (e.g. an at-least-once replay
-    # already re-created store_dir/<n> inside the swap window, where
-    # Hadoop rename-into-existing either returns false or nests src
-    # under dst). On any failure the entry stays parked and the root
-    # survives with a logged warning — never data loss.
-    oldp = P(old)
-    if fs.exists(oldp):
-        stranded: list[str] = []
-        for st in fs.listStatus(oldp):
-            n = st.getPath().getName()
-            if (
-                st.isDirectory()
-                and _is_generation(n)
-                and n not in names
-                and n not in new_manifest
-            ):
-                dst = P(f"{store_dir}/{n}")
-                if fs.exists(dst) or not _try_rename(fs, st.getPath(), dst):
-                    stranded.append(n)
-        if stranded:
-            # delete only what is provably garbage (generations whose
-            # rows are inside the installed seed); leave the stranded
-            # live epochs parked for manual inspection
-            for st in fs.listStatus(oldp):
-                n = st.getPath().getName()
-                if st.isDirectory() and _is_generation(n) and (
-                    n in names or n in new_manifest
-                ):
-                    fs.delete(st.getPath(), True)
-            _LOG.warning(
-                "compact_epoch_store: could not rescue concurrent-extend"
-                " epoch(s) %s into %s (destination exists or rename"
-                " failed); they remain parked under %s and are NOT"
-                " probed — reconcile by hand",
-                sorted(stranded),
-                store_dir,
-                old,
-            )
-        else:
-            fs.delete(oldp, True)
-    return len(live)
-

@@ -273,16 +273,18 @@ def streaming_near_dup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("streaming_near_dup_compacted", _INCR_JACCARD_ORACLE)
 def streaming_near_dup_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-dup pipeline with its store OPTIMIZE exercised
-    MID-STREAM: after the first micro-batch, storeio.compact_epoch_store
-    folds the band-index and doc-store generations into one ``seed``
-    each (manifest-guarded rename-first swap — the same crash-window
-    discipline as every durable store here), and the remaining batches
-    probe the FOLDED stores. The converged pair set must still equal
-    the one-shot exact join — compaction is storage maintenance, not
-    semantics — so this row shares streaming_near_dup_index's oracle
-    verbatim. Scale point: without periodic folding the per-batch probe
-    accumulates one scan branch per epoch forever (the §19 economics,
-    restated for the 4th durable store)."""
+    MID-STREAM: after the first micro-batch, api.compact_stream_store
+    folds the band-index and doc-store epochs into their ``seed``
+    (storeio.compact_delta_store: manifest-guarded rename-first swap —
+    the same crash-window discipline as every durable store here), and
+    the remaining batches probe the FOLDED stores. The converged pair
+    set must still equal the one-shot exact join — compaction is
+    storage maintenance, not semantics — so this row shares
+    streaming_near_dup_index's oracle verbatim. Scale point: the probe
+    reads each store as two scans at any epoch count, but without
+    periodic folding every epoch's files stay listed and opened by
+    every later probe (the §19 economics, restated for the 4th durable
+    store)."""
     import tempfile
 
     from cdc_algorithms_spark.queries_text import (

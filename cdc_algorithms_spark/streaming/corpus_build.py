@@ -39,15 +39,15 @@ Store layout (one root)::
 
     root/jaccard/...            durable Jaccard index (dedup_docs verbs)
     root/dsir/...               durable DSIR count store (selection verbs)
-    root/pairs_delta/epoch_<n>  (id_a, id_b, jaccard) pairs TOUCHING epoch n
-    root/doctf_delta/epoch_<n>  (doc_id, lang, dl, term, tf) of epoch n's
+    root/pairs_delta/epoch=<n>  (id_a, id_b, jaccard) pairs TOUCHING epoch n
+    root/doctf_delta/epoch=<n>  (doc_id, lang, dl, term, tf) of epoch n's
                                 quality survivors — fold-time scoring input
-    root/docs_delta/epoch_<n>   (doc_id, lang, n_chars) quality survivors
-    root/census_delta/epoch_<n> one row: epoch's raw input count
+    root/docs_delta/epoch=<n>   (doc_id, lang, n_chars) quality survivors
+    root/census_delta/epoch=<n> one row: epoch's raw input count
     root/_seed_epoch.json       which epoch seeded the two durable stores
 
 Replay idempotence: every per-epoch artifact is an overwrite of its own
-``epoch_<id>`` directory; the seed marker makes an at-least-once replay
+``epoch=<id>`` directory; the seed marker makes an at-least-once replay
 of the SEED epoch re-run the (overwriting) seed path instead of
 appending a duplicate extend epoch. A replayed non-seed epoch re-probes
 a store that already contains its own ids — candidates dedupe on the id
@@ -60,8 +60,8 @@ batch replays; compaction runs between committed batches).
 Scale posture: per-batch work is batch-proportional — one quality pass,
 one bucket-pruned index probe, one tokenize, four batch-sized writes;
 the resident stores are extended, never rewritten (mid-stream
-compaction, exercised here, bounds scan-branch counts via the storeio
-manifests). At fold time nothing corpus-sized crosses the driver and
+compaction, exercised here, bounds the epoch files each probe lists
+via the storeio manifests). At fold time nothing corpus-sized crosses the driver and
 the corpus TEXT is never re-read: components run over the accumulated
 pair list, the model fold is vocabulary-sized, scoring joins the stored
 doc-term rows, and the PPS/packing prefix sums are the audited bounded
@@ -127,7 +127,7 @@ def process_corpus_batch(
     # census first: raw arrivals, before the quality gate
     batch.agg(F.count(F.lit(1)).cast("long").alias("n_input")).write.mode(
         "overwrite"
-    ).parquet(epoch_dir(root, "census", epoch))
+    ).parquet(epoch_dir(spark, root, "census", epoch))
 
     good = quality_scores(batch).where(
         F.col("quality_score") >= qmin
@@ -151,7 +151,7 @@ def process_corpus_batch(
         # stores are (re)written whole — overwrite ⇒ idempotent
         pairs = ngram_jaccard_pairs(fdocs, n=n, threshold=threshold)
         pairs.write.mode("overwrite").parquet(
-            epoch_dir(root, "pairs", epoch)
+            epoch_dir(spark, root, "pairs", epoch)
         )
         index = jaccard_prefix_index(fdocs, n=n, threshold=threshold)
         write_jaccard_index(index, jpath)
@@ -180,7 +180,7 @@ def process_corpus_batch(
             elements=batch_sh,
         )
         pairs.write.mode("overwrite").parquet(
-            epoch_dir(root, "pairs", epoch)
+            epoch_dir(spark, root, "pairs", epoch)
         )
         extend_jaccard_index(
             spark, jpath, fdocs.select("doc_id", "text"), epoch,
@@ -203,10 +203,10 @@ def process_corpus_batch(
         .groupBy("doc_id", "lang", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    tf.write.mode("overwrite").parquet(epoch_dir(root, "doctf", epoch))
+    tf.write.mode("overwrite").parquet(epoch_dir(spark, root, "doctf", epoch))
     fdocs.select(
         "doc_id", "lang", F.length("text").cast("long").alias("n_chars")
-    ).write.mode("overwrite").parquet(epoch_dir(root, "docs", epoch))
+    ).write.mode("overwrite").parquet(epoch_dir(spark, root, "docs", epoch))
     # the probe's internal persists served their writes — reclaim
     fdocs.unpersist()
     release_cached_frames()

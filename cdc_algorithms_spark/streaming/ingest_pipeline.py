@@ -51,10 +51,14 @@ that prefer to halt.
 
 Scale posture: per-batch work is candidate-proportional (band-index
 probe, semi-joined verification) plus one ≤#sources-row totals read;
-nothing corpus-sized shuffles per batch. All stores are epoch-keyed
-overwrites (``batch_<id>`` subdirectories) so foreachBatch's
-at-least-once replay rewrites instead of double-appending, exactly as
-streaming/sync.py and streaming/near_dup.py document.
+nothing corpus-sized shuffles per batch. The band index, doc store,
+watermark and manifest are storeio epoch stores: micro-batch ``<id>``
+overwrites ``seed_delta/epoch=<id>`` (the index and doc store also have
+a ``seed`` base; the watermark and manifest have none and read through
+``storeio.read_epochs``). The pairs and quarantine sinks overwrite
+``batch_<id>`` directories. So foreachBatch's at-least-once replay
+rewrites instead of double-appending, exactly as streaming/sync.py and
+streaming/near_dup.py document.
 """
 
 from __future__ import annotations
@@ -66,7 +70,14 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cdc_algorithms_spark.operators.storeio import live_generation_dirs
+from cdc_algorithms_spark.operators.storeio import (
+    epoch_dir,
+    read_epochs,
+    read_live,
+)
+
+WM_SCHEMA = "max_id long"
+MANIFEST_SCHEMA = "source string, file_seq long, doc_id long, n_chars long"
 
 
 def ingest_pipeline_batch(
@@ -98,9 +109,9 @@ def ingest_pipeline_batch(
     (``on_late="quarantine"``) or raise (``on_late="error"``); they
     extend NOTHING — re-admission happens under a fresh above-watermark
     id or an offline batch recompute (see the module docstring).
-    Every write lands under this batch's epoch
-    subdirectory; every read excludes it at the PATH level (replay
-    safety, see streaming/sync.py::sync_batch)."""
+    Every write lands under this batch's epoch; every store read
+    excludes that epoch by a partition filter (replay safety, see
+    streaming/sync.py::sync_batch)."""
     from cdc_algorithms_spark.operators.dedup_docs import (
         incremental_minhash_pairs,
         minhash_band_index,
@@ -109,12 +120,8 @@ def ingest_pipeline_batch(
     if on_late not in ("quarantine", "error"):
         raise ValueError(f"on_late must be 'quarantine' or 'error', got {on_late!r}")
     me = f"batch_{batch_id}"
-    index = spark.read.parquet(
-        *live_generation_dirs(spark, index_dir, exclude=me)
-    )
-    corpus = spark.read.parquet(
-        *live_generation_dirs(spark, docs_dir, exclude=me)
-    )
+    index = read_live(spark, index_dir, "seed", exclude=batch_id)
+    corpus = read_live(spark, docs_dir, "seed", exclude=batch_id)
     batch = batch.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "text",
@@ -124,14 +131,12 @@ def ingest_pipeline_batch(
     if wm_dir is not None:
         # carried watermark: max settled id over previous epochs — one
         # row per epoch, so this read is #batches-bounded metadata, and
-        # on replay the epoch's own row is path-excluded like any store
-        wm_dirs = live_generation_dirs(spark, wm_dir, exclude=me)
-        if wm_dirs:
-            carried_wm = (
-                spark.read.parquet(*wm_dirs).agg(F.max("max_id")).first()[0]
-            )
-        else:
-            carried_wm = None
+        # on replay the epoch's own row is excluded like any store's
+        carried_wm = (
+            read_epochs(spark, wm_dir, "seed", WM_SCHEMA, exclude=batch_id)
+            .agg(F.max("max_id"))
+            .first()[0]
+        )
         wm = -1 if carried_wm is None else int(carried_wm)
         late = batch.where(F.col("doc_id") <= F.lit(wm))
         batch = batch.where(F.col("doc_id") > F.lit(wm))
@@ -152,7 +157,9 @@ def ingest_pipeline_batch(
         # value when the whole batch was late/empty
         batch.agg(
             F.coalesce(F.max("doc_id"), F.lit(wm)).cast("long").alias("max_id")
-        ).write.mode("overwrite").parquet(os.path.join(wm_dir, me))
+        ).write.mode("overwrite").parquet(
+            epoch_dir(spark, wm_dir, "seed", batch_id)
+        )
     pairs = incremental_minhash_pairs(
         corpus,
         batch.select("doc_id", "text"),
@@ -176,16 +183,12 @@ def ingest_pipeline_batch(
 
     # carried per-source byte totals = what the manifest already holds
     # (state lives in the store: one ≤#sources-row aggregate per batch)
-    prev_dirs = live_generation_dirs(spark, manifest_dir, exclude=me)
-    if prev_dirs:
-        carried = (
-            spark.read.parquet(*prev_dirs)
-            .groupBy("source")
-            .agg(F.sum("n_chars").alias("__carried"))
-        )
-        kept = kept.join(F.broadcast(carried), "source", "left")
-    else:
-        kept = kept.withColumn("__carried", F.lit(None).cast("long"))
+    carried = (
+        read_epochs(spark, manifest_dir, "seed", MANIFEST_SCHEMA, exclude=batch_id)
+        .groupBy("source")
+        .agg(F.sum("n_chars").alias("__carried"))
+    )
+    kept = kept.join(F.broadcast(carried), "source", "left")
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -203,15 +206,17 @@ def ingest_pipeline_batch(
     )
     assigned.select("source", "file_seq", "doc_id", "n_chars").write.mode(
         "overwrite"
-    ).parquet(os.path.join(manifest_dir, me))
+    ).parquet(epoch_dir(spark, manifest_dir, "seed", batch_id))
 
     # extend the index and doc store with the FULL batch — dropped docs
     # stay probe-able so duplicate chains resolve like the batch rule
     minhash_band_index(
         batch.select("doc_id", "text"), n, num_hashes, bands
-    ).write.mode("overwrite").parquet(os.path.join(index_dir, me))
+    ).write.mode("overwrite").parquet(
+        epoch_dir(spark, index_dir, "seed", batch_id)
+    )
     batch.select("doc_id", "text").write.mode("overwrite").parquet(
-        os.path.join(docs_dir, me)
+        epoch_dir(spark, docs_dir, "seed", batch_id)
     )
 
 
@@ -296,7 +301,7 @@ def run_streaming_ingest_pipeline(
     finally:
         shutil.rmtree(in_dir, ignore_errors=True)
 
-    manifest = spark.read.parquet(os.path.join(manifest_dir, "*"))
+    manifest = read_epochs(spark, manifest_dir, "seed", MANIFEST_SCHEMA)
     if return_quarantine:
         return manifest, spark.read.parquet(os.path.join(quarantine_dir, "*"))
     return manifest
@@ -323,7 +328,7 @@ def requeue_quarantined(spark: SparkSession, workdir: str) -> DataFrame:
     """
     q = spark.read.parquet(os.path.join(workdir, "quarantine", "*"))
     wm_row = (
-        spark.read.parquet(os.path.join(workdir, "watermark", "*"))
+        read_epochs(spark, os.path.join(workdir, "watermark"), "seed", WM_SCHEMA)
         .agg(F.max("max_id"))
         .first()
     )

@@ -25,7 +25,7 @@ one df lookup statically pruned to the batch's own shingle buckets, two
 batch-sized partitioned writes; the resident index is never re-read or
 rewritten. Mid-stream compaction (exercised here between stages, with
 the stream quiesced at a processAllAvailable boundary) bounds the
-probe's scan-branch count.
+epoch files the probe lists.
 """
 
 from __future__ import annotations

@@ -25,8 +25,8 @@ scan-side Arrow UDF (the only Python pass — pinned in
 tests/test_plans.py); only 8-byte keys enter the store, bucket-
 partitioned so probes statically prune to the batch's own key buckets;
 per-epoch overwrite keeps at-least-once replay idempotent; mid-stream
-compaction (manifest-guarded, storeio) bounds the probe's scan-branch
-count. The resident corpus is never re-read.
+compaction (manifest-guarded, storeio) bounds the epoch files the
+probe lists. The resident corpus is never re-read.
 """
 
 from __future__ import annotations

@@ -20,10 +20,12 @@ theorem, media_dedup.py).
 Scale posture: the store holds (media_id, phash) — 16 bytes per media,
 payload bytes never re-read after the scan-side fingerprint pass;
 banding is a pure projection at probe time so the store stays one row
-per media. Epoch-keyed overwrites (``seed`` + ``batch_<id>``) keep
-at-least-once replay idempotent, and the shared
-storeio.compact_epoch_store OPTIMIZE (manifest-guarded) folds the
-generations between micro-batches exactly like the near-dup loop.
+per media. The store is a storeio epoch store — the seed media are
+the base ``seed`` and micro-batch ``<id>`` overwrites
+``seed_delta/epoch=<id>`` — so at-least-once replay stays idempotent,
+and the shared manifest-guarded OPTIMIZE (api.compact_stream_store)
+folds the epochs into the seed between micro-batches exactly like the
+near-dup loop.
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cdc_algorithms_spark.operators.storeio import live_generation_dirs
+from cdc_algorithms_spark.operators.storeio import epoch_dir, read_live
 
 
 def media_phash_batch(
@@ -47,7 +49,7 @@ def media_phash_batch(
 ) -> None:
     """Settle one micro-batch of (media_id, content) media — IDEMPOTENT
     per ``batch_id``: fingerprint the batch once, probe the persisted
-    fingerprint store (current epoch excluded at the PATH level — see
+    fingerprint store (current epoch excluded by a partition filter — see
     streaming/sync.py::sync_batch for the replay-after-partial-write
     rationale), write the batch's pairs to ``pairs_dir/batch_<id>``,
     then extend the store under the same epoch key."""
@@ -56,17 +58,18 @@ def media_phash_batch(
         media_fingerprints,
     )
 
-    me = f"batch_{batch_id}"
-    index = spark.read.parquet(
-        *live_generation_dirs(spark, fps_dir, exclude=me)
-    )
+    index = read_live(spark, fps_dir, "seed", exclude=batch_id)
     fps = media_fingerprints(batch_media).persist()
     try:
         pairs = incremental_media_phash_pairs(
             index, fps, max_hamming=max_hamming
         )
-        pairs.write.mode("overwrite").parquet(os.path.join(pairs_dir, me))
-        fps.write.mode("overwrite").parquet(os.path.join(fps_dir, me))
+        pairs.write.mode("overwrite").parquet(
+            os.path.join(pairs_dir, f"batch_{batch_id}")
+        )
+        fps.write.mode("overwrite").parquet(
+            epoch_dir(spark, fps_dir, "seed", batch_id)
+        )
     finally:
         fps.unpersist()
 
@@ -85,6 +88,7 @@ def run_streaming_media_phash_index(
     must be unique across seed and stages. ``compact_after`` (stage
     indices) folds the store between micro-batches via the shared
     manifest-guarded OPTIMIZE."""
+    from cdc_algorithms_spark.api import compact_stream_store
     from cdc_algorithms_spark.operators.media_dedup import media_fingerprints
 
     if not batch_stages:
@@ -114,13 +118,9 @@ def run_streaming_media_phash_index(
             .start()
         )
         try:
-            from cdc_algorithms_spark.operators.storeio import (
-                compact_epoch_store,
-            )
-
             def _maybe_compact(stage_i: int) -> None:
                 if compact_after and stage_i in compact_after:
-                    compact_epoch_store(spark, fps_dir)
+                    compact_stream_store(spark, fps_dir)
 
             query.processAllAvailable()
             _maybe_compact(0)

@@ -22,10 +22,11 @@ Scale posture: the band index holds (doc_id, band, band_hash) — ~tens
 of bytes per document, 1/1000th of corpus bytes; the doc store is read
 ONLY to verify candidate ids (semi-joined before shingling, see
 _verify_exact_jaccard), so per-batch work is candidate-proportional,
-never corpus-proportional. Both stores are epoch-keyed overwrites
-(``seed`` + ``batch_<id>`` subdirectories) so foreachBatch's
-at-least-once replay rewrites instead of double-appending, mirroring
-streaming/sync.py's recovery semantics.
+never corpus-proportional. Both stores are storeio epoch stores: the
+corpus is the base ``seed`` and micro-batch ``<id>`` overwrites
+``seed_delta/epoch=<id>``, so foreachBatch's at-least-once replay
+rewrites instead of double-appending, mirroring streaming/sync.py's
+recovery semantics.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_algorithms_spark.operators.storeio import live_generation_dirs
+from cdc_algorithms_spark.operators.storeio import epoch_dir, read_live
 
 
 def near_dup_batch(
@@ -57,7 +58,7 @@ def near_dup_batch(
     per ``batch_id``: probe the persisted band index, write the batch's
     verified pairs to ``pairs_dir/batch_<id>``, then extend the index
     and doc store under the same epoch key. The current batch's own
-    subdirectories are excluded from the reads at the PATH level (see
+    epoch is excluded from the reads by a partition filter (see
     streaming/sync.py::sync_batch for why a data filter is not enough
     under replay-after-partial-write)."""
     from cdc_algorithms_spark.operators.dedup_docs import (
@@ -65,13 +66,8 @@ def near_dup_batch(
         minhash_band_index,
     )
 
-    me = f"batch_{batch_id}"
-    index = spark.read.parquet(
-        *live_generation_dirs(spark, index_dir, exclude=me)
-    )
-    corpus = spark.read.parquet(
-        *live_generation_dirs(spark, docs_dir, exclude=me)
-    )
+    index = read_live(spark, index_dir, "seed", exclude=batch_id)
+    corpus = read_live(spark, docs_dir, "seed", exclude=batch_id)
     batch = batch.select(F.col("doc_id").cast("long").alias("doc_id"), "text")
     pairs = incremental_minhash_pairs(
         corpus,
@@ -83,11 +79,15 @@ def near_dup_batch(
         corpus_index=index,
         max_bucket=max_bucket,
     )
-    pairs.write.mode("overwrite").parquet(os.path.join(pairs_dir, me))
+    pairs.write.mode("overwrite").parquet(
+        os.path.join(pairs_dir, f"batch_{batch_id}")
+    )
     minhash_band_index(batch, n, num_hashes, bands).write.mode(
         "overwrite"
-    ).parquet(os.path.join(index_dir, me))
-    batch.write.mode("overwrite").parquet(os.path.join(docs_dir, me))
+    ).parquet(epoch_dir(spark, index_dir, "seed", batch_id))
+    batch.write.mode("overwrite").parquet(
+        epoch_dir(spark, docs_dir, "seed", batch_id)
+    )
 
 
 def run_streaming_near_dup_index(
@@ -108,11 +108,12 @@ def run_streaming_near_dup_index(
     doc_ids must be unique across corpus and all stages.
 
     ``compact_after`` (stage indices) runs the store OPTIMIZE between
-    micro-batches — storeio.compact_epoch_store folds the index and doc
-    generations into one ``seed`` each (manifest-guarded rename-first
-    swap), bounding the per-batch scan-branch count exactly like
+    micro-batches — api.compact_stream_store folds the index and doc
+    epochs into their ``seed`` (manifest-guarded rename-first swap),
+    bounding the files each later probe lists and opens exactly like
     compact_pq_index bounds the ANN probe's (§19); the pair stream is
     untouched and later batches probe the folded stores."""
+    from cdc_algorithms_spark.api import compact_stream_store
     from cdc_algorithms_spark.operators.dedup_docs import minhash_band_index
 
     if not batch_stages:
@@ -127,8 +128,6 @@ def run_streaming_near_dup_index(
         os.path.join(index_dir, "seed")
     )
     corpus.write.parquet(os.path.join(docs_dir, "seed"))
-    # pairs_dir needs a seed too so the store-listing helper always has
-    # a directory to enumerate even if a replayed batch 0 reads early
     os.makedirs(pairs_dir, exist_ok=True)
 
     in_dir = tempfile.mkdtemp(prefix="cdc_neardup_in_")
@@ -147,14 +146,10 @@ def run_streaming_near_dup_index(
             .start()
         )
         try:
-            from cdc_algorithms_spark.operators.storeio import (
-                compact_epoch_store,
-            )
-
             def _maybe_compact(stage_i: int) -> None:
                 if compact_after and stage_i in compact_after:
-                    compact_epoch_store(spark, index_dir)
-                    compact_epoch_store(spark, docs_dir)
+                    compact_stream_store(spark, index_dir)
+                    compact_stream_store(spark, docs_dir)
 
             query.processAllAvailable()
             _maybe_compact(0)

@@ -13,9 +13,11 @@ oracle applies verbatim to the streamed result
 This completes the pattern: every durable artifact in the package —
 near-dup band index, PQ codes, ingest manifests, and now quantile
 sketches — has (a) a one-shot build, (b) an epoch-keyed streaming
-extension, and (c) a fold-the-epochs compaction
-(operators/storeio.py::compact_epoch_store works on this store unchanged;
-sketch rows are row-mergeable on read either way).
+extension, and (c) a fold-the-epochs read. The store is a seedless
+storeio epoch store — micro-batch ``<id>`` overwrites
+``seed_delta/epoch=<id>`` — read through ``storeio.read_epochs`` as one
+relation; it is never compacted (sketch rows are row-mergeable on read,
+and ``sketch_merge`` folds them there).
 
 Scale posture: per-batch work is one (group, bucket) aggregate over the
 batch alone; the persisted state is #groups × few-hundred-byte rows per
@@ -30,7 +32,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cdc_algorithms_spark.operators.storeio import live_generation_dirs
+from cdc_algorithms_spark.operators.storeio import epoch_dir, read_epochs
 
 
 def run_streaming_quantile_sketch(
@@ -56,11 +58,12 @@ def run_streaming_quantile_sketch(
     shutil.rmtree(store_dir, ignore_errors=True)
     os.makedirs(store_dir, exist_ok=True)
 
+    def sketch(batch: DataFrame) -> DataFrame:
+        return histogram_sketch(batch, group_cols, value_col, lo, hi, buckets)
+
     def settle(batch: DataFrame, batch_id: int) -> None:
-        histogram_sketch(
-            batch, group_cols, value_col, lo, hi, buckets
-        ).write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch_{batch_id}")
+        sketch(batch).write.mode("overwrite").parquet(
+            epoch_dir(spark, store_dir, "seed", batch_id)
         )
 
     in_dir = tempfile.mkdtemp(prefix="cdc_qsketch_in_")
@@ -85,10 +88,8 @@ def run_streaming_quantile_sketch(
     finally:
         shutil.rmtree(in_dir, ignore_errors=True)
 
-    epochs = spark.read.parquet(
-        *live_generation_dirs(spark, store_dir, exclude="")
-    )
-    return sketch_merge(epochs, group_cols)
+    schema = sketch(batch_stages[0]).schema
+    return sketch_merge(read_epochs(spark, store_dir, "seed", schema), group_cols)
 
 
 def run_streaming_quantile_sketch_log(
@@ -116,10 +117,13 @@ def run_streaming_quantile_sketch_log(
     shutil.rmtree(store_dir, ignore_errors=True)
     os.makedirs(store_dir, exist_ok=True)
 
+    def sketch(batch: DataFrame) -> DataFrame:
+        return histogram_sketch_log(batch, group_cols, value_col)
+
     def settle(batch: DataFrame, batch_id: int) -> None:
-        histogram_sketch_log(batch, group_cols, value_col).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(store_dir, f"batch_{batch_id}"))
+        sketch(batch).write.mode("overwrite").parquet(
+            epoch_dir(spark, store_dir, "seed", batch_id)
+        )
 
     in_dir = tempfile.mkdtemp(prefix="cdc_qsketchlog_in_")
     try:
@@ -143,10 +147,8 @@ def run_streaming_quantile_sketch_log(
     finally:
         shutil.rmtree(in_dir, ignore_errors=True)
 
-    epochs = spark.read.parquet(
-        *live_generation_dirs(spark, store_dir, exclude="")
-    )
-    return sketch_merge(epochs, group_cols)
+    schema = sketch(batch_stages[0]).schema
+    return sketch_merge(read_epochs(spark, store_dir, "seed", schema), group_cols)
 
 
 __all__ = [

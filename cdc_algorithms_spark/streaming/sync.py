@@ -16,17 +16,20 @@ reused/dedup split is batch-boundary-invariant and the converged totals
 equal the batch plan's — the DuckDB oracle for the batch sync_plan
 (global totals form) checks this stream exactly.
 
-Store layout: ``(chunk_text, origin, batch_id)`` rows in unpartitioned
-``seed`` / ``batch_<id>`` directories. Each micro-batch reads every live
-one, unpruned, so the per-batch read grows with the store until
-``operators/storeio.py::compact_epoch_store`` folds it. Metrics are 1-row-per-batch
-writes — no driver-side accumulation.
+Store layout: ``(chunk_text, origin, batch_id)`` rows, the storeio
+epoch-store layout with one kind: the old snapshot is the base
+``seed`` and micro-batch ``<id>`` lands in ``seed_delta/epoch=<id>``.
+Each micro-batch reads the live store as two scans (the base, and the
+delta root filtered on ``epoch``), with no key pruning, so the bytes
+read grow with the store until ``api.compact_stream_store`` folds the
+epochs into the seed. Metrics are 1-row-per-batch writes
+(``metrics_dir/batch_<id>``) — no driver-side accumulation.
 
 Recovery semantics: foreachBatch is at-least-once — after a failure the
 last uncommitted batch REPLAYS with the same batch_id — so both sinks
-are epoch-keyed overwrites (``.../batch_<id>`` subdirectories) and the
-store read excludes the current batch_id. Replay rewrites the same
-files instead of appending duplicates; totals are exactly-once.
+are epoch-keyed overwrites and the store read excludes the current
+batch_id. Replay rewrites the same files instead of appending
+duplicates; totals are exactly-once.
 """
 
 from __future__ import annotations
@@ -38,7 +41,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_algorithms_spark.operators.storeio import live_generation_dirs
+from cdc_algorithms_spark.operators.storeio import epoch_dir, read_live
 
 
 def sync_batch(
@@ -52,13 +55,13 @@ def sync_batch(
     per ``batch_id``.
 
     ``batch`` needs columns (chunk_text, length). Writes first-seen
-    identities to ``store_dir/batch_<id>`` and one metrics row to
+    identities to ``store_dir/seed_delta/epoch=<id>`` and one metrics row to
     ``metrics_dir/batch_<id>``, both with ``mode("overwrite")``: after a
     failure, Structured Streaming REPLAYS the last uncommitted batch
     with the same batch_id, so an append sink would double-count its
     metrics and duplicate its store rows. The epoch-keyed overwrite
     makes the replay a no-op-equivalent rewrite, and the store read
-    EXCLUDES the current batch_id's subdirectory so a half-written
+    EXCLUDES the current batch_id's epoch so a half-written
     first attempt can't make its own identities look pre-existing
     (which would flip transfer→reused and corrupt the totals).
     """
@@ -66,14 +69,14 @@ def sync_batch(
         F.sum("length").alias("bytes_all"),
         F.max("length").alias("bytes_one"),
     )
-    # exclude the current batch's subdir at the PATH level, not with a
-    # data filter: the overwrite below deletes batch_<id>'s files, and
+    # exclude the current batch's epoch with a PARTITION filter, not a
+    # data filter: the overwrite below deletes epoch=<id>'s files, and
     # if they were in this read's lineage a post-failure recompute (lost
     # executor between the metrics and store writes) would re-read files
     # the overwrite just removed — FileNotFound in exactly the recovery
-    # path this sink exists to survive.
-    prior = live_generation_dirs(spark, store_dir, f"batch_{batch_id}")
-    store = spark.read.parquet(*prior)
+    # path this sink exists to survive. The partition filter prunes the
+    # epoch at planning, so its files never enter the scan.
+    store = read_live(spark, store_dir, "seed", exclude=batch_id)
     classified = per_key.join(store, "chunk_text", "left").persist()
     unseen = F.col("origin").isNull()
     metrics = classified.agg(
@@ -102,7 +105,7 @@ def sync_batch(
             F.lit("new").alias("origin"),
             F.lit(batch_id).cast("long").alias("batch_id"),
         ).write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch_{batch_id}")
+            epoch_dir(spark, store_dir, "seed", batch_id)
         )
     finally:
         classified.unpersist()
@@ -123,9 +126,9 @@ def run_incremental_sync(
         raise ValueError("need at least one new-chunk stage")
     store_dir = os.path.join(workdir, "store")
     metrics_dir = os.path.join(workdir, "metrics")
-    # a reused workdir must not leak a prior run's batch_* subdirs into
-    # this run's store or totals (both are per-batch-id subdirectories
-    # now, so overwriting the seed alone would not clear them)
+    # a reused workdir must not leak a prior run's epochs into this
+    # run's store or totals (both are per-batch-id directories, so
+    # overwriting the seed alone would not clear them)
     shutil.rmtree(metrics_dir, ignore_errors=True)
     shutil.rmtree(store_dir, ignore_errors=True)
     old_chunks.select("chunk_text").distinct().select(

@@ -21,8 +21,8 @@ idempotent, same as every epoch store in this repo.
 
 Scale posture: per-batch work is batch-proportional (one tokenize + one
 bucket-hash exchange of the batch's postings); nothing resident is
-re-read. Compaction (compact_text_index) bounds the probe's
-scan-branch count, same economics as compact_pq_index (§19).
+re-read. Compaction (compact_text_index) bounds the epoch files the
+probe lists, same economics as compact_pq_index (§19).
 """
 
 from __future__ import annotations

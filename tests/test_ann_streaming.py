@@ -378,7 +378,7 @@ def test_epoch_dirs_are_cell_partitioned(spark, tmp_path):
     extend_pq_index(
         spark, path, emb.where(F.col("vec_id") % 3 == 0), epoch=4
     )
-    delta = os.path.join(path, "codes_delta", "epoch_4")
+    delta = os.path.join(path, "codes_delta", "epoch=4")
     assert os.path.isdir(delta)
     assert any(d.startswith("cell=") for d in os.listdir(delta))
 

@@ -1,13 +1,15 @@
-"""The four ``*_delta`` epoch stores — Jaccard index, BM25 text index,
-DSIR count store, PQ codes — driven through one shared sequence.
+"""The five epoch stores — Jaccard index, BM25 text index, DSIR count
+store, PQ codes, and the streaming sync chunk store — driven through
+one shared sequence.
 
 Pins, per store: an EMPTY extend epoch (a micro-batch with no rows
 still writes its epoch directory, with no data file to infer a schema
 from) leaves the store probe-able and compactable; probes equal a
 one-shot build before and after compaction; a replay of a folded epoch
 is dead. A second test pins the on-disk layout (directory names,
-partition columns, marker files) that stores written by earlier
-versions rely on.
+partition columns, marker files). Stores in the retired layouts
+(``epoch_<n>`` deltas, ``batch_<id>`` generations beside ``seed``) are
+refused on read, extend and compaction.
 """
 
 from __future__ import annotations
@@ -19,11 +21,14 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from cdc_algorithms_spark import api
 from cdc_algorithms_spark.operators import dedup_docs as J
 from cdc_algorithms_spark.operators import retrieval as R
 from cdc_algorithms_spark.operators import selection as S
 from cdc_algorithms_spark.operators import similarity as Q
-from cdc_algorithms_spark.operators.storeio import live_epoch_dirs
+from cdc_algorithms_spark.operators.chunking import fixed_chunks
+from cdc_algorithms_spark.operators.storeio import live_epochs, read_live
+from cdc_algorithms_spark.streaming.sync import sync_batch
 from tests.conftest import SF_DIR
 
 N, T = 3, 0.8
@@ -184,15 +189,47 @@ class _Pq:
         return _Pq.answer(spark, path)
 
 
-STORES = {"jaccard": _Jaccard, "text": _Text, "dsir": _Dsir, "pq": _Pq}
+class _Sync:
+    kinds = ("seed",)
+
+    @staticmethod
+    def corpus(spark):
+        return _docs(spark).select("doc_id", "text")
+
+    @staticmethod
+    def write(spark, seed, path):
+        fixed_chunks(seed, 64).select("chunk_text").distinct().select(
+            "chunk_text",
+            F.lit("old").alias("origin"),
+            F.lit(-1).cast("long").alias("batch_id"),
+        ).write.mode("overwrite").parquet(f"{path}/seed")
+
+    @staticmethod
+    def extend(spark, path, batch, epoch):
+        sync_batch(spark, fixed_chunks(batch, 64), path, f"{path}_metrics", epoch)
+
+    @staticmethod
+    def compact(spark, path):
+        api.compact_stream_store(spark, path)
+
+    @staticmethod
+    def answer(spark, path):
+        return _rows(read_live(spark, path, "seed").select("chunk_text", "origin"))
+
+    @staticmethod
+    def oneshot(spark, seed, ext, path):
+        _Sync.write(spark, seed, path)
+        _Sync.extend(spark, path, ext, 0)
+        return _Sync.answer(spark, path)
+
+
+STORES = {
+    "jaccard": _Jaccard, "text": _Text, "dsir": _Dsir, "pq": _Pq, "sync": _Sync,
+}
 
 
 def _live(spark, store, path):
-    return [
-        d
-        for kind in store.kinds
-        for d in live_epoch_dirs(spark, f"{path}/{kind}_delta", f"{path}/{kind}")
-    ]
+    return [e for kind in store.kinds for e in live_epochs(spark, path, kind)]
 
 
 @pytest.mark.parametrize("name", sorted(STORES))
@@ -239,10 +276,10 @@ def _tree(root):
     return sorted({re.sub(r"=[^/]+", "=*", p.removeprefix("./")) for p in out})
 
 
-# Captured from the layout the stores wrote before the store policy
-# moved into operators/storeio.py: base + three extend epochs, with a
-# compaction after the second. Stores written by earlier versions keep
-# working only while this tree is unchanged.
+# The one epoch-store layout: base + three extend epochs, with a
+# compaction after the second. Every kind's epochs are ``epoch=<n>``
+# partitions of one ``{kind}_delta`` relation; the base keeps its
+# manifest of folded epochs.
 _LAYOUT = {
     "jaccard": [
         "_index_meta.json",
@@ -254,17 +291,17 @@ _LAYOUT = {
         "prefix/_folded_epochs.json",
         "prefix/sh_bucket=*/",
         "prefix_delta/",
-        "prefix_delta/epoch_2/",
-        "prefix_delta/epoch_2/_SUCCESS",
-        "prefix_delta/epoch_2/sh_bucket=*/",
+        "prefix_delta/epoch=*/",
+        "prefix_delta/epoch=*/_SUCCESS",
+        "prefix_delta/epoch=*/sh_bucket=*/",
         "sets/",
         "sets/_SUCCESS",
         "sets/_folded_epochs.json",
         "sets/id_bucket=*/",
         "sets_delta/",
-        "sets_delta/epoch_2/",
-        "sets_delta/epoch_2/_SUCCESS",
-        "sets_delta/epoch_2/id_bucket=*/",
+        "sets_delta/epoch=*/",
+        "sets_delta/epoch=*/_SUCCESS",
+        "sets_delta/epoch=*/id_bucket=*/",
     ],
     "text": [
         "_store_meta.json",
@@ -272,16 +309,16 @@ _LAYOUT = {
         "meta/_SUCCESS",
         "meta/_folded_epochs.json",
         "meta_delta/",
-        "meta_delta/epoch_2/",
-        "meta_delta/epoch_2/_SUCCESS",
+        "meta_delta/epoch=*/",
+        "meta_delta/epoch=*/_SUCCESS",
         "postings/",
         "postings/_SUCCESS",
         "postings/_folded_epochs.json",
         "postings/bucket=*/",
         "postings_delta/",
-        "postings_delta/epoch_2/",
-        "postings_delta/epoch_2/_SUCCESS",
-        "postings_delta/epoch_2/bucket=*/",
+        "postings_delta/epoch=*/",
+        "postings_delta/epoch=*/_SUCCESS",
+        "postings_delta/epoch=*/bucket=*/",
     ],
     "dsir": [
         "_store_meta.json",
@@ -290,15 +327,15 @@ _LAYOUT = {
         "counts/_folded_epochs.json",
         "counts/bucket=*/",
         "counts_delta/",
-        "counts_delta/epoch_2/",
-        "counts_delta/epoch_2/_SUCCESS",
-        "counts_delta/epoch_2/bucket=*/",
+        "counts_delta/epoch=*/",
+        "counts_delta/epoch=*/_SUCCESS",
+        "counts_delta/epoch=*/bucket=*/",
         "meta/",
         "meta/_SUCCESS",
         "meta/_folded_epochs.json",
         "meta_delta/",
-        "meta_delta/epoch_2/",
-        "meta_delta/epoch_2/_SUCCESS",
+        "meta_delta/epoch=*/",
+        "meta_delta/epoch=*/_SUCCESS",
     ],
     "pq": [
         "codes/",
@@ -306,20 +343,24 @@ _LAYOUT = {
         "codes/_folded_epochs.json",
         "codes/cell=*/",
         "codes_delta/",
-        "codes_delta/epoch_2/",
-        "codes_delta/epoch_2/_SUCCESS",
-        "codes_delta/epoch_2/cell=*/",
+        "codes_delta/epoch=*/",
+        "codes_delta/epoch=*/_SUCCESS",
+        "codes_delta/epoch=*/cell=*/",
         "model/",
         "model/_SUCCESS",
         "stats/",
         "stats/_SUCCESS",
         "stats_delta/",
-        "stats_delta/epoch_0/",
-        "stats_delta/epoch_0/_SUCCESS",
-        "stats_delta/epoch_1/",
-        "stats_delta/epoch_1/_SUCCESS",
-        "stats_delta/epoch_2/",
-        "stats_delta/epoch_2/_SUCCESS",
+        "stats_delta/epoch=*/",
+        "stats_delta/epoch=*/_SUCCESS",
+    ],
+    "sync": [
+        "seed/",
+        "seed/_SUCCESS",
+        "seed/_folded_epochs.json",
+        "seed_delta/",
+        "seed_delta/epoch=*/",
+        "seed_delta/epoch=*/_SUCCESS",
     ],
 }
 
@@ -336,3 +377,45 @@ def test_store_layout_is_unchanged(spark, tmp_path, name):
     store.compact(spark, path)
     store.extend(spark, path, corpus.where(F.col(key) % 4 == 3), 2)
     assert _tree(path) == _LAYOUT[name]
+
+
+def test_retired_epoch_underscore_layout_is_refused(spark, tmp_path):
+    """A ``*_delta`` store whose epochs sit in ``epoch_<n>`` directories
+    (the layout before one ``epoch=``-partitioned delta relation) is
+    refused with the path named — on read, extend and compaction —
+    instead of silently reading as the base alone."""
+    store = _Jaccard
+    corpus = store.corpus(spark)
+    path = str(tmp_path / "jaccard")
+    store.write(spark, corpus.where(F.col("doc_id") % 3 == 1), path)
+    store.extend(spark, path, corpus.where(F.col("doc_id") % 3 == 2), 1)
+    for kind in store.kinds:
+        os.rename(f"{path}/{kind}_delta/epoch=1", f"{path}/{kind}_delta/epoch_1")
+    retired = re.escape(f"{path}/sets_delta/epoch_1")
+    with pytest.raises(ValueError, match=retired):
+        store.answer(spark, path)
+    with pytest.raises(ValueError, match=retired):
+        store.extend(spark, path, corpus.where(F.col("doc_id") % 3 == 0), 2)
+    with pytest.raises(ValueError, match=retired):
+        store.compact(spark, path)
+    assert not os.path.exists(f"{path}/sets_delta/epoch=2")
+
+
+def test_retired_batch_generation_layout_is_refused(spark, tmp_path):
+    """A streaming store with ``batch_<id>`` generations beside its
+    ``seed`` (the layout before the seed became the base of an epoch
+    store) is refused with the path named — on read, extend and
+    compaction."""
+    store = _Sync
+    corpus = store.corpus(spark)
+    path = str(tmp_path / "sync")
+    store.write(spark, corpus.where(F.col("doc_id") % 3 == 1), path)
+    spark.read.parquet(f"{path}/seed").limit(3).write.parquet(f"{path}/batch_0")
+    retired = re.escape(f"{path}/batch_0")
+    with pytest.raises(ValueError, match=retired):
+        store.answer(spark, path)
+    with pytest.raises(ValueError, match=retired):
+        store.extend(spark, path, corpus.where(F.col("doc_id") % 3 == 2), 1)
+    with pytest.raises(ValueError, match=retired):
+        store.compact(spark, path)
+    assert not os.path.exists(f"{path}/seed_delta")

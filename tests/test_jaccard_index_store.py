@@ -84,7 +84,7 @@ def test_extend_probe_equals_one_shot_and_replay_is_idempotent(
     # replay of a FOLDED epoch: the manifest keeps the name dead —
     # its rows are already in the base, re-unioning would double-count
     extend_jaccard_index(spark, path, ext, epoch=1, n=N, threshold=T)
-    assert os.path.isdir(f"{path}/sets_delta/epoch_1")  # dir rewritten
+    assert os.path.isdir(f"{path}/sets_delta/epoch=1")  # dir rewritten
     assert _probe(spark, path, batch) == want  # ...but not live
     # and a GENUINELY new epoch after the fold is live
     extend_jaccard_index(
@@ -248,7 +248,7 @@ def test_adaptive_bucket_counts_recorded_and_resolved(spark, tmp_path):
     # directories agree with the base layout
     extend_jaccard_index(spark, path, ext, epoch=1, n=N, threshold=T)
     delta_dirs = [
-        d for d in os.listdir(f"{path}/prefix_delta/epoch_1")
+        d for d in os.listdir(f"{path}/prefix_delta/epoch=1")
         if d.startswith("sh_bucket=")
     ]
     assert delta_dirs

@@ -965,6 +965,106 @@ def test_live_jaccard_probe_keeps_bucket_pruning(spark, tmp_path):
     dd.release_cached_frames()
 
 
+def _store_scans(df, root):
+    """The formatted-explain sections of every parquet scan under
+    ``root`` (formatted sections carry unclipped PartitionFilters)."""
+    return [
+        s for s in P.physical_plan(df, "formatted").split("\n\n")
+        if "Scan parquet" in s and str(root) in s
+    ]
+
+
+def _partition_filters(section: str) -> str:
+    import re as _re
+
+    m = _re.search(r"PartitionFilters: \[(.*)\]", section)
+    return m.group(1) if m else ""
+
+
+def test_live_jaccard_probe_scans_are_flat_over_epochs(spark, tmp_path):
+    """Each kind's epochs are ONE ``epoch=``-partitioned relation: the
+    probe plan has the same index scans at 1 and at 5 live epochs, and
+    every delta scan prunes on both the live epochs and the batch's
+    buckets at planning (``PartitionFilters``)."""
+    from pyspark.sql import functions as F
+
+    from cdc_algorithms_spark.operators import dedup_docs as dd
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    seed = docs.where(F.col("doc_id") % 3 == 1)
+    ext = docs.where(F.col("doc_id") % 3 == 2).select("doc_id", "text")
+    idx = dd.jaccard_prefix_index(seed, n=3, threshold=0.8)
+    dd.write_jaccard_index(idx, str(tmp_path))
+    idx[1].unpersist()
+    rows = seed.select("doc_id", "text").limit(2).collect()
+    batch = spark.createDataFrame(
+        [(10_000_000 + r.doc_id, r.text) for r in rows],
+        "doc_id long, text string",
+    )
+    counts = []
+    for epochs in ((1,), (2, 3, 4, 5)):
+        for e in epochs:
+            dd.extend_jaccard_index(
+                spark, str(tmp_path), ext.where(F.col("doc_id") % 5 == e - 1),
+                epoch=e, n=3, threshold=0.8,
+            )
+        probe = dd.incremental_jaccard_pairs_indexed(
+            dd.read_jaccard_index_live(spark, str(tmp_path)), batch,
+            n=3, threshold=0.8,
+        )
+        scans = _store_scans(probe, tmp_path)
+        delta = [s for s in scans if "_delta" in s]
+        assert delta, "no delta scan in the live probe"
+        for s in delta:
+            pf = _partition_filters(s)
+            assert "epoch#" in pf and "_bucket#" in pf, f"delta scan prunes {pf!r}"
+        counts.append(len(scans))
+        dd.release_cached_frames()
+    assert counts[0] == counts[1], f"index scans grew with live epochs: {counts}"
+
+
+def test_sync_batch_store_read_is_two_scans(spark, tmp_path, monkeypatch):
+    """sync_batch reads its store as the seed plus ONE delta scan, and
+    the replaying batch's own epoch is excluded by the delta scan's
+    ``PartitionFilters`` — pruned at planning, so its files (which the
+    batch's overwrite deletes) never enter the read's lineage."""
+    import re as _re
+
+    from pyspark.sql import functions as F
+
+    from cdc_algorithms_spark.operators.chunking import fixed_chunks
+    from cdc_algorithms_spark.streaming import sync
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(30)
+    store, metrics = tmp_path / "store", str(tmp_path / "metrics")
+    fixed_chunks(docs.where(F.col("doc_id") % 2 == 0), 64).select(
+        "chunk_text"
+    ).distinct().select(
+        "chunk_text",
+        F.lit("old").alias("origin"),
+        F.lit(-1).cast("long").alias("batch_id"),
+    ).write.parquet(f"{store}/seed")
+    new = fixed_chunks(docs, 64)
+    for e in range(3):
+        batch = new.where(F.col("src_id") % 3 == e)
+        sync.sync_batch(spark, batch, str(store), metrics, e)
+
+    reads = []
+    orig = sync.read_live
+
+    def spy(*a, **kw):
+        reads.append(orig(*a, **kw))
+        return reads[-1]
+
+    monkeypatch.setattr(sync, "read_live", spy)
+    sync.sync_batch(spark, new.where(F.col("src_id") % 3 == 2), str(store), metrics, 2)
+    scans = _store_scans(reads[0], store)
+    assert len(scans) == 2, scans
+    pf = _partition_filters(next(s for s in scans if "seed_delta" in s))
+    live = _re.search(r"epoch#\d+L IN \(([\d,]+)\)", pf)
+    assert live and live.group(1) == "0,1", f"epoch 2 not pruned: {pf!r}"
+
+
 def test_media_phash_dup_groups_has_no_phash_window(spark):
     """The exact-duplicate groups must come from groupBy(phash) + join
     back — NEVER Window.partitionBy(phash), which sorts every member of

@@ -172,7 +172,7 @@ def test_text_index_compact_preserves_answers(spark, tmp_path):
         extend_text_index,
         write_text_index,
     )
-    from cdc_algorithms_spark.operators.storeio import live_epoch_dirs
+    from cdc_algorithms_spark.operators.storeio import live_epochs
 
     docs = _docs(spark)
     qt = query_terms(spark, QUERIES)
@@ -183,8 +183,8 @@ def test_text_index_compact_preserves_answers(spark, tmp_path):
     )
     before = sorted(bm25_topk_indexed(spark, path, qt, k=10, buckets=8).collect())
     compact_text_index(spark, path)
-    assert live_epoch_dirs(spark, f"{path}/postings_delta", f"{path}/postings") == []
-    assert live_epoch_dirs(spark, f"{path}/meta_delta", f"{path}/meta") == []
+    assert live_epochs(spark, path, "postings") == []
+    assert live_epochs(spark, path, "meta") == []
     after = sorted(bm25_topk_indexed(spark, path, qt, k=10, buckets=8).collect())
     assert after == before
     # compacting a store with no deltas is a no-op
@@ -208,7 +208,7 @@ def test_text_index_compact_crash_window_no_double_count(spark, tmp_path):
         extend_text_index,
         write_text_index,
     )
-    from cdc_algorithms_spark.operators.storeio import live_epoch_dirs
+    from cdc_algorithms_spark.operators.storeio import live_epochs
 
     docs = _docs(spark)
     qt = query_terms(spark, QUERIES)
@@ -224,10 +224,10 @@ def test_text_index_compact_crash_window_no_double_count(spark, tmp_path):
     for kind in ("postings", "meta"):  # the crash leftover reappears
         shutil.rmtree(f"{path}/{kind}_delta", ignore_errors=True)
         shutil.move(f"{path}/{kind}_crash", f"{path}/{kind}_delta")
-    # the manifest marks epoch_0 folded: probes and a re-compact see no
+    # the manifest marks epoch=0 folded: probes and a re-compact see no
     # live deltas, and answers stay exact
-    assert live_epoch_dirs(spark, f"{path}/postings_delta", f"{path}/postings") == []
-    assert live_epoch_dirs(spark, f"{path}/meta_delta", f"{path}/meta") == []
+    assert live_epochs(spark, path, "postings") == []
+    assert live_epochs(spark, path, "meta") == []
     after = sorted(bm25_topk_indexed(spark, path, qt, k=10, buckets=8).collect())
     assert after == before
     compact_text_index(spark, path)  # pure GC; still exact

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cdc_algorithms_spark.operators.chunking import cdc_chunks, fixed_chunks, with_chunk_hash
+from cdc_algorithms_spark.operators.storeio import read_epochs, read_live
 from cdc_algorithms_spark.queries import SPARK_QUERIES
 from cdc_algorithms_spark.sources.registry import load_table
 from cdc_algorithms_spark.streaming import (
@@ -494,11 +495,11 @@ def test_sync_batch_replay_is_idempotent(spark, tmp_path):
 
     sync_batch(spark, new, store_dir, metrics_dir, batch_id=0)
     first = totals()
-    n_store = spark.read.parquet(store_dir + "/*").count()
+    n_store = read_live(spark, store_dir, "seed").count()
     # replay batch 0 (simulates recovery after an uncommitted epoch)
     sync_batch(spark, new, store_dir, metrics_dir, batch_id=0)
     assert totals() == first, "replay double-counted metrics"
-    assert spark.read.parquet(store_dir + "/*").count() == n_store, (
+    assert read_live(spark, store_dir, "seed").count() == n_store, (
         "replay duplicated store identities"
     )
     # a genuinely new batch still settles against the extended store
@@ -584,15 +585,13 @@ def test_checkpoint_restart_recovers_chunker_tail_state(spark, tmp_path):
 
 
 def test_sync_store_listing_ignores_stray_entries(spark, tmp_path):
-    """The store read enumerates epoch subdirectories via the Hadoop
-    FileSystem API filtered to seed/batch_* names: a stray _SUCCESS
-    marker, temp directory, or unrelated file dropped into store_dir
-    must not reach spark.read.parquet (where a non-parquet entry would
-    abort every subsequent batch)."""
+    """The store read touches only the ``seed`` base and the
+    ``seed_delta`` relation: a stray _SUCCESS marker, temp directory,
+    or unrelated file dropped into store_dir must not reach
+    spark.read.parquet (where a non-parquet entry would abort every
+    subsequent batch)."""
     from cdc_algorithms_spark.operators.chunking import fixed_chunks
-    from cdc_algorithms_spark.operators.storeio import (
-        live_generation_dirs as _list_store_subdirs,
-    )
+    from cdc_algorithms_spark.operators.storeio import live_epochs
     from cdc_algorithms_spark.streaming.sync import sync_batch
 
     docs = load_table(spark, "documents", SF_DIR).limit(10)
@@ -612,15 +611,16 @@ def test_sync_store_listing_ignores_stray_entries(spark, tmp_path):
     (tmp_path / "store" / ".spark-staging-123").mkdir()
     (tmp_path / "store" / "junk.txt").write_bytes(b"not parquet")
 
-    listed = _list_store_subdirs(spark, store_dir, exclude="batch_0")
-    assert [p.rsplit("/", 1)[-1] for p in listed] == ["seed"]
+    assert live_epochs(spark, store_dir, "seed") == []
 
     sync_batch(spark, new, store_dir, metrics_dir, batch_id=0)
     row = spark.read.parquet(metrics_dir + "/batch_0").collect()[0]
     assert row["total_bytes"] > 0
-    # and the current batch's own subdir is excluded on replay paths
-    listed2 = _list_store_subdirs(spark, store_dir, exclude="batch_0")
-    assert all(not p.endswith("batch_0") for p in listed2)
+    assert live_epochs(spark, store_dir, "seed") == [0]
+    # and the current batch's own epoch is excluded on replay paths
+    assert live_epochs(spark, store_dir, "seed", exclude=0) == []
+    sync_batch(spark, new, store_dir, metrics_dir, batch_id=1)
+    assert live_epochs(spark, store_dir, "seed") == [0, 1]
 
 
 def test_streaming_near_dup_index_is_batching_invariant(spark, tmp_path):
@@ -688,8 +688,8 @@ def test_near_dup_batch_replay_is_idempotent(spark, tmp_path):
         )
         return (
             pairs,
-            spark.read.parquet(index_dir + "/*").count(),
-            spark.read.parquet(docs_dir + "/*").count(),
+            read_live(spark, index_dir, "seed").count(),
+            read_live(spark, docs_dir, "seed").count(),
         )
 
     near_dup_batch(spark, batch, index_dir, docs_dir, pairs_dir, 0, n=3)
@@ -781,6 +781,8 @@ def test_ingest_pipeline_batch_replay_is_idempotent(spark, tmp_path):
         release_cached_frames,
     )
     from cdc_algorithms_spark.streaming.ingest_pipeline import (
+        MANIFEST_SCHEMA,
+        WM_SCHEMA,
         ingest_pipeline_batch,
     )
 
@@ -813,20 +815,23 @@ def test_ingest_pipeline_batch_replay_is_idempotent(spark, tmp_path):
 
     def state():
         man = sorted(
-            map(tuple, spark.read.parquet(dirs["man"] + "/*").collect())
+            map(
+                tuple,
+                read_epochs(spark, dirs["man"], "seed", MANIFEST_SCHEMA).collect(),
+            )
         )
         pairs = sorted(
             map(tuple, spark.read.parquet(dirs["pairs"] + "/*").collect())
         )
         wm = sorted(
-            map(tuple, spark.read.parquet(dirs["wm"] + "/*").collect())
+            map(tuple, read_epochs(spark, dirs["wm"], "seed", WM_SCHEMA).collect())
         )
         return (
             man,
             pairs,
             wm,
-            spark.read.parquet(dirs["idx"] + "/*").count(),
-            spark.read.parquet(dirs["docs"] + "/*").count(),
+            read_live(spark, dirs["idx"], "seed").count(),
+            read_live(spark, dirs["docs"], "seed").count(),
             spark.read.parquet(dirs["quar"] + "/*").count(),
         )
 
@@ -943,6 +948,7 @@ def test_requeue_quarantined_drains_fully(spark, tmp_path):
     dropped with a verified near-dup pair), and the re-keying is
     deterministic with full lineage."""
     from cdc_algorithms_spark.streaming.ingest_pipeline import (
+        WM_SCHEMA,
         ingest_pipeline_batch,
         requeue_quarantined,
         run_streaming_ingest_pipeline,
@@ -975,7 +981,9 @@ def test_requeue_quarantined_drains_fully(spark, tmp_path):
     assert sorted(map(tuple, requeue_quarantined(spark, work).collect())) \
         == sorted(map(tuple, rows))
     wm = (
-        spark.read.parquet(f"{work}/watermark/*").agg(F.max("max_id")).first()[0]
+        read_epochs(spark, f"{work}/watermark", "seed", WM_SCHEMA)
+        .agg(F.max("max_id"))
+        .first()[0]
     )
     assert len(rows) == n_quar
     assert sorted(r.orig_doc_id for r in rows) == sorted(
@@ -997,7 +1005,9 @@ def test_requeue_quarantined_drains_fully(spark, tmp_path):
     drained_ids = {r.doc_id for r in rows}
     kept = {
         r.doc_id
-        for r in spark.read.parquet(f"{work}/manifest/batch_99").collect()
+        for r in spark.read.parquet(
+            f"{work}/manifest/seed_delta/epoch=99"
+        ).collect()
     }
     paired = set()
     for r in spark.read.parquet(f"{work}/pairs/batch_99").collect():
@@ -1008,18 +1018,19 @@ def test_requeue_quarantined_drains_fully(spark, tmp_path):
 
 
 def test_compact_epoch_store_folds_without_changing_answers(spark, tmp_path):
-    """compact_epoch_store folds seed + batch_* into one seed: row sets
-    identical, one directory afterward, and a NEW batch settled against
-    the compacted stores produces exactly the pairs the uncompacted
-    twin produces. Also pins the documented stale-replay hazard (the
+    """api.compact_stream_store folds the seed_delta epochs into the
+    seed: row sets identical, no live epoch afterward, and a NEW batch
+    settled against the compacted stores produces exactly the pairs the
+    uncompacted twin produces. Also pins the stale-replay hazard (the
     reason the contract requires a stopped stream) and idempotence."""
     import shutil as _sh
 
+    from cdc_algorithms_spark.api import compact_stream_store
+    from cdc_algorithms_spark.operators.storeio import live_epochs
     from cdc_algorithms_spark.streaming.near_dup import (
         near_dup_batch,
         run_streaming_near_dup_index,
     )
-    from cdc_algorithms_spark.operators.storeio import compact_epoch_store
 
     docs = load_table(spark, "documents", SF_DIR).select("doc_id", "text")
     corpus = docs.where(F.col("doc_id") % 3 != 0)
@@ -1036,23 +1047,20 @@ def test_compact_epoch_store_folds_without_changing_answers(spark, tmp_path):
     _sh.copytree(work, twin)
 
     before = sorted(
-        tuple(r) for r in spark.read.parquet(f"{index_dir}/*").collect()
+        tuple(r) for r in read_live(spark, index_dir, "seed").collect()
     )
-    folded = compact_epoch_store(spark, index_dir)
-    assert folded >= 3  # seed + 2 stage epochs
-    assert compact_epoch_store(spark, docs_dir) >= 3
+    assert compact_stream_store(spark, index_dir) == 2  # the 2 stage epochs
+    assert compact_stream_store(spark, docs_dir) == 2
     import os as _os
 
-    # one generation dir afterward (plus the _folded_epochs.json
-    # manifest, which Spark's reader treats as hidden)
-    gens = [n for n in _os.listdir(index_dir) if _os.path.isdir(f"{index_dir}/{n}")]
-    assert gens == ["seed"]
+    # no live epoch afterward: the seed holds every row
+    assert live_epochs(spark, index_dir, "seed") == []
     assert (
         sorted(tuple(r) for r in spark.read.parquet(f"{index_dir}/seed").collect())
         == before
     )
     # idempotent: nothing left to fold
-    assert compact_epoch_store(spark, index_dir) == 0
+    assert compact_stream_store(spark, index_dir) == 0
 
     # a NEW batch settles identically against compacted vs twin stores
     probe = spark.createDataFrame(
@@ -1072,23 +1080,18 @@ def test_compact_epoch_store_folds_without_changing_answers(spark, tmp_path):
     assert got == want and got
 
     # the replay-after-compaction hole is CLOSED by the manifest: a
-    # stale replay of a folded epoch re-creates its batch_<id>
+    # stale replay of a folded epoch re-creates its epoch=<id>
     # directory on disk, but every manifest-aware reader skips the dead
-    # name — the store's effective row set is unchanged (it used to
+    # epoch — the store's effective row set is unchanged (it used to
     # double-count; pinned red before the storeio unification)
-    from cdc_algorithms_spark.operators.storeio import (
-        live_generation_dirs as _list_store_subdirs,
-    )
-
-    live_before = _list_store_subdirs(spark, index_dir, "")
-    n_before = spark.read.parquet(*live_before).count()
+    live_before = live_epochs(spark, index_dir, "seed")
+    n_before = read_live(spark, index_dir, "seed").count()
     near_dup_batch(
         spark, stages[0], index_dir, f"{work}/docs", f"{work}/pairs", 1
     )
-    assert _os.path.isdir(f"{index_dir}/batch_1")  # replay wrote the dir
-    live_after = _list_store_subdirs(spark, index_dir, "")
-    assert live_after == live_before  # ...but the name stays dead
-    assert spark.read.parquet(*live_after).count() == n_before
+    assert _os.path.isdir(f"{index_dir}/seed_delta/epoch=1")  # replay wrote it
+    assert live_epochs(spark, index_dir, "seed") == live_before  # ...but it stays dead
+    assert read_live(spark, index_dir, "seed").count() == n_before
 
 
 def test_streaming_corpus_build_equals_batch_and_replays(spark, tmp_path):
@@ -1174,8 +1177,8 @@ def test_streaming_corpus_build_equals_batch_and_replays(spark, tmp_path):
     def snapshot():
         parts = []
         for rel in (
-            "pairs_delta/epoch_0", "doctf_delta/epoch_0",
-            "docs_delta/epoch_0", "census_delta/epoch_0",
+            "pairs_delta/epoch=0", "doctf_delta/epoch=0",
+            "docs_delta/epoch=0", "census_delta/epoch=0",
             "jaccard/df", "jaccard/sets", "jaccard/prefix",
             "dsir/counts", "dsir/meta",
         ):

@@ -74,7 +74,9 @@ def main() -> None:
         minhash_band_index,
         release_cached_frames,
     )
+    from cdc_algorithms_spark.operators.storeio import read_epochs
     from cdc_algorithms_spark.streaming.ingest_pipeline import (
+        MANIFEST_SCHEMA,
         ingest_pipeline_batch,
         requeue_quarantined,
     )
@@ -168,7 +170,7 @@ def main() -> None:
 
         # converged equivalence, on ORIGINAL identity via lineage —
         # accounting stays distributed (joins), never a driver collect
-        man = spark.read.parquet(dirs["manifest"] + "/*")
+        man = read_epochs(spark, dirs["manifest"], "seed", MANIFEST_SCHEMA)
         lineage_df = requeued.select(
             F.col("doc_id").alias("fresh_id"), "orig_doc_id"
         )

@@ -57,7 +57,9 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from cdc_algorithms_spark.operators.storeio import read_epochs
     from cdc_algorithms_spark.streaming.ingest_pipeline import (
+        MANIFEST_SCHEMA,
         ingest_pipeline_batch,
     )
     from cdc_algorithms_spark.operators.dedup_docs import (
@@ -113,7 +115,7 @@ def main() -> None:
         report["batch_walls_s"] = batch_walls
 
         pairs = spark.read.parquet(dirs["pairs"] + "/*")
-        man = spark.read.parquet(dirs["manifest"] + "/*")
+        man = read_epochs(spark, dirs["manifest"], "seed", MANIFEST_SCHEMA)
         report["n_pairs"] = pairs.count()
         report["n_kept"] = man.count()
         report["n_dropped"] = args.docs - report["n_kept"]
